@@ -86,30 +86,17 @@ def test_engine_matches_oracle_with_politeness_budget(spark, tmp_path, golden):
     assert_matches_oracle(spark, run, golden)
 
 
-def test_engine_bloom_prefilter_changes_nothing(spark, tmp_path, golden):
-    """Bloom false positives may only cost time, never results (SURVEY §5.3)."""
-    run = run_engine(spark, tmp_path, use_bloom=True)
-    assert_matches_oracle(spark, run, golden)
-
-
-def test_engine_cuckoo_prefilter_changes_nothing(spark, tmp_path, golden):
-    """Per-partition cuckoo prefilter (north_star) — accelerator only; the
-    exact anti-join remains the source of truth."""
-    run = run_engine(spark, tmp_path, use_cuckoo=True)
-    assert_matches_oracle(spark, run, golden)
-
-
 def test_engine_tuning_alternate_branches_change_nothing(spark, tmp_path, golden):
     """Force every tuning-gated scale branch the defaults never hit at test
     size — two-phase range rank (small_rank_threshold=0), non-broadcast
-    AQE-planned watermark join (wm_broadcast_max_hosts=0), 8-row fetch tasks,
-    and a floor-sized bloom — and require bit-identical results. Sizing knobs
-    may only ever cost time, never change the crawl (config.EngineTuning)."""
+    AQE-planned watermark join (wm_broadcast_max_hosts=0) and 8-row fetch
+    tasks — and require bit-identical results. Sizing knobs may only ever
+    cost time, never change the crawl (config.EngineTuning)."""
     from web_crawler_spark.config import EngineTuning
 
     t = EngineTuning(rows_per_partition=8, small_rank_threshold=0,
-                     wm_broadcast_max_hosts=0, bloom_capacity_factor=1)
-    run = run_engine(spark, tmp_path, use_bloom=True, tuning=t)
+                     wm_broadcast_max_hosts=0)
+    run = run_engine(spark, tmp_path, tuning=t)
     assert_matches_oracle(spark, run, golden)
     job = JobConfig(job_id=4, start_url="http://site0.test/p/0",
                     max_pages=40, max_depth=3, delay=0.0)
@@ -187,7 +174,8 @@ def test_engine_per_host_watermarks_table_backed(spark, tmp_path):
                         budget=3, politeness_mode="per_host", max_rounds=2)
     assert part.rounds == 2
     st = part.state.load()
-    assert "host_watermarks" not in st  # no per-host driver state persisted
+    # no per-host driver state persisted: the state is five scalars
+    assert set(st) == {"round", "next_seq", "seen_count", "pending_count", "frontier"}
     assert part.tables["host_wm"].exists()
     res = engine.crawl(spark, job, CFG, RULES, str(tmp_path / "res"),
                        budget=3, politeness_mode="per_host", resume=True)
@@ -204,34 +192,6 @@ def test_engine_per_host_watermarks_table_backed(spark, tmp_path):
     assert wm == stage_max
 
 
-def test_engine_per_host_legacy_state_shim(spark, tmp_path):
-    """Run states written before the host_wm table carried the watermark map
-    as a ``host_watermarks`` dict in the state JSON. Resume must materialize
-    that dict into the table once and continue to the same final crawl."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    job = JobConfig(job_id=3, start_url="http://site0.test/p/0", max_pages=40, max_depth=3, delay=0.0)
-    full = engine.crawl(spark, job, CFG, RULES, str(tmp_path / "full"),
-                        budget=3, politeness_mode="per_host")
-    part = engine.crawl(spark, job, CFG, RULES, str(tmp_path / "leg"),
-                        budget=3, politeness_mode="per_host", max_rounds=2)
-    # rewrite the run dir into the legacy shape: dict in state, no table
-    wm = {r["host"]: int(r["_wm"])
-          for r in engine._host_wm_agg(spark, part.tables["host_wm"]).collect()}
-    st = part.state.load()
-    st["host_watermarks"] = wm
-    part.state.save(st)
-    shutil.rmtree(part.tables["host_wm"].dir)
-
-    res = engine.crawl(spark, job, CFG, RULES, str(tmp_path / "leg"),
-                       budget=3, politeness_mode="per_host", resume=True)
-    a = [(r["seq"], r["url"]) for r in full.read(spark, "seen").orderBy("seq").collect()]
-    b = [(r["seq"], r["url"]) for r in res.read(spark, "seen").orderBy("seq").collect()]
-    assert a == b and a
-
-
 def test_engine_resume_from_snapshot(spark, tmp_path, golden):
     """Kill after round k, resume → byte-identical final tables (SURVEY §5.7)."""
     path = str(tmp_path / "resume")
@@ -239,6 +199,24 @@ def test_engine_resume_from_snapshot(spark, tmp_path, golden):
     assert run1.rounds == 3  # stopped mid-crawl
     run2 = engine.crawl(spark, JOB, CFG, RULES, path, budget=10, resume=True)
     assert_matches_oracle(spark, run2, golden)
+
+
+@pytest.mark.parametrize("frontier,budget,mode", [
+    ("derived_per_host", 3, "global"),  # per_host state resumed in global mode
+    ("physical", None, "global"),  # not a derived frontier at all
+])
+def test_engine_resume_rejects_mismatched_state(spark, tmp_path, frontier, budget, mode):
+    """Resume refuses any run state whose frontier kind differs from the one
+    this crawl derives — before any snapshot is rolled back or read."""
+    from web_crawler_spark.catalog import RunState
+
+    path = tmp_path / "mismatch"
+    path.mkdir()
+    RunState(str(path)).save({"round": 2, "next_seq": 9, "seen_count": 9,
+                              "pending_count": 4, "frontier": frontier})
+    with pytest.raises(ValueError, match="cannot resume"):
+        engine.crawl(spark, JOB, CFG, RULES, str(path), budget=budget,
+                     politeness_mode=mode, resume=True)
 
 
 def test_engine_resume_discards_partial_round(spark, tmp_path, golden):
@@ -407,17 +385,3 @@ def test_engine_matches_oracle_varied_webs(spark, tmp_path, web_kw, job_kw):
     res = oracle.simulate(job, cfg, rules)
     run = engine.crawl(spark, job, cfg, rules, str(tmp_path / "run"))
     assert_matches_oracle(spark, run, res)
-
-
-def test_engine_resume_with_bloom(spark, tmp_path, golden):
-    """Resume with the incremental bloom: the carried bitmap dies with the
-    first process, so the resumed run must rebuild it from the restored seen
-    table and still produce the oracle-exact crawl (round 3: bloom is built
-    once at max_pages capacity and new admissions are OR'd in per round)."""
-    path = str(tmp_path / "resume_bloom")
-    run1 = engine.crawl(spark, JOB, CFG, RULES, path, budget=10, max_rounds=3,
-                        use_bloom=True)
-    assert run1.rounds == 3
-    run2 = engine.crawl(spark, JOB, CFG, RULES, path, budget=10, resume=True,
-                        use_bloom=True)
-    assert_matches_oracle(spark, run2, golden)

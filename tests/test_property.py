@@ -149,24 +149,6 @@ def test_words_chunking_contract(n, key):
     assert longer[:n] == toks  # prefix-stable across the 4-word chunking
 
 
-def test_incremental_bloom_equals_batch_build():
-    """OR-ing keys in across many increments must produce the SAME bitmap as
-    one batch add — the invariant the engine's carried-across-rounds bloom
-    (engine._bloom_add_df) relies on for golden-equal crawl ordering."""
-    from web_crawler_spark.functions.filters import BloomFilter64
-
-    rng = np.random.default_rng(7)
-    keys = rng.integers(-(2**62), 2**62, size=5000, dtype=np.int64)
-    batch = BloomFilter64(20_000)
-    batch.add(keys)
-    inc = BloomFilter64(20_000)
-    for chunk in np.array_split(keys, 13):
-        if len(chunk):
-            inc.add(chunk)
-    assert inc.to_bytes() == batch.to_bytes()
-    assert bool(inc.might_contain(keys).all())
-
-
 # printable latin-1 minus the quote-handling edge the SQL literal escaper
 # already covers separately — the band stores ord(c) % 256, so any latin-1
 # char must round-trip; text longer than capacity must refuse, not truncate

@@ -670,3 +670,36 @@ def test_stream_split_admits_arrivals_into_corpus_clusters(spark, tmp_path):
         assert rerun[doc_id] == (group_id, split)
     for doc_id, assignment in base.items():  # corpus rows never moved
         assert rerun[doc_id] == assignment
+
+
+def test_stream_split_colliding_doc_id_stays_singleton(spark, tmp_path):
+    """An unmatched arrival whose doc_id equals a clustered corpus doc's id
+    must become its own singleton group, not inherit that corpus doc's
+    group through the label lookup — in both the stream and its batch twin."""
+    from web_crawler_spark.streaming import stream_split
+    from web_crawler_spark.streaming.stream_neardup import run_to_memory
+
+    def doc(vocab: str, extra: str = "") -> str:
+        return f"{' '.join(f'{vocab}{i}' for i in range(40))} {extra}".strip()
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(i, t, "en", "s0", len(t)) for i, t in rows],
+            ["doc_id", "text", "lang", "source", "n_chars"],
+        )
+
+    corpus = frame([(0, doc("alpha")), (1, doc("alpha", "tailA")), (7, doc("gamma"))])
+    src = str(tmp_path / "arrivals")
+    frame([(1, doc("omega"))]).write.parquet(src)  # dissimilar, reuses id 1
+    state = tuple(df.cache() for df in stream_split.build_split_state(spark, corpus))
+
+    q = run_to_memory(stream_split.split_stream(spark, src, state), name="split_collide")
+    try:
+        streamed = [(r["doc_id"], r["group_id"], r["matched"])
+                    for r in spark.table("split_collide").collect()]
+    finally:
+        q.stop()
+    batch = [(r["doc_id"], r["group_id"], r["matched"])
+             for r in stream_split.split_batch(spark, src, state).collect()]
+    assert streamed == [(1, 1, False)]
+    assert batch == [(1, 1, False)]

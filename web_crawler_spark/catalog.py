@@ -9,12 +9,12 @@ module provides the same contract on parquet:
 - a table is a directory of immutable snapshot dirs plus a JSON manifest
 - a commit writes data first, then atomically renames a tmp manifest over the
   old one (readers never see partial state)
-- ``append`` adds a snapshot; ``overwrite`` adds a snapshot that supersedes all
-  prior ones (Iceberg's dynamic overwrite)
+- every write appends one snapshot; the live state is all of them in commit
+  order, and ``compact`` merges a prefix of them into one
 - resume = read the manifest as of the last committed round
 
 Swapping this for Iceberg changes only this file: the engine talks in
-append/overwrite/read/rollback terms.
+append/read/compact/rollback terms.
 """
 
 from __future__ import annotations
@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass
 class Snapshot:
     snapshot_id: int
-    mode: str  # 'append' | 'overwrite'
     round: int
     path: str
     rows: int
@@ -63,29 +62,16 @@ class SnapshotTable:
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
 
     # -- public API --------------------------------------------------------
-    def write(self, df: DataFrame, round: int, mode: str = "append") -> Snapshot:
+    def write(self, df: DataFrame, round: int) -> Snapshot:
+        """Append *df* as the snapshot of *round*."""
         snaps = self._load()
         sid = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
         path = os.path.join(self.dir, f"snap-{sid:06d}")
         df.write.mode("errorifexists").parquet(path)
         rows = -1  # avoid an extra count job; fill lazily if needed
-        snaps.append(
-            {"snapshot_id": sid, "mode": mode, "round": round, "path": path, "rows": rows}
-        )
+        snaps.append({"snapshot_id": sid, "round": round, "path": path, "rows": rows})
         self._commit(snaps)
-        return Snapshot(sid, mode, round, path, rows)
-
-    def write_ref(self, paths: list[str], round: int, mode: str = "append") -> None:
-        """Commit a snapshot that REFERENCES data files owned by another table
-        (zero Spark jobs — Iceberg's metadata-only commit). Rollback never
-        deletes referenced files; the owning table does."""
-        snaps = self._load()
-        sid = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
-        snaps.append(
-            {"snapshot_id": sid, "mode": mode, "round": round, "paths": list(paths),
-             "rows": -1, "ref": True}
-        )
-        self._commit(snaps)
+        return Snapshot(sid, round, path, rows)
 
     def live_paths(self, as_of_round: Optional[int] = None) -> list[str]:
         """Snapshot paths contributing to the current (or as-of-round) state."""
@@ -98,16 +84,7 @@ class SnapshotTable:
                     f"through round {expired} were compacted/expired"
                 )
             snaps = [s for s in snaps if s["round"] <= as_of_round]
-        live: list[dict] = []
-        for s in snaps:  # manifest order == commit order
-            if s["mode"] == "overwrite":
-                live = [s]
-            else:
-                live.append(s)
-        out: list[str] = []
-        for s in live:
-            out.extend(s["paths"] if s.get("ref") else [s["path"]])
-        return out
+        return [s["path"] for s in snaps]  # manifest order == commit order
 
     def read(
         self,
@@ -148,28 +125,19 @@ class SnapshotTable:
         happened (skipped when fewer than *min_snapshots* qualify).
         """
         snaps = self._load()
-        live: list[dict] = []
-        for s in snaps:
-            if s["mode"] == "overwrite":
-                live = [s]
-            else:
-                live.append(s)
-        horizon = max((s["round"] for s in live), default=0) if up_to_round is None else up_to_round
-        # live is commit-ordered; only a PREFIX may merge (rounds are
+        horizon = max((s["round"] for s in snaps), default=0) if up_to_round is None else up_to_round
+        # snaps is commit-ordered; only a PREFIX may merge (rounds are
         # monotone per commit order), so later snapshots keep their place
         prefix = []
-        for s in live:
+        for s in snaps:
             if s["round"] <= horizon:
                 prefix.append(s)
             else:
                 break
         if len(prefix) < min_snapshots:
             return False
-        paths: list[str] = []
-        for s in prefix:
-            paths.extend(s["paths"] if s.get("ref") else [s["path"]])
         reader = spark.read.schema(schema) if schema is not None else spark.read
-        df = reader.parquet(*paths)
+        df = reader.parquet(*(s["path"] for s in prefix))
         if target_partitions is None:
             target_partitions = spark.sparkContext.defaultParallelism
         sid = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
@@ -187,18 +155,14 @@ class SnapshotTable:
         df.write.mode("errorifexists").parquet(merged_path)
         merged = {
             "snapshot_id": sid,
-            "mode": prefix[0]["mode"],
             "round": max(s["round"] for s in prefix),
             "path": merged_path,
             "rows": -1,
             "compacted_through": max(s["round"] for s in prefix),
         }
-        remaining = live[len(prefix):]
-        self._commit([merged] + remaining)
-        dead = [s for s in snaps if s not in live]  # superseded by overwrite
-        for s in prefix + dead:  # expire AFTER the manifest swap — no reader race
-            if not s.get("ref"):
-                shutil.rmtree(s["path"], ignore_errors=True)
+        self._commit([merged] + snaps[len(prefix):])
+        for s in prefix:  # expire AFTER the manifest swap — no reader race
+            shutil.rmtree(s["path"], ignore_errors=True)
         return True
 
     def rollback_to_round(self, round: int) -> None:
@@ -215,11 +179,10 @@ class SnapshotTable:
         snaps = self._load()
         keep = [s for s in snaps if s["round"] <= round]
         self._commit(keep)
-        # every non-ref snap-* dir not in the kept manifest is dead: either
+        # every snap-* dir not in the kept manifest is dead: either
         # explicitly dropped (round > resume point) or an orphan of a crashed
-        # write. ref snapshots point at files owned by another table, so the
-        # only legitimate dirs here are the kept non-ref paths.
-        kept_paths = {s["path"] for s in keep if not s.get("ref")}
+        # write
+        kept_paths = {s["path"] for s in keep}
         for name in os.listdir(self.dir):
             p = os.path.join(self.dir, name)
             if name.startswith("snap-") and os.path.isdir(p) and p not in kept_paths:

@@ -7,7 +7,7 @@ round (SURVEY.md §3.1):
     quota) → ONE fused Python stage (robots gate → fetch → parse, mapInPandas
     over the synthetic web; salt-spread partitions) committed as the round's
     stage snapshot → explode children → within-batch first-occurrence dedup
-    (window) → [bloom prefilter] → exact anti-join seen → global rank in
+    (window) → exact anti-join seen → global rank in
     (parent_seq, link_idx) order → page-cap admission → assign seq → commit
     admissions; frontier/seen/crawl_log/links/outcomes/metrics are
     metadata-only projections of those two physical tables.
@@ -33,13 +33,8 @@ Scale design (the 10^10-frontier story):
 - the only global-order operation is admission ranking; small rounds take a
   single-partition window, large rounds the two-phase range rank
   (``global_rank``) — never a single-partition window at scale.
-- the seen anti-join is the dominant shuffle; the broadcast bloom prefilter
-  routes definitely-new candidates around it (false positives only cost time —
-  the exact anti-join remains the source of truth). Default-off, cluster-only
-  knob: measured A/Bs (BENCH.md §1, rounds 3+5) show it cannot win in
-  single-JVM local mode even at 90%-novel candidates — the shuffle it skips
-  is a memory copy there; its regime is a multi-node NETWORK exchange over a
-  seen set too large to broadcast.
+- the URL-seen test is one exact ``left_anti`` join against the seen
+  projection — the only membership path.
 - NO mode writes a physical frontier: global/FIFO modes derive pending from
   a single seq watermark; per_host derives it from the ``host_wm`` snapshot
   table (one appended (host, max consumed seq) row per active host per round;
@@ -55,31 +50,8 @@ Scale design (the 10^10-frontier story):
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass
 from typing import Optional
-
-_TRACE = os.environ.get("WCS_TRACE", "") not in ("", "0")
-
-
-class _Timer:
-    """Per-round phase timing (enabled with WCS_TRACE=1)."""
-
-    def __init__(self, rnd: int):
-        self.rnd = rnd
-        self.t = time.time()
-        self.phases: list[tuple[str, float]] = []
-
-    def mark(self, phase: str) -> None:
-        now = time.time()
-        self.phases.append((phase, now - self.t))
-        self.t = now
-
-    def report(self) -> None:
-        if _TRACE:
-            total = sum(d for _, d in self.phases)
-            parts = " ".join(f"{p}={d:.1f}s" for p, d in self.phases)
-            print(f"[round {self.rnd}] total={total:.1f}s {parts}", flush=True)
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -90,10 +62,9 @@ from .config import DEFAULT_TUNING, EngineTuning, JobConfig
 from .core.robots import RulesByHost
 from .core.webgen import WebConfig
 from .functions import udfs
-from .functions.filters import BloomFilter64
 from .schemas import FRONTIER_SCHEMA, N_HOST_BUCKETS, N_SALTS
 
-PHYSICAL_TABLES = ("stage", "admissions", "frontier", "host_wm")
+PHYSICAL_TABLES = ("stage", "admissions", "host_wm")
 DERIVED_TABLES = ("seen", "crawl_log", "links", "outcomes", "metrics")
 
 STAGE_SCHEMA = T.StructType(
@@ -111,8 +82,8 @@ HOST_WM_SCHEMA = T.StructType(
     ]
 )
 # All sizing knobs (fetch-task rows, small-rank cutover, watermark broadcast
-# gate, bloom capacity/precision) live in config.EngineTuning — one derived
-# place, overridable per job via ``crawl(tuning=...)``.
+# gate) live in config.EngineTuning — one derived place, overridable per job
+# via ``crawl(tuning=...)``.
 
 
 @dataclass
@@ -139,19 +110,14 @@ class CrawlRun:
         if name == "frontier":
             if as_of_round is not None:
                 raise ValueError("frontier view does not support time travel")
-            st = self.state.load() or {}
-            mode = st.get("frontier")
-            if mode in ("derived", "derived_per_host"):
-                adm = self.tables["admissions"].read(spark, schema=FRONTIER_SCHEMA)
-                if adm is None:
-                    return None
-                if mode == "derived":
-                    lo = st["next_seq"] - st["pending_count"]
-                    return adm.filter(F.col("seq") >= lo)
-                wm_agg = _host_wm_agg(spark, self.tables["host_wm"], st)
-                return _apply_host_watermarks(adm, wm_agg, st.get("seen_count", 0))
-            # legacy physical-frontier runs (pre-watermark per_host)
-            return self.tables["frontier"].read(spark, schema=FRONTIER_SCHEMA)
+            st = self.state.load()
+            adm = self.tables["admissions"].read(spark, schema=FRONTIER_SCHEMA)
+            if st is None or adm is None:
+                return None
+            if st["frontier"] == "derived":
+                return adm.filter(F.col("seq") >= st["next_seq"] - st["pending_count"])
+            wm_agg = _host_wm_agg(spark, self.tables["host_wm"])
+            return _apply_host_wm(adm, wm_agg, st["seen_count"])
         if name in PHYSICAL_TABLES:
             schema = (
                 STAGE_SCHEMA if name == "stage"
@@ -288,27 +254,18 @@ def _frontier_row_cols(df: DataFrame, round_added: int) -> DataFrame:
     )
 
 
-def _host_wm_agg(
-    spark: SparkSession, table: SnapshotTable, state: Optional[dict] = None
-) -> Optional[DataFrame]:
+def _host_wm_agg(spark: SparkSession, table: SnapshotTable) -> Optional[DataFrame]:
     """Current per-host consumed watermark as a DataFrame: groupBy(host).max
     over the append-only host_wm snapshot table (one row per active host per
     round; partial-aggregates map-side). Returns None when no host has
-    consumed anything yet. Legacy fallback: run states written before the
-    table existed carried the map as a ``host_watermarks`` dict — honor it so
-    old run directories stay readable."""
+    consumed anything yet."""
     wm = table.read(spark, schema=HOST_WM_SCHEMA)
     if wm is not None:
         return wm.groupBy("host").agg(F.max("wm").alias("_wm"))
-    legacy = (state or {}).get("host_watermarks")
-    if legacy:
-        return spark.createDataFrame(
-            [(h, int(s)) for h, s in legacy.items()], "host string, _wm long"
-        )
     return None
 
 
-def _apply_host_watermarks(
+def _apply_host_wm(
     adm: DataFrame,
     wm_agg: Optional[DataFrame],
     approx_hosts: int,
@@ -354,8 +311,6 @@ def crawl(
     storage_dir: str,
     budget: Optional[int] = None,
     politeness_mode: str = "global",  # 'global' (reference-exact) | 'per_host'
-    use_bloom: bool = False,
-    use_cuckoo: bool = False,
     resume: bool = False,
     max_rounds: int = 10_000,
     fetch_partitions: Optional[int] = None,
@@ -386,14 +341,11 @@ def crawl(
     )
 
     if resume and (state := state_store.load()):
-        if state.get("frontier") not in ("derived", "derived_per_host"):
+        # also rejects foreign states and ones without a derived frontier
+        if state.get("frontier") != frontier_mode:
             raise ValueError(
-                "cannot resume a legacy physical-frontier run state; restart the crawl"
-            )
-        if state["frontier"] != frontier_mode:
-            raise ValueError(
-                f"resume politeness mismatch: state was {state['frontier']!r}, "
-                f"requested {frontier_mode!r}"
+                f"cannot resume: run state frontier is {state.get('frontier')!r}, "
+                f"this crawl needs {frontier_mode!r}"
             )
         # roll back any table snapshot committed after the last full round
         for t in tables.values():
@@ -402,15 +354,6 @@ def crawl(
         # every state save writes pending_count — a missing key means a
         # foreign/corrupt state file, not a valid resume point
         pending_count = state["pending_count"]
-        # legacy shim: states written before the host_wm table carried the
-        # watermark map as a driver-side dict — materialize it into the table
-        # once so the resumed run's per-round deltas compose with it
-        if state.get("host_watermarks") and not tables["host_wm"].exists():
-            legacy_df = spark.createDataFrame(
-                [(h, int(s)) for h, s in state["host_watermarks"].items()],
-                HOST_WM_SCHEMA,
-            )
-            tables["host_wm"].write(legacy_df, rnd)
     else:
         if resume:
             # resume requested but no run state exists: the crash happened
@@ -436,17 +379,10 @@ def crawl(
         state_store.save(st0)
 
     fetch_fn = udfs.make_fetch_parse(cfg, job, rules)
-    # incremental URL-seen bloom: built once (sized for max_pages), new
-    # admissions OR'd in per round, re-broadcast per round (prior broadcast
-    # unpersisted). In-memory only — resume rebuilds from the seen table.
-    bloom_state: Optional[BloomFilter64] = None
-    bloom_bcast = None
 
     while rnd < max_rounds and pending_count > 0:
         rnd += 1
-        tm = _Timer(rnd)
         adm = tables["admissions"].read(spark, schema=FRONTIER_SCHEMA)
-        tm.mark("adm_read")
         if adm is None:
             break
         if frontier_mode == "derived":
@@ -454,7 +390,7 @@ def crawl(
             pending = adm.filter(F.col("seq") >= lo)
         else:
             wm_agg = _host_wm_agg(spark, tables["host_wm"])
-            pending = _apply_host_watermarks(adm, wm_agg, seen_count, tuning)
+            pending = _apply_host_wm(adm, wm_agg, seen_count, tuning)
         # size the fetch stage on what will actually be SCHEDULED this round,
         # not the whole pending frontier (with a small budget the two differ
         # by orders of magnitude)
@@ -494,7 +430,6 @@ def crawl(
             .withColumn("round", F.lit(rnd))
         )
         snap = tables["stage"].write(stage_df, rnd)
-        tm.mark("stage_write")
         stage = spark.read.schema(STAGE_SCHEMA).parquet(snap.path)
         if n_sched is None:
             # per_host: one tiny distributed agg over THIS round's just-written
@@ -539,54 +474,10 @@ def crawl(
             )
 
             seen_df = run.read(spark, "seen")
-            tm.mark("seen_read")
-            if use_bloom:
-                if bloom_state is None:
-                    # first bloom use in this process (fresh start: seed only;
-                    # resume: the restored seen table) — build once, sized for
-                    # the job's admission ceiling so the same bitmap serves
-                    # every round and additions are incremental
-                    bloom_state = _build_bloom(seen_df, job.max_pages, tuning)
-                if bloom_bcast is not None:
-                    bloom_bcast.unpersist(blocking=False)
-                bloom_bcast = spark.sparkContext.broadcast(bloom_state.to_bytes())
-                bcast = bloom_bcast
-                k = bloom_state.k
-
-                def might_contain(h):
-                    import pandas as pd
-
-                    f = BloomFilter64.from_bytes(bcast.value, k)
-                    return pd.Series(f.might_contain(h.to_numpy()))
-
-                mc_udf = F.pandas_udf(might_contain, "boolean")
-                fresh = fresh.withColumn("_mc", mc_udf(F.xxhash64("url")))
-                # bloom says definitely-new → bypass the anti-join shuffle
-                surely_new = fresh.filter(~F.col("_mc")).drop("_mc")
-                maybe_seen = fresh.filter(F.col("_mc")).drop("_mc")
-                new_urls = surely_new.unionByName(
-                    maybe_seen.join(seen_df.select(F.col("url").alias("_su")),
-                                    F.col("url") == F.col("_su"), "left_anti")
-                )
-            elif use_cuckoo:
-                # per-partition cuckoo prefilter (north_star): co-partition
-                # candidates and seen rows by a hash bucket, build a local
-                # cuckoo filter from that partition's seen hashes, and route
-                # only possible members into the exact anti-join. Unlike the
-                # bloom path nothing is broadcast — this is the variant for a
-                # seen set too large even for a broadcast bitmap.
-                flagged = _cuckoo_flag(fresh, seen_df)
-                surely_new = flagged.filter(~F.col("_mc")).drop("_mc")
-                maybe_seen = flagged.filter(F.col("_mc")).drop("_mc")
-                new_urls = surely_new.unionByName(
-                    maybe_seen.join(seen_df.select(F.col("url").alias("_su")),
-                                    F.col("url") == F.col("_su"), "left_anti")
-                )
-            else:
-                new_urls = fresh.join(
-                    seen_df.select(F.col("url").alias("_su")),
-                    F.col("url") == F.col("_su"), "left_anti",
-                )
+            new_urls = fresh.join(
+                seen_df.select(F.col("url").alias("_su")),
+                F.col("url") == F.col("_su"), "left_anti",
+            )
 
             # eager local checkpoint: materializes once and TRUNCATES the
             # candidate lineage, so the rank/write below can never silently
@@ -594,7 +485,6 @@ def crawl(
             # evicted and did, catastrophically, on large rounds)
             new_urls = new_urls.localCheckpoint(eager=True)
             n_new = new_urls.count()
-            tm.mark("fresh_count")
             if n_new > 0:
                 if n_new <= tuning.small_rank_threshold:
                     # deliberate single-reducer rank for small rounds (3 jobs
@@ -608,7 +498,6 @@ def crawl(
                     )
                 else:
                     ranked = global_rank(new_urls, ["parent_seq", "link_idx"], "_adm")
-                tm.mark("rank_build")
                 admitted = (
                     ranked.filter(F.col("_adm") <= n_admit_room)
                     .withColumn("seq", F.lit(next_seq) + F.col("_adm") - 1)
@@ -620,15 +509,7 @@ def crawl(
                     rnd,
                 )
                 tables["admissions"].write(admitted_f, rnd)
-                tm.mark("admissions_write")
                 admitted_count = min(n_new, n_admit_room)
-                if use_bloom and bloom_state is not None:
-                    # O(admitted) incremental update (admitted_f re-projects
-                    # from the checkpointed new_urls — no recompute of the
-                    # candidate pipeline)
-                    _bloom_add_df(bloom_state, admitted_f)
-                    tm.mark("bloom_add")
-
 
         # ---- next pending frontier: nothing to write in ANY mode — the
         # (global or per-host) watermark in the round state IS the frontier
@@ -644,7 +525,6 @@ def crawl(
         }
         state_store.save(st)
         run.rounds = rnd
-        tm.mark("frontier_commit")
         if compact_every and rnd % compact_every == 0:
             # maintenance (Iceberg rewrite_data_files): bound live file count
             # of the append-per-round tables. Runs AFTER the state save, so
@@ -662,114 +542,5 @@ def crawl(
                 tables["host_wm"].compact(
                     spark, up_to_round=rnd, schema=HOST_WM_SCHEMA, cluster_by=["host"]
                 )
-            tm.mark("compact")
-        tm.report()
 
     return run
-
-
-_CUCKOO_BUCKETS = 64
-_CUCKOO_FLAG_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("parent_seq", T.LongType(), False),
-        T.StructField("link_idx", T.IntegerType(), False),
-        T.StructField("_mc", T.BooleanType(), False),
-    ]
-)
-
-
-def _cuckoo_flag(fresh: DataFrame, seen_df: DataFrame) -> DataFrame:
-    """Per-partition cuckoo prefilter via cogrouped applyInPandas.
-
-    Candidates and seen hashes are co-partitioned by a hash bucket; each
-    group builds a CuckooFilter from its seen slice and probes candidates
-    vectorized (contains_many). ``_mc`` False ⇒ definitely new (bypasses the
-    exact anti-join); True ⇒ possible member (exact anti-join decides).
-    Inserts that overflow the filter fall back to an exact set, so false
-    NEGATIVES are impossible — the accelerator never changes results.
-    """
-    from .functions.filters import CuckooFilter
-
-    cb = lambda c: F.pmod(F.col(c), F.lit(_CUCKOO_BUCKETS)).cast("int")
-    cand = fresh.withColumn("_h", F.xxhash64("url")).withColumn("_cb", cb("_h"))
-    seen = seen_df.select(F.col("url_hash").alias("_h")).withColumn("_cb", cb("_h"))
-
-    def flag(cand_pdf, seen_pdf):
-        import numpy as np
-        import pandas as pd
-
-        out = cand_pdf[["url", "depth", "parent_seq", "link_idx"]].copy()
-        if len(cand_pdf) == 0:
-            out["_mc"] = pd.Series([], dtype=bool)
-            return out
-        if len(seen_pdf) == 0:
-            out["_mc"] = False
-            return out
-        cf = CuckooFilter(max(64, len(seen_pdf) * 2))
-        exact: set[int] = set()
-        for h in seen_pdf["_h"].to_numpy():
-            if not cf.add(int(h)):
-                exact.add(int(h))
-        mc = cf.contains_many(cand_pdf["_h"].to_numpy())
-        if exact:
-            mc = mc | cand_pdf["_h"].isin(exact).to_numpy()
-        out["_mc"] = mc
-        return out
-
-    return (
-        cand.groupBy("_cb")
-        .cogroup(seen.groupBy("_cb"))
-        .applyInPandas(flag, _CUCKOO_FLAG_SCHEMA)
-    )
-
-
-def _build_bloom(
-    seen_df: DataFrame, capacity_keys: int, tuning: EngineTuning = DEFAULT_TUNING
-) -> BloomFilter64:
-    """2-phase bloom build: per-partition numpy bitmaps via mapInPandas,
-    OR-reduced on the driver. Bitmap size is O(capacity), independent of
-    partition count. Sized for *capacity_keys* — pass the job's admission
-    ceiling (max_pages) so the same bitmap serves the whole crawl and rounds
-    can OR new keys in INCREMENTALLY (`_bloom_add_df`) instead of rescanning
-    the full seen table every round. Capacity and precision come from
-    ``tuning`` (``EngineTuning.bloom_capacity`` and the bits/key + probe
-    count), not ad-hoc constants."""
-    out = BloomFilter64(
-        tuning.bloom_capacity(capacity_keys),
-        bits_per_key=tuning.bloom_bits_per_key,
-        k=tuning.bloom_k,
-    )
-    _bloom_add_df(out, seen_df)
-    return out
-
-
-def _bloom_add_df(bloom: BloomFilter64, df: DataFrame) -> None:
-    """OR *df*'s ``url_hash`` column into *bloom* in place: per-partition
-    numpy bitmaps via mapInPandas, merged on the driver (O(P) bitmap rows).
-    Per-round cost is O(rows added), so carrying one bloom across rounds
-    makes the whole crawl's filter maintenance O(seen) total instead of
-    O(rounds x seen) rebuild-per-round."""
-    import pandas as pd
-
-    n_bits, k = bloom.n_bits, bloom.k
-
-    def partition_bitmap(batches):
-        f = BloomFilter64.__new__(BloomFilter64)
-        import numpy as np
-
-        f.n_bits, f.k = n_bits, k
-        f.bits = np.zeros(n_bits // 8, dtype=np.uint8)
-        for pdf in batches:
-            if len(pdf):
-                f.add(pdf["url_hash"].to_numpy())
-        yield pd.DataFrame({"bitmap": [f.to_bytes()]})
-
-    parts = (
-        df.select("url_hash")
-        .mapInPandas(partition_bitmap, "bitmap binary")
-        .collect()
-    )
-    for r in parts:
-        bloom.merge(BloomFilter64.from_bytes(bytes(r["bitmap"]), k))

@@ -1,1 +1,1 @@
-"""Vectorized functions: pandas/Arrow UDFs and probabilistic membership filters."""
+"""Vectorized functions: the pandas/Arrow UDFs of the fused fetch stage."""

@@ -12,7 +12,7 @@ read). An arriving document that near-dup-matches a corpus document
 inherits that document's group — and therefore its split — verbatim;
 corpus assignments never move. An arriving document with no corpus match
 is a new singleton group labeled by its own doc_id, exactly the batch
-coalesce rule. The one divergence from a batch RE-RUN is deliberate: a
+coalesce rule — even if that doc_id collides with a clustered corpus doc's. The one divergence from a batch RE-RUN is deliberate: a
 bridging document that would merge two corpus clusters is assigned to its
 single BEST match's group (max jaccard, ties to the smallest corpus
 doc_id — ``stream_neardup``'s verdict rule); a batch re-run would merge
@@ -155,10 +155,14 @@ def _assignment(
             (F.col("b.jaccard") >= JACCARD_T).alias("matched"),
         )
     )
+    # an unmatched doc is its own group even when its doc_id collides with a
+    # clustered corpus doc's id (its self row's dup_of would hit that label)
     assigned = best.join(F.broadcast(labels), "dup_of", "left").select(
         "doc_id",
         "matched",
-        F.coalesce("group_id", "dup_of").alias("group_id"),
+        F.when(F.col("matched"), F.coalesce("group_id", "dup_of"))
+        .otherwise(F.col("doc_id"))
+        .alias("group_id"),
     )
     bucket = F.expr(_BUCKET)
     return assigned.select(
