@@ -4,9 +4,18 @@ spark-submit --py-files on multi-executor clusters").
 Package the library and submit:
 
     cd /root/repo && zip -qr /tmp/wcs.zip web_crawler_spark
-    spark-submit --py-files /tmp/wcs.zip scripts/submit_crawl.py \
+    spark-submit --py-files /tmp/wcs.zip \
+        --conf spark.python.daemon.module=web_crawler_spark.worker_daemon \
+        scripts/submit_crawl.py \
         --start-url http://site0.test/p/0 --max-pages 100000 \
         --storage /data/crawl_run_1 [--budget 50000] [--per-host] [--resume]
+
+The ``--py-files`` zip must contain ``web_crawler_spark/worker_daemon.py``:
+executors import it to start their Python workers, before any task runs (so
+before a task could put the zip on ``sys.path``). The zip must therefore be
+on the executors' ``PYTHONPATH`` — YARN does this for ``--py-files``;
+elsewhere add ``--conf spark.executorEnv.PYTHONPATH=wcs.zip``. A run started
+with plain ``python`` gets the daemon conf from ``session.get_spark``.
 
 In local mode (this sandbox) it runs directly:
     python scripts/submit_crawl.py --start-url ... --storage /tmp/run1

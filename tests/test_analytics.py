@@ -1246,3 +1246,36 @@ def test_embed_index_stats_consistency(spark):
     assert abs(r["mean_occ"] - sum(ns) / len(ns)) < 1e-9
     assert abs(r["skew"] - ns[-1] * len(ns) / sum(ns)) < 1e-9
     assert r["min_occ"] <= r["p50_occ"] <= r["p95_occ"] <= r["max_occ"]
+
+
+def test_cluster_labels_rebuilt_after_corpus_rewrite(spark, tmp_path):
+    """The label snapshot is keyed on the corpus file as well as the
+    session: rewriting documents.parquet in the same session must yield
+    labels of the new corpus, not the memoized ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from web_crawler_spark.analytics import dedup
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(docs, sf / "documents.parquet")
+    before = {r["doc_id"]: r["cluster_id"]
+              for r in dedup.dedup_clusters(spark, str(sf)).collect()}
+
+    # append an exact copy of the longest doc under a fresh id: a certain pair
+    orig = max(range(docs.num_rows), key=lambda i: docs["n_chars"][i].as_py())
+    orig_id = docs["doc_id"][orig].as_py()
+    new_id = max(docs["doc_id"].to_pylist()) + 1
+    dup = docs.slice(orig, 1)
+    dup = dup.set_column(dup.schema.get_field_index("doc_id"), "doc_id",
+                         pa.array([new_id], pa.int64()))
+    pq.write_table(pa.concat_tables([docs, dup]), sf / "documents.parquet")
+    after = {r["doc_id"]: r["cluster_id"]
+             for r in dedup.dedup_clusters(spark, str(sf)).collect()}
+
+    assert new_id not in before
+    assert after[new_id] == after[orig_id]
+    assert sum(k[1] == str(sf) for k in dedup._LABELS_MEMO) == 1  # old version evicted
+    assert len(dedup._LABELS_MEMO) <= dedup._LABELS_MEMO_MAX

@@ -385,3 +385,49 @@ def test_engine_matches_oracle_varied_webs(spark, tmp_path, web_kw, job_kw):
     res = oracle.simulate(job, cfg, rules)
     run = engine.crawl(spark, job, cfg, rules, str(tmp_path / "run"))
     assert_matches_oracle(spark, run, res)
+
+
+def test_engine_all_seen_round_commits_empty_admissions(spark, tmp_path):
+    """A round whose candidate links are all already seen (0 new URLs, >0
+    candidates) still commits its admissions snapshot, empty. Crawl order
+    and seen set stay the oracle's, time travel reads across that round,
+    and compaction merges over it."""
+    from pyspark.sql import functions as F
+
+    from web_crawler_spark.schemas import FRONTIER_SCHEMA
+
+    cfg = webgen.make_config(n_sites=1, subdomains=("",), base_pages=40, skew=0.0,
+                             mean_outlinks=5, seed=7)
+    rules = rules_by_host(generate_rules(cfg))
+    job = JobConfig(job_id=9, start_url="http://site0.test/p/0", max_pages=60,
+                    max_depth=4, delay=0.0)
+    res = oracle.simulate(job, cfg, rules)
+    run = engine.crawl(spark, job, cfg, rules, str(tmp_path / "run"), budget=4)
+    assert_matches_oracle(spark, run, res)
+
+    adm = run.tables["admissions"]
+    rows = {s["round"]: spark.read.schema(FRONTIER_SCHEMA).parquet(s["path"]).count()
+            for s in adm._load()}
+    empty = [r for r, n in rows.items() if n == 0]
+    assert empty, rows
+    r = empty[0]
+    assert r + 1 in rows and rows[r + 1] > 0  # the crawl admits again afterwards
+    # round r really had candidates: links of its parsed pages below max_depth
+    cands = (run.read(spark, "links").join(
+        run.read(spark, "stage").filter(F.col("round") == r)
+        .select(F.col("page_url").alias("from_url")), "from_url")
+        .filter(F.col("from_depth") < job.max_depth).select("to_url").collect())
+    assert cands
+
+    def seen_as_of(k):
+        return {(x["seq"], x["url"]) for x in run.read(spark, "seen", as_of_round=k).collect()}
+
+    before, at, after = seen_as_of(r - 1), seen_as_of(r), seen_as_of(r + 1)
+    assert before and at == before and after > at
+    assert {u for (_, u) in at} >= {c["to_url"] for c in cands}
+
+    assert adm.compact(spark, up_to_round=r, schema=FRONTIER_SCHEMA, cluster_by=["seq"])
+    assert seen_as_of(r) == at and seen_as_of(r + 1) == after
+    with pytest.raises(ValueError, match="compacted/expired"):
+        run.read(spark, "seen", as_of_round=r - 1)
+    assert_matches_oracle(spark, run, res)

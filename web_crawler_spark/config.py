@@ -50,12 +50,15 @@ class EngineTuning:
       is the Python-heavy one, so a round should fan out to all cores well
       before it reaches P_max·this many rows. 2048 starved the widest rounds
       of a 20k-URL crawl down to ~6 of 32 cores (per-round phase split, as
-      ``perfbench/run.py --trace 1`` reports it); 512 keeps tasks big enough
-      to amortize task launch while saturating the executor at realistic
-      round widths.
-    - ``small_rank_threshold``: below this many fresh candidates a
-      single-partition window rank is cheaper than the two-phase range rank
-      (3 jobs → 1); well within one executor's memory.
+      ``perfbench/run.py --trace 1`` reports it). The old case for big tasks,
+      amortizing task launch, was mostly each task re-reading the
+      ``pyspark.zip`` directory, which ``worker_daemon`` removed; a task's
+      fixed cost is now small, and 512 is kept because smaller tasks did not
+      win on every measured seed (BENCH.md §1).
+    - ``small_rank_threshold``: at or below this many candidate links (and
+      seen URLs) a round ranks its new URLs in one partition inside the
+      admissions write — no checkpoint, no count; above it the two-phase
+      range rank runs. Well within one executor's memory.
     - ``wm_broadcast_max_hosts``: below this many seen URLs (an upper bound
       on distinct hosts) the aggregated per-host watermark side is broadcast
       into the pending filter; above it the join is left un-hinted so AQE

@@ -30,9 +30,13 @@ Scale design (the 10^10-frontier story):
 - partition counts adapt to the tracked pending-frontier size (small rounds
   → 1 task; large rounds → host_bucket×salt spread, capped at the configured
   parallelism), so per-task overhead never dominates.
-- the only global-order operation is admission ranking; small rounds take a
-  single-partition window, large rounds the two-phase range rank
-  (``global_rank``) — never a single-partition window at scale.
+- the only global-order operation is admission ranking; small rounds rank
+  in one partition inside the admissions write itself, large rounds take the
+  two-phase range rank (``global_rank``) — never a single partition at scale.
+- no round runs a count job: the stage write observes (``DataFrame.observe``)
+  its row count and its candidate-link count, and the admissions write its
+  row count. A round with no candidate links skips admission. A small round
+  is two writes plus their shuffle/broadcast jobs.
 - the URL-seen test is one exact ``left_anti`` join against the seen
   projection — the only membership path.
 - NO mode writes a physical frontier: global/FIFO modes derive pending from
@@ -53,7 +57,7 @@ import os
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -416,7 +420,7 @@ def crawl(
             w = Window.partitionBy("host").orderBy("seq")
             ranked = pending.withColumn("_hr", F.row_number().over(w))
             scheduled = ranked.filter(F.col("_hr") <= budget).drop("_hr")
-            n_sched = None  # resolved below from the stage parquet
+            n_sched = None  # the stage write's observed row count
 
         # ---- fused gate+fetch+parse stage (salt-spread partitions defeat
         # hot-host skew); ONE write, everything downstream is a projection ---
@@ -424,29 +428,44 @@ def crawl(
         # n_hosts*n_salts distinct keys — lumpy at high parallelism; url_hash
         # is per-row uniform, so the slowest fetch task tracks the mean.
         # (host_bucket/salt stay on the rows for the table partition spec.)
+        # One partition needs no shuffle, so it coalesces instead.
+        spread = scheduled.coalesce(1) if P == 1 else scheduled.repartition(P, "url_hash")
+        # the write's own job also counts the rows and the candidate links
+        # (links of parsed pages shallower than max_depth): no count job
+        stage_obs = Observation()
         stage_df = (
-            scheduled.repartition(P, "url_hash")
-            .mapInPandas(fetch_fn, udfs.FETCHED_SCHEMA)
+            spread.mapInPandas(fetch_fn, udfs.FETCHED_SCHEMA)
             .withColumn("round", F.lit(rnd))
+            .observe(
+                stage_obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(
+                    F.when(
+                        (F.col("outcome") == "parsed") & (F.col("depth") < job.max_depth),
+                        F.size("links"),
+                    )
+                ).alias("candidates"),
+            )
         )
         snap = tables["stage"].write(stage_df, rnd)
         stage = spark.read.schema(STAGE_SCHEMA).parquet(snap.path)
+        observed = stage_obs.get
+        n_candidates = observed["candidates"] or 0  # sum over no rows is null
         if n_sched is None:
             # per_host: one tiny distributed agg over THIS round's just-written
             # stage parquet (O(scheduled) rows, O(active hosts) output)
             # advances each host's watermark — APPENDED to the host_wm
             # snapshot table, never collected to the driver (the read-time
-            # groupBy(host).max(wm) folds rounds together). n_sched is a
-            # parquet-footer count. The whole frontier update is these two
-            # metadata-cheap jobs; the driver carries zero per-host state.
+            # groupBy(host).max(wm) folds rounds together). The driver
+            # carries zero per-host state.
             wm_delta = stage.groupBy("host").agg(F.max("seq").alias("wm"))
             tables["host_wm"].write(wm_delta, rnd)
-            n_sched = stage.count()
+            n_sched = observed["rows"]
 
         # ---- candidate children → dedup → anti-join seen → admission -------
         n_admit_room = job.max_pages - seen_count
         admitted_count = 0
-        if n_admit_room > 0:
+        if n_admit_room > 0 and n_candidates > 0:
             candidates = (
                 _links_of(stage, job.job_id)
                 .filter(F.col("from_depth") < job.max_depth)
@@ -479,37 +498,42 @@ def crawl(
                 F.col("url") == F.col("_su"), "left_anti",
             )
 
-            # eager local checkpoint: materializes once and TRUNCATES the
-            # candidate lineage, so the rank/write below can never silently
-            # recompute the explode+anti-join pipeline (a plain persist can be
-            # evicted and did, catastrophically, on large rounds)
-            new_urls = new_urls.localCheckpoint(eager=True)
-            n_new = new_urls.count()
-            if n_new > 0:
-                if n_new <= tuning.small_rank_threshold:
-                    # deliberate single-reducer rank for small rounds (3 jobs
-                    # → 1): one coalesced partition, sort inside it, number
-                    # rows in iterator order. No WindowExec at all — ids in a
-                    # single partition are 0..n-1 by definition
-                    ranked = (
-                        new_urls.coalesce(1)
-                        .sortWithinPartitions("parent_seq", "link_idx")
-                        .withColumn("_adm", F.monotonically_increasing_id() + 1)
-                    )
-                else:
-                    ranked = global_rank(new_urls, ["parent_seq", "link_idx"], "_adm")
-                admitted = (
-                    ranked.filter(F.col("_adm") <= n_admit_room)
-                    .withColumn("seq", F.lit(next_seq) + F.col("_adm") - 1)
-                    .drop("_adm")
-                    .withColumn("job_id", F.lit(job.job_id))
+            thr = tuning.small_rank_threshold
+            if n_candidates <= thr and seen_count <= thr:
+                # small round: the anti-join, a single-partition sort and the
+                # ids all run inside the admissions write (ids in one
+                # partition are 0..n-1 by definition). The candidate count
+                # bounds the new URLs, so one partition holds them all;
+                # bounding the seen side too keeps that one task from
+                # sorting a large seen set when the join is not a broadcast.
+                ranked = (
+                    new_urls.coalesce(1)
+                    .sortWithinPartitions("parent_seq", "link_idx")
+                    .withColumn("_adm", F.monotonically_increasing_id() + 1)
                 )
-                admitted_f = _frontier_row_cols(
-                    admitted.select("job_id", "seq", "url", "depth", "parent_seq", "link_idx"),
-                    rnd,
+            else:
+                # eager local checkpoint: materializes once and TRUNCATES the
+                # candidate lineage, so the range rank and the write can never
+                # silently recompute the explode+anti-join pipeline (a plain
+                # persist can be evicted and did, catastrophically, on large
+                # rounds)
+                ranked = global_rank(
+                    new_urls.localCheckpoint(eager=True), ["parent_seq", "link_idx"], "_adm"
                 )
-                tables["admissions"].write(admitted_f, rnd)
-                admitted_count = min(n_new, n_admit_room)
+            admitted = (
+                ranked.filter(F.col("_adm") <= n_admit_room)
+                .withColumn("seq", F.lit(next_seq) + F.col("_adm") - 1)
+                .drop("_adm")
+                .withColumn("job_id", F.lit(job.job_id))
+            )
+            adm_obs = Observation()
+            admitted_f = _frontier_row_cols(
+                admitted.select("job_id", "seq", "url", "depth", "parent_seq", "link_idx"),
+                rnd,
+            ).observe(adm_obs, F.count(F.lit(1)).alias("rows"))
+            # a round whose candidates are all seen commits an empty snapshot
+            tables["admissions"].write(admitted_f, rnd)
+            admitted_count = adm_obs.get["rows"]
 
         # ---- next pending frontier: nothing to write in ANY mode — the
         # (global or per-host) watermark in the round state IS the frontier

@@ -3,6 +3,12 @@
 Local mode here; on a real cluster the same builder is used by
 ``spark-submit --py-files`` (see scripts/submit_crawl.py). AQE is on so skewed
 host buckets get runtime skew-join splitting on top of our explicit salting.
+
+Python workers fork from ``web_crawler_spark.worker_daemon`` instead of
+``pyspark.daemon``: it keeps each task from re-reading the directory of every
+zip archive on the worker's path, which was most of a small task's fixed
+cost. The crawl engine reads its per-round counts from ``DataFrame.observe``
+on the writes it runs anyway, so a round runs no separate count job.
 """
 
 from __future__ import annotations
@@ -43,6 +49,12 @@ def get_spark(
         # embedding dots; see analytics/common.ensure_jitable_codegen)
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
     )
+    if master.startswith("local"):
+        # the daemon starts before any task and imports this package, so
+        # the worker needs the package root on its path whatever the cwd
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        b = b.config("spark.executorEnv.PYTHONPATH", root)
+    b = b.config("spark.python.daemon.module", "web_crawler_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
