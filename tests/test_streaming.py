@@ -2,10 +2,11 @@
 produce exactly the batch aggregation (same plan shape, readStream source)."""
 
 import shutil
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from web_crawler_spark.streaming import stream_rollup
+from web_crawler_spark.streaming import run_to_memory, stream_rollup
 
 SF_EVENTS = "/root/testdata/sf0.001/events.parquet"
 
@@ -15,7 +16,7 @@ def test_stream_rollup_matches_batch(spark, tmp_path):
     src.mkdir()
     shutil.copy(SF_EVENTS, src / "part-0.parquet")
 
-    q = stream_rollup.run_to_memory(
+    q = run_to_memory(
         stream_rollup.rollup_stream(spark, str(src), window="1 hour", watermark="2 hours"),
         name="rollup_t",
     )
@@ -52,7 +53,7 @@ def test_session_stream_matches_batch(spark, tmp_path):
     src.mkdir()
     shutil.copy(SF_EVENTS, src / "part-0.parquet")
 
-    q = stream_rollup.run_to_memory(
+    q = run_to_memory(
         stream_rollup.session_stream(spark, str(src), gap="10 minutes", watermark="2 hours"),
         name="sess_t",
         mode="complete",
@@ -91,7 +92,7 @@ def test_stream_join_matches_batch(spark, tmp_path):
     src.mkdir()
     shutil.copy(SF_EVENTS, src / "part-0.parquet")
 
-    q = stream_rollup.run_to_memory(
+    q = run_to_memory(
         stream_join.attribution_stream(spark, str(src), watermark="35 days", max_lag="1 hour"),
         name="attrib_t",
         mode="append",
@@ -132,8 +133,8 @@ def test_stateful_dedup_stream(spark, tmp_path):
     write(rows1, "b1.parquet")
     write(rows2, "b2.parquet")
 
-    q = stateful_dedup.run_to_memory(
-        stateful_dedup.dedup_stream(spark, str(src)), name="dedup_t"
+    q = run_to_memory(
+        stateful_dedup.dedup_stream(spark, str(src)), name="dedup_t", mode="append"
     )
     try:
         got = {
@@ -169,7 +170,7 @@ def test_stream_kmv_matches_batch(spark, tmp_path):
         "_c"
     ).write.parquet(str(src))
 
-    q = stream_rollup.run_to_memory(
+    q = run_to_memory(
         stream_kmv.kmv_stream(spark, str(src)), name="kmv_t", mode="update"
     )
     try:
@@ -207,7 +208,7 @@ def test_stream_phash_neardup_matches_batch(spark, tmp_path):
         .select(F.col("image_id").alias("index_id"), "phash")
     )
 
-    q = stream_phash.run_to_memory(
+    q = run_to_memory(
         stream_phash.neardup_stream(spark, str(src), index), name="phash_t"
     )
     try:
@@ -259,7 +260,7 @@ def test_stream_curate_matches_batch(spark, tmp_path):
     fp, segs, rates = stream_curate.build_indexes(spark, corpus)
     fp, segs, rates = fp.cache(), segs.cache(), rates.cache()
 
-    q = stream_curate.run_to_memory(
+    q = run_to_memory(
         stream_curate.curate_stream(spark, str(src), fp, segs, rates), name="curate_t"
     )
     try:
@@ -373,7 +374,7 @@ def test_stream_curate_image_matches_batch(spark, tmp_path):
     index = stream_curate_image.build_index(corpus).cache()
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
-    q = stream_curate_image.run_to_memory(
+    q = run_to_memory(
         stream_curate_image.curate_stream(spark, str(src), index, emb), name="img_curate_t"
     )
     try:
@@ -428,7 +429,7 @@ def test_stream_decontaminate_matches_batch(spark, tmp_path):
     bc_cent, bench = stream_decontaminate.build_index(spark, emb)
     bench = bench.cache()
 
-    q = stream_decontaminate.run_to_memory(
+    q = run_to_memory(
         stream_decontaminate.decontaminate_stream(spark, str(src), bc_cent, bench),
         name="decon_t",
     )
@@ -473,7 +474,7 @@ def test_stream_spans_matches_batch_and_span_dedup(spark, tmp_path):
 
     index = stream_spans.build_index(spark, docs).cache()
 
-    q = stream_spans.run_to_memory(
+    q = run_to_memory(
         stream_spans.spans_stream(spark, str(src), index), name="spans_t"
     )
     def key(r):
@@ -520,7 +521,7 @@ def test_stream_neardup_matches_batch_and_dedup_incremental(spark, tmp_path):
     shingle_sets = shingle_sets.cache()
     hot_row = hot_row.cache()
 
-    q = stream_neardup.run_to_memory(
+    q = run_to_memory(
         stream_neardup.neardup_stream(
             spark, str(src), band_index, shingle_sets, hot_row
         ),
@@ -549,15 +550,17 @@ def test_stream_neardup_matches_batch_and_dedup_incremental(spark, tmp_path):
 
 
 def test_stream_neardup_signatures_match_pure_python_on_edge_docs(spark):
-    """The per-row array-fold minhash formulation must equal an independent
+    """Both signature plans of the MinHash core — the per-row array fold the
+    stream runs and the grouped batch pass — must equal an independent
     pure-Python recompute on edge documents the corpus never exercises:
-    empty text, <3 words (no shingles -> null minhashes), repeated
-    shingles, mixed/tab whitespace, leading/trailing space, non-ASCII."""
+    empty text, <3 words (no shingles -> null minhashes in the fold, no row
+    in the batch pass), repeated shingles, mixed/tab whitespace,
+    leading/trailing space, non-ASCII."""
     import hashlib
     import re
 
+    from web_crawler_spark.analytics import dedup
     from web_crawler_spark.analytics.dedup import MINHASH_AB, MINHASH_P
-    from web_crawler_spark.streaming import stream_neardup
 
     texts = [
         "",
@@ -572,7 +575,11 @@ def test_stream_neardup_signatures_match_pure_python_on_edge_docs(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    got = {r["doc_id"]: r for r in stream_neardup._signatures(docs).collect()}
+    got = {r["doc_id"]: r for r in dedup._fold_signatures(docs).collect()}
+    got_batch = {
+        r["doc_id"]: r
+        for r in dedup._minhash_signatures(dedup._shingle_hashes(docs)).collect()
+    }
 
     for i, t in enumerate(texts):
         w = re.split(r"\s+", t.strip().lower())
@@ -583,9 +590,12 @@ def test_stream_neardup_signatures_match_pure_python_on_edge_docs(spark):
         r = got[i]
         assert sorted(r["sh"]) == sorted(set(hs)), f"doc {i} shingle set"
         assert r["n_sh"] == len(set(hs)), f"doc {i} n_sh"
+        assert (i in got_batch) == bool(hs), f"doc {i} batch row"
         for k, (a, b) in enumerate(MINHASH_AB):
             want = min(((h % MINHASH_P) * a + b) % MINHASH_P for h in hs) if hs else None
             assert r[f"mh{k}"] == want, f"doc {i} mh{k}"
+            if hs:
+                assert got_batch[i][f"mh{k}"] == want, f"doc {i} batch mh{k}"
 
 
 def test_stream_split_admits_arrivals_into_corpus_clusters(spark, tmp_path):
@@ -635,8 +645,6 @@ def test_stream_split_admits_arrivals_into_corpus_clusters(spark, tmp_path):
     state = stream_split.build_split_state(spark, corpus)
     state = tuple(df.cache() for df in state)
 
-    from web_crawler_spark.streaming.stream_neardup import run_to_memory
-
     q = run_to_memory(
         stream_split.split_stream(spark, str(src), state), name="split_t"
     )
@@ -677,8 +685,6 @@ def test_stream_split_colliding_doc_id_stays_singleton(spark, tmp_path):
     must become its own singleton group, not inherit that corpus doc's
     group through the label lookup — in both the stream and its batch twin."""
     from web_crawler_spark.streaming import stream_split
-    from web_crawler_spark.streaming.stream_neardup import run_to_memory
-
     def doc(vocab: str, extra: str = "") -> str:
         return f"{' '.join(f'{vocab}{i}' for i in range(40))} {extra}".strip()
 
@@ -703,3 +709,59 @@ def test_stream_split_colliding_doc_id_stays_singleton(spark, tmp_path):
              for r in stream_split.split_batch(spark, src, state).collect()]
     assert streamed == [(1, 1, False)]
     assert batch == [(1, 1, False)]
+
+
+def test_stream_split_labels_equal_component_labels(spark):
+    """The streaming split state labels the batch pair plan's output, so its
+    label map over the whole sf0.01 documents table is exactly the
+    `_component_labels` snapshot the batch dedup_clusters/corpus_split read."""
+    from web_crawler_spark.analytics.dedup import _component_labels
+    from web_crawler_spark.streaming import stream_split
+
+    sf_dir = str(Path(SF_EVENTS).parents[1] / "sf0.01")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    *_, labels = stream_split.build_split_state(spark, docs)
+    got = {(r["dup_of"], r["group_id"]) for r in labels.collect()}
+    want = {(r["doc"], r["label"]) for r in _component_labels(spark, sf_dir).collect()}
+    assert got == want and got
+
+
+def test_stream_split_label_join_follows_broadcast_threshold(spark, tmp_path):
+    """The corpus label map grows with the corpus, so its join carries no
+    broadcast hint and the planner's size estimate decides: with
+    broadcasting disabled the label join is not a BroadcastHashJoin, while
+    at the default threshold the (cached, materialized) test-size label map
+    still broadcasts."""
+    from web_crawler_spark.streaming import stream_split
+
+    def doc(vocab: str, extra: str = "") -> str:
+        return f"{' '.join(f'{vocab}{i}' for i in range(40))} {extra}".strip()
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(i, t, "en", "s0", len(t)) for i, t in rows],
+            ["doc_id", "text", "lang", "source", "n_chars"],
+        )
+
+    corpus = frame([(0, doc("alpha")), (1, doc("alpha", "tailA")), (7, doc("gamma"))])
+    src = str(tmp_path / "arrivals")
+    frame([(100, doc("alpha", "newA")), (104, doc("omega"))]).write.parquet(src)
+    state = tuple(df.cache() for df in stream_split.build_split_state(spark, corpus))
+    for df in state:
+        df.count()
+
+    def label_join() -> list[str]:
+        plan = stream_split.split_batch(spark, src, state)._jdf.queryExecution()
+        lines = plan.executedPlan().toString().splitlines()
+        return [ln for ln in lines if "LeftOuter" in ln and "[dup_of#" in ln]
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    joins = label_join()
+    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0]
+    spark.conf.set(key, "-1")
+    try:
+        joins = label_join()
+    finally:
+        spark.conf.set(key, default)
+    assert len(joins) == 1 and "BroadcastHashJoin" not in joins[0]

@@ -77,14 +77,15 @@ SHINGLE_DF_CAP = 50
 # shared shingle / token fragments
 # ---------------------------------------------------------------------------
 
-# tokenizer comes from common.WORDS (one shared definition)
-# 3-gram shingles, distinct, guarded for <3-word docs (Spark's sequence()
-# DESCENDS when start > stop — the guard is semantics, not style)
-_SHINGLES = (
-    f"CASE WHEN size({_WORDS}) >= 3 THEN "
-    f"array_distinct(transform(sequence(1, size({_WORDS}) - 2), "
-    f"i -> concat_ws(' ', slice({_WORDS}, i, 3)))) "
-    f"ELSE array() END"
+# 3-gram shingles over the word array `w`, which the caller binds ONCE per
+# document (getItem indexing beats re-splitting the text per shingle inside
+# the lambda — 10x on the streaming signature stage at sf0.1); guarded for
+# <3-word docs (Spark's sequence() DESCENDS when start > stop — the guard is
+# semantics, not style). Tokenizer: common.WORDS.
+_SHINGLE_ARR = (
+    "CASE WHEN size(w) >= 3 THEN "
+    "transform(sequence(1, size(w) - 2), i -> concat_ws(' ', w[i-1], w[i], w[i+1])) "
+    "ELSE array() END"
 )
 
 SQL_SHINGLE_CTE = f"""
@@ -100,32 +101,6 @@ shcount AS (SELECT doc_id, count(*) AS n_sh FROM shingle GROUP BY doc_id)
 """
 
 
-def _raw_shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exploded (doc_id, sh) WITHOUT per-doc dedup — one row per occurrence.
-
-    Duplicate-insensitive consumers (the minhash ``min`` aggregation) read
-    this directly and skip the dedup exchange entirely: partial aggregation
-    collapses the shuffle to one row per doc per map partition, while
-    ``dropDuplicates`` would shuffle one row per distinct (doc_id, sh) — the
-    largest exchange in the LSH plan at corpus scale.
-    """
-    # split once into a column, index with getItem (cheaper than slice+concat
-    # inside the lambda)
-    d = table(spark, sf_dir, "documents")
-    return d.select("doc_id", F.expr(_WORDS).alias("w")).select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("w") >= 3,
-                F.expr(
-                    "transform(sequence(1, size(w) - 2), "
-                    "i -> concat_ws(' ', w[i-1], w[i], w[i+1]))"
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("sh"),
-    )
-
-
 # 60-bit md5-prefix of a shingle as bigint — the join/exchange representation.
 # Shuffling and joining 8-byte longs beats ~25-byte shingle strings on every
 # exchange and every join probe; collisions (n²/2⁶¹ expected pairs over the
@@ -135,14 +110,25 @@ _SH_HASH = "cast(conv(substring(md5(sh), 1, 15), 16, 10) as bigint)"
 SQL_SH_HASH = "CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT)"
 
 
-def _hashed_shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc_id, sh) with ``sh`` as the 60-bit hash — drop-in for
-    `_shingles_df` in consumers whose joins/counts don't need the text."""
+def _shingle_hashes(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh): one 60-bit hash per shingle OCCURRENCE, no per-doc dedup.
+
+    Duplicate-insensitive consumers (the minhash ``min`` aggregation) read
+    this directly and skip the dedup exchange entirely: partial aggregation
+    collapses the shuffle to one row per doc per map partition, while
+    ``dropDuplicates`` would shuffle one row per distinct (doc_id, sh) — the
+    largest exchange in the LSH plan at corpus scale.
+    """
     return (
-        _raw_shingles_df(spark, sf_dir)
+        docs.select("doc_id", F.expr(_WORDS).alias("w"))
+        .select("doc_id", F.explode(F.expr(_SHINGLE_ARR)).alias("sh"))
         .select("doc_id", F.expr(_SH_HASH).alias("sh"))
-        .dropDuplicates(["doc_id", "sh"])
     )
+
+
+def _hashed_shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (doc_id, sh) with ``sh`` as the 60-bit hash."""
+    return _shingle_hashes(table(spark, sf_dir, "documents")).dropDuplicates(["doc_id", "sh"])
 
 
 SQL_HSHINGLE_CTE = f"""{SQL_SHINGLE_CTE},
@@ -247,42 +233,86 @@ WHERE CAST(n_inter AS DOUBLE) / (ca.n_sh + cb.n_sh - n_inter) >= {JACCARD_T}
 
 
 # ---------------------------------------------------------------------------
-# 3. MinHash + LSH
+# 3. MinHash + LSH: the one core behind every text near-dup plan
+#
+# dedup_minhash_lsh, dedup_incremental, the dedup_clusters/corpus_split
+# labels and the streaming twins (stream_neardup, stream_split) share one
+# shingle-hash recipe (_SHINGLE_ARR + _SH_HASH), one 16-mix family (_mix), one
+# band packing (_band_rows) and one best-match rule (_best_match). Exactly
+# two signature/verify plans remain, and batch vs stream picks one:
+#
+# - batch: signatures are ONE partial-aggregated groupBy over the exploded
+#   occurrence stream (_minhash_signatures), and the verify is a shingle
+#   self-join restricted to candidate docs. Running the batch queries on the
+#   streaming plan's fold signatures or array verify was slower at sf0.1.
+# - stream: a stream must not shuffle per arriving row and may run only one
+#   aggregation, so signatures are per-row array folds (_fold_signatures —
+#   bit-identical: min over occurrences == min over the array) and the
+#   verify is a per-row array_intersect against a static corpus index
+#   (_arrival_matches).
+#
+# Cap policy, stated once here. The PAIR GRAPH is uncapped: _lsh_pairs
+# verifies with exact Jaccard over every shingle, and its pairs feed
+# dedup_minhash_lsh, dedup_clusters, corpus_split and stream_split's corpus
+# labels. NEW-vs-CORPUS matching is capped: dedup_incremental and
+# _arrival_matches (stream_neardup, stream_split arrivals) drop shingles
+# present in more than SHINGLE_DF_CAP documents before the intersection,
+# which bounds a boilerplate shingle's fan-out over candidates. So an
+# arrival whose similarity to a corpus doc is carried by boilerplate can be
+# unmatched at admission yet grouped with that doc by a batch corpus_split
+# re-run.
 # ---------------------------------------------------------------------------
 
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall contract (BENCH.md §3b, scripts/text_pair_recall.py): the
-    r=2/b=8 band rule admits a pair with probability 1 − (1 − s²)⁸ — 0.89
-    at the s=0.5 threshold, 0.9996 at s=0.8; measured pair recall vs the
-    exact dedup_ngram_jaccard baseline is 1.000 on the test corpora (all
-    true pairs ≥ 0.9). Precision is 1 by construction: candidates are
-    verified with exact Jaccard."""
-    # min() is duplicate-insensitive, so the signature pass reads the RAW
-    # occurrence stream — no dropDuplicates exchange on the full shingle
-    # table; per-doc dedup applies only to the candidate-restricted verify
-    # side below, where the semi-join has already shrunk the input
-    raw = _raw_shingles_df(spark, sf_dir)
-    # ONE md5 per shingle occurrence, reused by both halves of the query:
-    # the 60-bit value feeds the signature mixes (reduced mod P) AND, after
-    # the candidate semi-join, serves as the verify join key
-    hashed = raw.select("doc_id", F.expr(_SH_HASH).alias("h"))
-    # all 16 permutation minhashes in ONE grouped pass (16 partial-aggregated
-    # min columns) — a seed crossJoin would multiply the shuffle ×16
-    mh = (
-        hashed.select("doc_id", (F.col("h") % MINHASH_P).alias("hp"))
+
+def _mix(i: int, hp: str) -> str:
+    """Permutation *i*'s value for a shingle hash already reduced mod P."""
+    a, b = MINHASH_AB[i]
+    return f"({hp} * {a} + {b}) % {MINHASH_P}"
+
+
+def _minhash_signatures(hashed: DataFrame) -> DataFrame:
+    """Batch signatures (doc_id, mh0..mh15) from the (doc_id, sh) shingle-hash
+    occurrence stream: all 16 mins in ONE grouped pass (partial-aggregated
+    columns — a seed crossJoin would multiply the shuffle ×16). min() is
+    duplicate-insensitive, so no per-doc dedup exchange; a doc without
+    shingles gets no row."""
+    return (
+        hashed.select("doc_id", (F.col("sh") % MINHASH_P).alias("hp"))
         .groupBy("doc_id")
-        .agg(
+        .agg(*[F.expr(f"min({_mix(i, 'hp')})").alias(f"mh{i}") for i in range(N_HASHES)])
+    )
+
+
+def _fold_signatures(docs: DataFrame) -> DataFrame:
+    """Streaming signatures (doc_id, sh, n_sh, mh0..mh15), every column a
+    per-row fold — no shuffle, no state. `sh` is the distinct set of FULL
+    60-bit hashes, the verify key (reducing mod P first would
+    birthday-collide ~1 per 50k docs and break parity with the batch
+    verify); a doc without shingles gets null minhashes."""
+    return (
+        docs.select("doc_id", F.expr(_WORDS).alias("w"))
+        .select("doc_id", F.expr(f"transform({_SHINGLE_ARR}, sh -> {_SH_HASH})").alias("hs"))
+        .select(
+            "doc_id",
+            F.expr("array_distinct(hs)").alias("sh"),
+            F.expr("size(array_distinct(hs))").alias("n_sh"),
             *[
-                F.min((F.col("hp") * F.lit(a) + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
-                for i, (a, b) in enumerate(MINHASH_AB)
-            ]
+                F.expr(f"array_min(transform(hs, x -> {_mix(i, f'(x % {MINHASH_P})')}))").alias(
+                    f"mh{i}"
+                )
+                for i in range(N_HASHES)
+            ],
         )
     )
-    # band key = the band's two 31-bit minhashes packed into ONE bigint
-    # (hi·2³¹ + lo ≤ 2⁶²−1) — an 8-byte join key instead of a ~21-char
-    # concat string; the candidate join hashes/compares a long, not UTF8
-    bands = mh.select(
+
+
+def _band_rows(sigs: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, band, band_key): 8 rows per doc. The band key packs
+    the band's two 31-bit minhashes into ONE bigint (hi·2³¹ + lo ≤ 2⁶²−1) —
+    the candidate join hashes and compares an 8-byte long, not a string."""
+    return sigs.select(
         "doc_id",
+        *keep,
         F.explode(
             F.array(
                 *[
@@ -297,7 +327,18 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    ).select("doc_id", *keep, "bk.band", "bk.band_key")
+
+
+def _lsh_pairs(docs: DataFrame) -> DataFrame:
+    """The batch pair plan over a documents DataFrame: exact-verified
+    (doc_a < doc_b, jaccard ≥ JACCARD_T) pairs, uncapped (see the cap
+    policy above)."""
+    # ONE md5 per shingle occurrence, reused by both halves of the query:
+    # the 60-bit value feeds the signature mixes (reduced mod P) AND, after
+    # the candidate semi-join, serves as the verify join key
+    hashed = _shingle_hashes(docs)
+    bands = _band_rows(_minhash_signatures(hashed))
     cand = (
         bands.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
         .join(bands.select(F.col("doc_id").alias("doc_b"), "band", "band_key"), ["band", "band_key"])
@@ -311,17 +352,65 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_docs = cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id")).distinct()
     # dedup AFTER the semi-join restriction: the exchange now carries only
     # candidate docs' hashed shingles (8-byte longs), not the corpus's text
-    sh_cand = (
-        hashed.withColumnRenamed("h", "sh")
-        .join(cand_docs, "doc_id", "left_semi")
-        .dropDuplicates(["doc_id", "sh"])
-    )
+    sh_cand = hashed.join(cand_docs, "doc_id", "left_semi").dropDuplicates(["doc_id", "sh"])
     exact = _jaccard_pairs(sh_cand).select("doc_a", "doc_b", "jaccard")
     return (
         cand.join(exact, ["doc_a", "doc_b"])
         .filter(F.col("jaccard") >= JACCARD_T)
         .select("doc_a", "doc_b", "jaccard")
     )
+
+
+def _arrival_matches(
+    docs: DataFrame, band_index: DataFrame, shingle_sets: DataFrame, hot_row: DataFrame
+) -> DataFrame:
+    """The capped candidate → verify plan for arriving *docs* against a
+    static corpus index (``stream_neardup.build_index``): per-row
+    signatures, band probe, exact Jaccard over discriminative shingles only
+    (`hot_row`'s df > SHINGLE_DF_CAP hashes excluded on both sides).
+    Returns (doc_id, dup_of, jaccard ≥ JACCARD_T), one row per band hit;
+    multi-band duplicates are absorbed by `_best_match` — no
+    streaming-hostile dropDuplicates."""
+    cand = (
+        _band_rows(_fold_signatures(docs), "sh")
+        .join(band_index, ["band", "band_key"])
+        .crossJoin(F.broadcast(hot_row))
+        .withColumn("sh", F.expr("array_except(sh, hot)"))
+        .withColumn("n_sh", F.expr("size(sh)"))
+    )
+    return (
+        cand.join(shingle_sets, "dup_of")
+        .withColumn("n_inter", F.expr("size(array_intersect(sh, sh_old))"))
+        .withColumn(
+            "jaccard",
+            F.col("n_inter").cast("double")
+            / (F.col("n_sh") + F.col("n_old") - F.col("n_inter")),
+        )
+        .filter(F.col("jaccard") >= JACCARD_T)
+        .select("doc_id", "dup_of", "jaccard")
+    )
+
+
+def _best_match(scored: DataFrame) -> DataFrame:
+    """Best (doc_id, dup_of, jaccard) row per doc_id as a map-side
+    max(struct) — no window sort; struct order = (jaccard desc via max, then
+    smallest dup_of via -dup_of)."""
+    best = scored.groupBy("doc_id").agg(
+        F.max(F.struct(F.col("jaccard"), (-F.col("dup_of")).alias("nd"))).alias("b")
+    )
+    return best.select(
+        "doc_id", (-F.col("b.nd")).alias("dup_of"), F.col("b.jaccard").alias("jaccard")
+    )
+
+
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall contract (BENCH.md §3b, scripts/text_pair_recall.py): the
+    r=2/b=8 band rule admits a pair with probability 1 − (1 − s²)⁸ — 0.89
+    at the s=0.5 threshold, 0.9996 at s=0.8; measured pair recall vs the
+    exact dedup_ngram_jaccard baseline is 1.000 on the test corpora (all
+    true pairs ≥ 0.9). Precision is 1 by construction: candidates are
+    verified with exact Jaccard."""
+    return _lsh_pairs(table(spark, sf_dir, "documents"))
 
 
 _SEED_ROWS = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(MINHASH_AB))
@@ -969,38 +1058,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-batch reference is 1.000 with zero spurious flags
     (scripts/text_pair_recall.py, BENCH.md §3b)."""
     is_new = F.col("doc_id") % INCR_MOD == INCR_MOD - 1
-    raw = _raw_shingles_df(spark, sf_dir)
-    hashed = raw.select("doc_id", F.expr(_SH_HASH).alias("h"))
+    hashed = _shingle_hashes(table(spark, sf_dir, "documents"))
     # one signature pass over the union; in production the old half of this
     # is a signature-table scan, and everything from `bands` down is the
     # identical plan
-    mh = (
-        hashed.select("doc_id", (F.col("h") % MINHASH_P).alias("hp"))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.col("hp") * F.lit(a) + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
-                for i, (a, b) in enumerate(MINHASH_AB)
-            ]
-        )
-    )
-    bands = mh.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        (
-                            F.col(f"mh{b * ROWS_PER_BAND}") * F.lit(2147483648)
-                            + F.col(f"mh{b * ROWS_PER_BAND + 1}")
-                        ).alias("band_key"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    bands = _band_rows(_minhash_signatures(hashed))
     # new JOIN old only: the asymmetric band join is what makes this
     # incremental — candidate count is bounded by batch-side bucket hits
     cand = (
@@ -1016,33 +1078,33 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # verify tier over DISCRIMINATIVE shingles only, like dedup_ngram_jaccard:
     # a licence-boilerplate shingle shared by most candidate docs would fan
-    # the h-join out quadratically in candidate count even though both sides
+    # the sh-join out quadratically in candidate count even though both sides
     # are candidate-restricted, so shingles in more than SHINGLE_DF_CAP docs
     # are dropped BEFORE the intersection join and the per-doc counts (one
     # dedup exchange builds `kept`; counts and both verify sides reuse it —
     # the uncapped plan paid the same exchange for counts alone). At 100 TB
     # the old side's df table is precomputed index metadata, not a rescan.
     # count_distinct over the raw stream, NOT count over the deduped
-    # relation: the dedup exchange partitions by (doc_id, h) and cannot
-    # serve a groupBy(h), so the deduped formulation pays dedup-shuffle +
-    # h-shuffle where this pays one h-shuffle with per-partition distinct
+    # relation: the dedup exchange partitions by (doc_id, sh) and cannot
+    # serve a groupBy(sh), so the deduped formulation pays dedup-shuffle +
+    # sh-shuffle where this pays one sh-shuffle with per-partition distinct
     # partials (A/B'd at sf1: 7.4 s here vs 9.2 s deduped-then-count)
     hot = (
-        hashed.groupBy("h")
+        hashed.groupBy("sh")
         .agg(F.count_distinct("doc_id").alias("_df"))
         .filter(F.col("_df") > SHINGLE_DF_CAP)
-        .select("h")
+        .select("sh")
     )
-    kept = hashed.dropDuplicates(["doc_id", "h"]).join(hot, "h", "left_anti")
+    kept = hashed.dropDuplicates(["doc_id", "sh"]).join(hot, "sh", "left_anti")
     counts = kept.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     new_docs = cand.select("doc_id").distinct()
     old_docs = cand.select(F.col("dup_of").alias("doc_id")).distinct()
     sh_new = kept.join(new_docs, "doc_id", "left_semi")
     sh_old = kept.join(old_docs, "doc_id", "left_semi").select(
-        F.col("doc_id").alias("dup_of"), "h"
+        F.col("doc_id").alias("dup_of"), "sh"
     )
     inter = (
-        sh_new.join(sh_old, "h")
+        sh_new.join(sh_old, "sh")
         .groupBy("doc_id", "dup_of")
         .agg(F.count("*").alias("n_inter"))
     )
@@ -1060,14 +1122,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("jaccard") >= JACCARD_T)
     )
-    # best match per new doc as a map-side max(struct) — no window sort;
-    # struct order = (jaccard desc via max, then smallest dup_of via -dup_of)
-    best = scored.groupBy("doc_id").agg(
-        F.max(F.struct(F.col("jaccard"), (-F.col("dup_of")).alias("nd"))).alias("b")
-    )
-    return best.select(
-        "doc_id", (-F.col("b.nd")).alias("dup_of"), F.col("b.jaccard").alias("jaccard")
-    )
+    return _best_match(scored)
 
 
 SQL_DEDUP_INCREMENTAL = f"""

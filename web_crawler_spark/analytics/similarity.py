@@ -628,9 +628,10 @@ def embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction (exact verify on candidates); pair recall vs the exact
     baseline rises with pair similarity — with the Hamming-1 multiprobe,
     0.9942 for sim>=0.80 pairs and 0.9555 overall on the clustered corpus
-    (single-probe was 0.76 high-band), 0.428 on the adversarial driver
-    corpus (every pair in the near-orthogonal 0.35-0.60 band; cos 0.35 ≈
-    69°; single-probe was 0.07). Cost of the probes: candidate pairs grow
+    (single-probe was 0.76 high-band). On the adversarial test corpus
+    (sf0.01: all 271 true pairs at similarity 0.35-0.49, just above the
+    near-orthogonal threshold; cos 0.35 ≈ 69°) recall is only 0.428
+    (single-probe was 0.07). Cost of the probes: candidate pairs grow
     4.8× (clustered) / 9.5× (adversarial) against the theoretical (B+1)=11×
     probe-row fanout — the verify tier stays candidate-bounded."""
     e = _with_norm(table(spark, sf_dir, "embeddings"))

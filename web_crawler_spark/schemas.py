@@ -53,6 +53,18 @@ LINK_STRUCT = T.StructType(
     ]
 )
 
+# `documents` test table — the arriving-document shape every
+# streaming text tier reads
+DOCUMENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("lang", T.StringType(), True),
+        T.StructField("source", T.StringType(), True),
+        T.StructField("n_chars", T.LongType(), True),
+    ]
+)
+
 # images payload table — exact input_hint shape (BASELINE.json)
 IMAGES_SCHEMA = T.StructType(
     [

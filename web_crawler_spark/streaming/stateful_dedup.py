@@ -80,15 +80,3 @@ def dedup_stream(spark: SparkSession, source_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_to_memory(df: DataFrame, name: str, timeout_s: float = 120.0):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q

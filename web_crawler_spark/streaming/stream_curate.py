@@ -41,7 +41,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..analytics.text import (
     MIN_WORDS,
@@ -60,16 +59,7 @@ from ..analytics.text import (
     _clf_logit_over,
     source_rates,
 )
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
+from ..schemas import DOCUMENTS_SCHEMA
 
 _EN = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
 
@@ -196,7 +186,7 @@ def curate_stream(
     segments: DataFrame,
     rates: DataFrame,
 ) -> DataFrame:
-    docs = spark.readStream.schema(DOCS_SCHEMA).parquet(src_dir)
+    docs = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src_dir)
     return _verdict(docs, fingerprints, segments, rates)
 
 
@@ -208,19 +198,5 @@ def curate_batch(
     rates: DataFrame,
 ) -> DataFrame:
     """Batch twin over the same source directory — the parity oracle."""
-    docs = spark.read.schema(DOCS_SCHEMA).parquet(src_dir)
+    docs = spark.read.schema(DOCUMENTS_SCHEMA).parquet(src_dir)
     return _verdict(docs, fingerprints, segments, rates)
-
-
-def run_to_memory(df: DataFrame, name: str):
-    """availableNow complete-mode run into an in-memory table (test harness,
-    same shape as stream_rollup.run_to_memory)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

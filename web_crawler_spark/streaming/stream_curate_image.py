@@ -146,17 +146,3 @@ def curate_batch(
     """Batch twin over the same source directory — the parity oracle."""
     imgs = spark.read.schema(IMAGES_SCHEMA).parquet(src_dir)
     return _verdict(imgs, index, _towers(embeddings))
-
-
-def run_to_memory(df: DataFrame, name: str):
-    """availableNow complete-mode run into an in-memory table (test harness,
-    same shape as stream_rollup.run_to_memory)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

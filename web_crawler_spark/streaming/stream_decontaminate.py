@@ -115,17 +115,3 @@ def decontaminate_batch(
         .select("vec_id", "embedding")
     )
     return _verdict(vecs, bc_cent, bench)
-
-
-def run_to_memory(df: DataFrame, name: str):
-    """availableNow complete-mode run into an in-memory table (test
-    harness, same shape as stream_curate.run_to_memory)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

@@ -8,27 +8,29 @@ answers the per-document ingest-time question: "is this newly crawled
 document a near-duplicate of something already accepted?" — per
 micro-batch, without a batch pass over the corpus.
 
-Scale shape at 10^10 documents:
+Every stage is the streaming half of the one MinHash/LSH core in
+``analytics.dedup`` (section 3); this module adds only the static corpus
+index and the stream/batch sources. Scale shape at 10^10 documents:
 
 - signatures: the batch tier computes minhashes as a partial-aggregated
   groupBy over the exploded shingle stream (the right plan when the whole
   batch shuffles anyway); a stream must not shuffle per arriving row, so
-  the 16 minhashes are re-expressed as per-row ``array_min``/``transform``
-  folds over the document's own shingle array — stateless, zero-shuffle,
-  bit-identical to the batch mixes (min over occurrences == min over the
-  array; the 2-universal (a·h+b) mod P arithmetic is the same frozen
-  constants from ``dedup.MINHASH_AB``)
+  ``dedup._fold_signatures`` re-expresses the 16 minhashes as per-row
+  ``array_min``/``transform`` folds over the document's own shingle array
+  — stateless, zero-shuffle, bit-identical to the batch mixes
 - probe: the corpus band index (doc, band, band_key — 8 rows per accepted
   doc) is STATIC, keyed by the packed bigint band key; a stream-static
   inner equi-join, no state kept between micro-batches (at real scale this
   is the incrementally maintained signature table)
-- verify: candidates join the static per-doc shingle-set table on the
-  matched corpus doc id only — the candidate restriction the batch tier
-  gets from its semi-joins falls out of the equi-join itself — and exact
-  Jaccard is a per-row ``array_intersect`` against the arriving doc's own
-  (distinct) shingle hashes
-- verdict: ONE grouped aggregation back to document grain (the same
-  map-side max(struct) best-match rule as the batch query) — the single
+- verify: ``dedup._arrival_matches`` joins candidates to the static per-doc
+  shingle-set table on the matched corpus doc id only — the candidate
+  restriction the batch tier gets from its semi-joins falls out of the
+  equi-join itself — and exact Jaccard is a per-row ``array_intersect``
+  against the arriving doc's own (distinct) shingle hashes. The verify is
+  CAPPED at SHINGLE_DF_CAP, per the core's cap policy (``analytics.dedup``
+  section 3): new-vs-corpus matching is capped, the pair graph is not.
+- verdict: ONE grouped aggregation back to document grain
+  (``dedup._best_match``, the batch query's max(struct) rule) — the single
   streaming aggregation the plan is allowed
 
 Batch/stream parity is the test contract (test_streaming.py): over a
@@ -44,86 +46,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..analytics.dedup import (
-    _WORDS,
-    JACCARD_T,
-    MINHASH_AB,
-    MINHASH_P,
-    N_BANDS,
-    ROWS_PER_BAND,
     SHINGLE_DF_CAP,
+    _arrival_matches,
+    _band_rows,
+    _best_match,
+    _fold_signatures,
 )
-
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-# per-row shingle hashes: the same 3-gram + 60-bit-md5-prefix recipe as
-# dedup._raw_shingles_df/_SH_HASH, kept as an array column instead of an
-# exploded stream. The FULL 60-bit hashes are the counting/intersection
-# keys (the batch verify intersects on them; reducing mod P first would
-# birthday-collide ~1 per 50k docs and break bit-parity); the mod-P
-# reduction happens only inside the minhash mixes, as in the batch tier.
-_SH_HASHES = (
-    f"transform("
-    f"  CASE WHEN size({_WORDS}) >= 3 THEN"
-    f"    transform(sequence(1, size({_WORDS}) - 2),"
-    f"      i -> concat_ws(' ', ({_WORDS})[i-1], ({_WORDS})[i], ({_WORDS})[i+1]))"
-    f"  ELSE array() END,"
-    f"  s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint))"
-)
-
-
-def _signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, sh, n_sh, mh0..mh15) with every signature a per-row fold —
-    no shuffle, no state; `sh` is the distinct 60-bit hash set."""
-    sigs = docs.select("doc_id", F.expr(_SH_HASHES).alias("hs")).select(
-        "doc_id",
-        F.expr("array_distinct(hs)").alias("sh"),
-        F.expr("size(array_distinct(hs))").alias("n_sh"),
-        *[
-            F.expr(
-                f"array_min(transform(hs, x -> ((x % {MINHASH_P}) * {a}L + {b}L) % {MINHASH_P}))"
-            ).alias(f"mh{i}")
-            for i, (a, b) in enumerate(MINHASH_AB)
-        ],
-    )
-    return sigs
-
-
-def _bands(sigs: DataFrame) -> DataFrame:
-    """8 (band, packed bigint band_key) rows per doc — identical packing to
-    the batch tier."""
-    return sigs.select(
-        "doc_id",
-        "sh",
-        "n_sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        (
-                            F.col(f"mh{b * ROWS_PER_BAND}") * F.lit(2147483648)
-                            + F.col(f"mh{b * ROWS_PER_BAND + 1}")
-                        ).alias("band_key"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id", "sh", "n_sh",
-        F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"),
-    )
+from ..schemas import DOCUMENTS_SCHEMA
 
 
 def build_index(spark: SparkSession, corpus: DataFrame, df_population: DataFrame = None):
@@ -140,11 +71,11 @@ def build_index(spark: SparkSession, corpus: DataFrame, df_population: DataFrame
     over — defaults to the corpus; the batch/stream parity tests pass the
     FULL documents table because ``dedup_incremental`` derives both sides
     from it, so its df counts span corpus + batch."""
-    sigs = _signatures(corpus)
-    band_index = _bands(sigs).select(
+    sigs = _fold_signatures(corpus)
+    band_index = _band_rows(sigs).select(
         F.col("doc_id").alias("dup_of"), "band", "band_key"
     )
-    pop = _signatures(df_population) if df_population is not None else sigs
+    pop = _fold_signatures(df_population) if df_population is not None else sigs
     # 1-row array of boilerplate shingle hashes: small by construction
     # (bounded by total_occurrences / cap), carried to the stream side as a
     # broadcast 1-row cross join so the per-row array_except stays a
@@ -164,45 +95,6 @@ def build_index(spark: SparkSession, corpus: DataFrame, df_population: DataFrame
     return band_index, shingle_sets, hot_row
 
 
-def _verdict(
-    docs: DataFrame,
-    band_index: DataFrame,
-    shingle_sets: DataFrame,
-    hot_row: DataFrame,
-) -> DataFrame:
-    """Shared plan for both engines: per-row signatures, band probe,
-    candidate-only exact-Jaccard verify over DISCRIMINATIVE shingles only
-    (boilerplate excluded per `hot_row`, mirroring the batch cap), one
-    best-match agg per doc. Duplicate candidates from multi-band
-    collisions are absorbed by the final max — no streaming-hostile
-    dropDuplicates needed."""
-    cand = (
-        _bands(_signatures(docs))
-        .join(band_index, ["band", "band_key"])
-        .crossJoin(F.broadcast(hot_row))
-        .withColumn("sh", F.expr("array_except(sh, hot)"))
-        .withColumn("n_sh", F.expr("size(sh)"))
-        .drop("hot")
-    )
-    n_inter = F.expr("size(array_intersect(sh, sh_old))")
-    scored = (
-        cand.join(shingle_sets, "dup_of")
-        .withColumn("n_inter", n_inter)
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_sh") + F.col("n_old") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= JACCARD_T)
-    )
-    best = scored.groupBy("doc_id").agg(
-        F.max(F.struct(F.col("jaccard"), (-F.col("dup_of")).alias("nd"))).alias("b")
-    )
-    return best.select(
-        "doc_id", (-F.col("b.nd")).alias("dup_of"), F.col("b.jaccard").alias("jaccard")
-    )
-
-
 def neardup_stream(
     spark: SparkSession,
     src_dir: str,
@@ -210,8 +102,8 @@ def neardup_stream(
     shingle_sets: DataFrame,
     hot_row: DataFrame,
 ) -> DataFrame:
-    docs = spark.readStream.schema(DOC_SCHEMA).parquet(src_dir)
-    return _verdict(docs, band_index, shingle_sets, hot_row)
+    docs = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src_dir)
+    return _best_match(_arrival_matches(docs, band_index, shingle_sets, hot_row))
 
 
 def neardup_batch(
@@ -222,19 +114,5 @@ def neardup_batch(
     hot_row: DataFrame,
 ) -> DataFrame:
     """Batch twin over the same source directory — the parity oracle."""
-    docs = spark.read.schema(DOC_SCHEMA).parquet(src_dir)
-    return _verdict(docs, band_index, shingle_sets, hot_row)
-
-
-def run_to_memory(df: DataFrame, name: str):
-    """availableNow complete-mode run into an in-memory table (test
-    harness, same shape as stream_curate.run_to_memory)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    docs = spark.read.schema(DOCUMENTS_SCHEMA).parquet(src_dir)
+    return _best_match(_arrival_matches(docs, band_index, shingle_sets, hot_row))

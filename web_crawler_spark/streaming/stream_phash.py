@@ -76,17 +76,3 @@ def neardup_batch(spark: SparkSession, src_dir: str, index: DataFrame) -> DataFr
         spark.read.schema(IMAGES_SCHEMA).parquet(src_dir).select("image_id", "phash")
     )
     return _block_probe(imgs, index)
-
-
-def run_to_memory(df: DataFrame, name: str):
-    """availableNow complete-mode run into an in-memory table (test harness,
-    same shape as stream_rollup.run_to_memory)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

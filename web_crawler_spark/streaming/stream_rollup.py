@@ -101,18 +101,3 @@ def progress_stream(spark: SparkSession, outcomes_dir: str, outcomes_schema) -> 
     as an update-mode streaming aggregation over outcome rows."""
     oc = spark.readStream.schema(outcomes_schema).parquet(outcomes_dir)
     return oc.groupBy("outcome").agg(F.count("*").alias("cnt"))
-
-
-def run_to_memory(df: DataFrame, name: str, timeout_s: float = 120.0, mode: str = "complete"):
-    """Drain a bounded file stream into an in-memory table; returns after the
-    source is exhausted. Test/demo harness only. *mode*: complete for
-    aggregations, append for stream-stream joins / finalized windows."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q

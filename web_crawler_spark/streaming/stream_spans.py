@@ -34,7 +34,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..analytics.common import word_hash32
 from ..analytics.dedup import (
@@ -43,16 +42,7 @@ from ..analytics.dedup import (
     SPAN_DUP_RATIO_T,
     SPAN_G,
 )
-
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
+from ..schemas import DOCUMENTS_SCHEMA
 
 _G1 = SPAN_G - 1
 
@@ -129,25 +119,11 @@ def _verdict(docs: DataFrame, index: DataFrame) -> DataFrame:
 
 
 def spans_stream(spark: SparkSession, src_dir: str, index: DataFrame) -> DataFrame:
-    docs = spark.readStream.schema(DOC_SCHEMA).parquet(src_dir)
+    docs = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src_dir)
     return _verdict(docs, index)
 
 
 def spans_batch(spark: SparkSession, src_dir: str, index: DataFrame) -> DataFrame:
     """Batch twin over the same source directory — the parity oracle."""
-    docs = spark.read.schema(DOC_SCHEMA).parquet(src_dir)
+    docs = spark.read.schema(DOCUMENTS_SCHEMA).parquet(src_dir)
     return _verdict(docs, index)
-
-
-def run_to_memory(df: DataFrame, name: str):
-    """availableNow complete-mode run into an in-memory table (test
-    harness, same shape as stream_curate.run_to_memory)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

@@ -12,22 +12,29 @@ read). An arriving document that near-dup-matches a corpus document
 inherits that document's group — and therefore its split — verbatim;
 corpus assignments never move. An arriving document with no corpus match
 is a new singleton group labeled by its own doc_id, exactly the batch
-coalesce rule — even if that doc_id collides with a clustered corpus doc's. The one divergence from a batch RE-RUN is deliberate: a
+coalesce rule — even if that doc_id collides with a clustered corpus
+doc's. The first divergence from a batch RE-RUN is deliberate: a
 bridging document that would merge two corpus clusters is assigned to its
 single BEST match's group (max jaccard, ties to the smallest corpus
 doc_id — ``stream_neardup``'s verdict rule); a batch re-run would merge
 and relabel the union. Streaming admission must not mutate history, so
 the merge is deferred to the next batch re-label — the docstring-qualified
-stability trade in dedup.corpus_split applies here in reverse.
+stability trade in dedup.corpus_split applies here in reverse. A second
+divergence follows from the core's cap policy (``analytics.dedup``
+section 3): the corpus labels come from the uncapped pair graph, while
+arrival matching is capped at SHINGLE_DF_CAP, so an arrival whose
+similarity is carried by boilerplate shingles can stay a singleton where
+a batch re-run would group it.
 
 Scale shape at 10^10 documents: the probe/verify stages are
 ``stream_neardup``'s (stream-static band equi-join + candidate-only exact
 Jaccard over discriminative shingles, one grouped agg back to document
 grain). On top of that: a synthetic self-candidate row per document
 (union before the agg, so unmatched docs flow through the SAME single
-aggregation instead of needing a streaming outer join), one broadcast-able
-stream-static left join against the corpus label snapshot, and the same
-md5-mod-100 bucket expression as the batch query — zero additional state.
+aggregation instead of needing a streaming outer join), one stream-static
+left join against the corpus label snapshot (broadcast only while the
+planner estimates it small), and the same md5-mod-100 bucket expression
+as the batch query — zero additional state.
 
 Parity contract (test_streaming.py): complete-mode stream == batch twin
 row-for-row; matched arrivals inherit their corpus group's split exactly
@@ -50,8 +57,12 @@ from ..analytics.dedup import (
     JACCARD_T,
     SPLIT_TRAIN_PCT,
     SPLIT_VALID_PCT,
+    _arrival_matches,
+    _best_match,
+    _lsh_pairs,
     _star_labels,
 )
+from ..schemas import DOCUMENTS_SCHEMA
 from . import stream_neardup
 
 _BUCKET = (
@@ -59,51 +70,18 @@ _BUCKET = (
 )
 
 
-def corpus_pairs(corpus: DataFrame) -> DataFrame:
-    """Exact-verified near-dup pairs among corpus docs, built from the same
-    per-row array-fold signature machinery as the stream side (no sf_dir
-    dependency): band self-join on the packed key, array_intersect verify
-    over distinct shingle hashes, threshold at JACCARD_T."""
-    b = stream_neardup._bands(stream_neardup._signatures(corpus))
-    left = b.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("n_sh").alias("n_a"),
-        "band",
-        "band_key",
-    )
-    right = b.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
-        "band",
-        "band_key",
-    )
-    cand = (
-        left.join(right, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("n_inter", F.expr("size(array_intersect(sh_a, sh_b))"))
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= JACCARD_T)
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return cand
-
-
 def build_split_state(spark: SparkSession, corpus: DataFrame):
     """Frozen admission state: (near-dup index triple, corpus label map).
 
     The label map is (dup_of, group_id) — component labels over the corpus
-    near-dup graph, exactly what ``_component_labels`` snapshots for the
-    batch consumers; here it is rebuilt from the corpus DataFrame so the
-    streaming tier has no sf_dir dependency."""
+    near-dup graph, built by the same batch pair plan (``dedup._lsh_pairs``)
+    and star labeling that ``_component_labels`` snapshots for the batch
+    consumers; here it runs on the corpus DataFrame so the streaming tier
+    has no sf_dir dependency. Cache and materialize the returned frames:
+    only then does the planner know the label map's real size, which
+    decides whether its join broadcasts."""
     band_index, shingle_sets, hot_row = stream_neardup.build_index(spark, corpus)
-    labels = _star_labels(corpus_pairs(corpus)).select(
+    labels = _star_labels(_lsh_pairs(corpus).select("doc_a", "doc_b")).select(
         F.col("doc").alias("dup_of"), F.col("label").alias("group_id")
     )
     return band_index, shingle_sets, hot_row, labels
@@ -116,48 +94,23 @@ def _assignment(
     hot_row: DataFrame,
     labels: DataFrame,
 ) -> DataFrame:
-    """Shared plan for both engines: near-dup candidates UNION a synthetic
-    self-candidate per doc (jaccard 0, dup_of = doc_id) -> one best-match
-    agg -> label lookup -> bucket. The self row only wins when no real
-    match ≥ JACCARD_T exists, making 'unmatched' flow through the same
-    aggregation instead of a streaming-hostile outer join."""
-    sigs = stream_neardup._signatures(docs)
-    cand = (
-        stream_neardup._bands(sigs)
-        .join(band_index, ["band", "band_key"])
-        .crossJoin(F.broadcast(hot_row))
-        .withColumn("sh", F.expr("array_except(sh, hot)"))
-        .withColumn("n_sh", F.expr("size(sh)"))
-        .join(shingle_sets, "dup_of")
-        .withColumn("n_inter", F.expr("size(array_intersect(sh, sh_old))"))
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_sh") + F.col("n_old") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= JACCARD_T)
-        .select("doc_id", "dup_of", "jaccard")
-    )
-    self_rows = sigs.select(
+    """Shared plan for both engines: ``stream_neardup``'s scoring
+    (``dedup._arrival_matches``) UNION a synthetic self-candidate per doc
+    (jaccard 0, dup_of = doc_id) -> one best-match agg -> label lookup ->
+    bucket. The self row only wins when no real match ≥ JACCARD_T exists,
+    making 'unmatched' flow through the same aggregation instead of a
+    streaming-hostile outer join."""
+    self_rows = docs.select(
         "doc_id", F.col("doc_id").alias("dup_of"), F.lit(0.0).alias("jaccard")
     )
-    best = (
-        cand.unionByName(self_rows)
-        .groupBy("doc_id")
-        .agg(
-            F.max(
-                F.struct(F.col("jaccard"), (-F.col("dup_of")).alias("nd"))
-            ).alias("b")
-        )
-        .select(
-            "doc_id",
-            (-F.col("b.nd")).alias("dup_of"),
-            (F.col("b.jaccard") >= JACCARD_T).alias("matched"),
-        )
-    )
+    best = _best_match(
+        _arrival_matches(docs, band_index, shingle_sets, hot_row).unionByName(self_rows)
+    ).withColumn("matched", F.col("jaccard") >= JACCARD_T)
     # an unmatched doc is its own group even when its doc_id collides with a
-    # clustered corpus doc's id (its self row's dup_of would hit that label)
-    assigned = best.join(F.broadcast(labels), "dup_of", "left").select(
+    # clustered corpus doc's id (its self row's dup_of would hit that label).
+    # No broadcast hint: the label map grows with the corpus, so the
+    # planner's size estimate decides
+    assigned = best.join(labels, "dup_of", "left").select(
         "doc_id",
         "matched",
         F.when(F.col("matched"), F.coalesce("group_id", "dup_of"))
@@ -177,11 +130,11 @@ def _assignment(
 
 
 def split_stream(spark: SparkSession, src_dir: str, state) -> DataFrame:
-    docs = spark.readStream.schema(stream_neardup.DOC_SCHEMA).parquet(src_dir)
+    docs = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(src_dir)
     return _assignment(docs, *state)
 
 
 def split_batch(spark: SparkSession, src_dir: str, state) -> DataFrame:
     """Batch twin over the same source directory — the parity oracle."""
-    docs = spark.read.schema(stream_neardup.DOC_SCHEMA).parquet(src_dir)
+    docs = spark.read.schema(DOCUMENTS_SCHEMA).parquet(src_dir)
     return _assignment(docs, *state)
