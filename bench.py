@@ -35,9 +35,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 HEADLINE = [
     "frontier_schedule",
-    "pricing_summary",
-    "ship_priority",
-    "region_volume",
     "hourly_rollup",
     "links_per_page",
     "first_occurrence",
@@ -191,6 +188,9 @@ def main() -> None:
     # values) go to a side artifact — NOT the emitted line (see module note)
     detail = {
         "query_runs": runs,
+        # cold first run: the label snapshot corpus_split builds (and
+        # its second run reads) — the min above reports the warm run
+        "corpus_split_cold_first_s": runs["corpus_split"][0],
         "crawl_runs": crawl_runs,
         "canary_sec": canary_sec(),
         "canary_start_sec": canary_start,

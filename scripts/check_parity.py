@@ -69,7 +69,9 @@ def main() -> int:
     ORACLES = {**ORACLES, **LOCAL_ORACLES}
     from web_crawler_spark.session import get_spark
 
-    spark = get_spark(app_name="selfcheck", master="local[8]", shuffle_partitions=8)
+    # no console progress bar: its `\r` redraws share lines with the OK rows
+    spark = get_spark(app_name="selfcheck", master="local[8]", shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"

@@ -19,9 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 AUDITS = {
     # name: (must_contain, must_not_contain)
-    "pricing_summary": (["PushedFilters: [IsNotNull(l_shipdate)"], ["Python"]),
-    "ship_priority": (["BroadcastHashJoin"], ["BatchEvalPython", "ArrowEvalPython"]),
-    "region_volume": (["BroadcastHashJoin"], ["BatchEvalPython", "ArrowEvalPython"]),
     "enrich_join": (["BroadcastHashJoin", "PushedFilters: [IsNotNull(o_orderstatus)"], ["Python"]),
     "frontier_schedule": ([], ["BatchEvalPython", "ArrowEvalPython"]),
     "links_per_page": ([], ["Exchange hashpartitioning"]),  # partial agg + AQE only shuffle once; checked loosely below

@@ -36,7 +36,6 @@ KNOWN_ROWS = {
     "export_stats": 1, "status_breakdown": 3, "topk_recent": 100,
     "linkgraph_sort": 500, "admission_cap": 500, "first_occurrence": 750,
     "content_stats": 500, "scalar_funcs": 15000, "json_extract": 4970,
-    "pricing_summary": 6, "ship_priority": 10, "region_volume": 25,
     "hourly_rollup": 3385, "session_rollup": 9858, "attribution_join": 33,
     "asof_join": 1981, "stratified_sample": 3771, "url_canonicalize": 10000,
     "dedup_exact": 500, "corpus_decontaminate": 310,

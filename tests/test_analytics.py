@@ -29,7 +29,7 @@ SF_DIR = "/root/testdata/sf0.001"
 # scripts/check_parity.py at sf0.01 (and by the external driver)
 PARITY_SUBSET = [
     "frontier_schedule",
-    "pricing_summary",
+    "links_per_page",
     "pages_per_job",
     "admission_cap",
     "dedup_exact",

@@ -7,18 +7,20 @@ Each property pins a contract the Spark plans rely on:
   image_phash_neardup's metadata-only plan assumes;
 - the byte-pair candidate rule's pigeonhole completeness for Hamming <=
   IMG_HAMMING_T (multimodal._PH_PAIRS) — the recall contract of the
-  bucketed phash join;
+  bucketed phash join — and the DuckDB oracles' block keys
+  (multimodal._sql_blocks) equal to Spark's on the same signed hashes;
 - merge_shard_minima == global k-minima over the shard union (the KMV
   stream/batch equivalence reduces to exactly this merge identity).
 """
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+import duckdb
 import numpy as np
 
 from test_core_pure import BASE, DOMAIN, reference_pipeline
-from web_crawler_spark.analytics.multimodal import IMG_HAMMING_T, _PH_PAIRS
+from web_crawler_spark.analytics.multimodal import IMG_HAMMING_T, _PH_PAIRS, _sql_blocks
 from web_crawler_spark.core import imagecodec
 from web_crawler_spark.core.urlnorm import canonicalize
 from web_crawler_spark.streaming.stream_kmv import KMV_K, merge_shard_minima
@@ -88,21 +90,47 @@ def test_wcsi_roundtrip_invariants(dims, fmt, seed):
     assert raised
 
 
+_U64 = (1 << 64) - 1
+
+
 def _byte_pair_keys(h64: int) -> set:
-    """Pure-Python twin of multimodal._pair_blocks' (k, blk) bucket keys."""
-    bts = [(h64 >> (8 * i)) & 0xFF for i in range(8)]
+    """Pure-Python twin of multimodal._pair_blocks' (k, blk) bucket keys
+    (shiftrightunsigned: the signed hash is read as its unsigned bits)."""
+    bts = [((h64 & _U64) >> (8 * i)) & 0xFF for i in range(8)]
     return {(k, bts[i] * 256 + bts[j]) for k, (i, j) in enumerate(_PH_PAIRS)}
 
 
-@given(st.integers(0, 2**64 - 1), st.sets(st.integers(0, 63), max_size=IMG_HAMMING_T))
+_DUCK = duckdb.connect()
+
+
+def _sql_byte_pair_keys(*hashes: int) -> list:
+    """The same keys from the oracles' DuckDB fragment over BIGINT hashes."""
+    _DUCK.execute("CREATE OR REPLACE TEMP TABLE hs(id INTEGER, h BIGINT)")
+    _DUCK.executemany("INSERT INTO hs VALUES (?, ?)", list(enumerate(hashes)))
+    out = [set() for _ in hashes]
+    for i, k, blk in _DUCK.execute(_sql_blocks("hs", "id", "h")).fetchall():
+        out[i].add((k, blk))
+    return out
+
+
+@given(st.integers(-(2**63), 2**63 - 1), st.sets(st.integers(0, 63), max_size=IMG_HAMMING_T))
+@example(0, set())
+@example(-1, set())
+@example(2**63 - 1, set())
+@example(-(2**63), set())
 @settings(max_examples=500, deadline=None)
 def test_phash_byte_pair_candidate_rule_complete(h64, flip_bits):
     # any pair within Hamming <= IMG_HAMMING_T must share >= 1 bucket key:
     # <= 6 flipped bits touch <= 6 of the 8 bytes, leaving a clean byte PAIR
-    other = h64
+    other = h64 & _U64
     for b in flip_bits:
         other ^= 1 << b
-    assert _byte_pair_keys(h64) & _byte_pair_keys(other)
+    other -= (other >> 63) << 64  # back to a signed int64, as the phash column holds it
+    keys = [_byte_pair_keys(h64), _byte_pair_keys(other)]
+    assert keys[0] & keys[1]
+    # the signed -> u64 HUGEINT path of the DuckDB oracles buckets the same
+    # hashes into the same (k, blk) keys as the Spark plan
+    assert _sql_byte_pair_keys(h64, other) == keys
 
 
 @given(

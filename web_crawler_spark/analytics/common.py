@@ -39,6 +39,26 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def sql_components(pairs_sql: str, a: str, b: str) -> str:
+    """DuckDB connected-components oracle, the twin of `dedup._star_labels`:
+    a parenthesized `(doc, label)` subquery over the undirected pair graph
+    (`a`, `b`) of *pairs_sql*, label = the minimum id reachable from doc by
+    a recursive CTE. Only ids that appear in some pair get a row."""
+    return f"""(
+  SELECT doc, min(r) AS label FROM (
+    WITH RECURSIVE
+    pairs AS (SELECT {a} AS a, {b} AS b FROM ({pairs_sql.replace(chr(10), ' ')}) p),
+    bi AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
+    reach(doc, r) AS (
+      SELECT DISTINCT a, a FROM bi
+      UNION
+      SELECT bi.b, reach.r FROM reach JOIN bi ON bi.a = reach.doc
+    )
+    SELECT doc, r FROM reach
+  ) GROUP BY doc
+)"""
+
+
 # Canonical tokenizer + per-word hash
 # -----------------------------------
 # ONE definition of the whitespace tokenizer and the md5-prefix word hash,
@@ -95,7 +115,7 @@ def sql_word_hash32(offset: int = 1) -> str:
 # Overflow bound: |group sum| must stay below 2^63/10^scale — 9.2e12 at the
 # default scale 6.  sf1 group sums here are ~1e10.  At a 100 TB corpus drop
 # `scale` to 2 (cent precision, bound 9.2e16) or pre-aggregate per partition;
-# the scale knob is threaded through all three helpers so Spark and the
+# the scale knob is threaded through both helpers so Spark and the
 # oracle move together.
 
 _DSUM_SCALE = 6
@@ -107,19 +127,14 @@ def _fx(expr, scale: int):
 
 def dsum(col, alias: str, scale: int = _DSUM_SCALE):
     """Order-independent SUM of a double column via long fixed-point."""
-    return dsum_expr(F.col(col), alias, scale)
-
-
-def dsum_expr(expr, alias: str, scale: int = _DSUM_SCALE):
-    """Like :func:`dsum` but over an arbitrary Column expression."""
     return (
-        (F.sum(_fx(expr, scale)).cast("double") / F.lit(float(10 ** scale)))
+        (F.sum(_fx(F.col(col), scale)).cast("double") / F.lit(float(10 ** scale)))
         .alias(alias)
     )
 
 
 def sql_dsum(expr: str, alias: str, scale: int = _DSUM_SCALE) -> str:
-    """DuckDB-side twin of :func:`dsum`/`dsum_expr` (same fixed-point units)."""
+    """DuckDB-side twin of :func:`dsum` (same fixed-point units)."""
     unit = float(10 ** scale)
     return (
         f"CAST(SUM(CAST(ROUND(({expr}) * {unit!r}, 0) AS BIGINT)) AS DOUBLE)"

@@ -29,7 +29,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import SQL_WORDS, WORDS as _WORDS, sql_word_hash32, table, word_hash32
+from .common import (
+    SQL_WORDS, WORDS as _WORDS, sql_components, sql_word_hash32, table, word_hash32,
+)
 
 N_HASHES = 16
 N_BANDS = 8
@@ -760,21 +762,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DEDUP_CLUSTERS = f"""
-SELECT doc_id, cluster_id,
-       CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
-FROM (
-  SELECT doc AS doc_id, min(r) AS cluster_id FROM (
-    WITH RECURSIVE
-    pairs AS (SELECT doc_a AS a, doc_b AS b FROM ({SQL_DEDUP_MINHASH_LSH.replace(chr(10), ' ')}) p),
-    bi AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-    reach(doc, r) AS (
-      SELECT DISTINCT a, a FROM bi
-      UNION
-      SELECT bi.b, reach.r FROM reach JOIN bi ON bi.a = reach.doc
-    )
-    SELECT doc, r FROM reach
-  ) GROUP BY doc
-)
+SELECT doc AS doc_id, label AS cluster_id,
+       CAST(count(*) OVER (PARTITION BY label) AS BIGINT) AS cluster_size
+FROM {sql_components(SQL_DEDUP_MINHASH_LSH, "doc_a", "doc_b")}
 """
 
 
@@ -1221,23 +1211,10 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_CORPUS_SPLIT = f"""
-WITH labels AS (
-  SELECT doc AS doc_id, min(r) AS label FROM (
-    WITH RECURSIVE
-    pairs AS (SELECT doc_a AS a, doc_b AS b
-              FROM ({SQL_DEDUP_MINHASH_LSH.replace(chr(10), ' ')}) p),
-    bi AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-    reach(doc, r) AS (
-      SELECT DISTINCT a, a FROM bi
-      UNION
-      SELECT bi.b, reach.r FROM reach JOIN bi ON bi.a = reach.doc
-    )
-    SELECT doc, r FROM reach
-  ) GROUP BY doc
-),
+WITH labels AS {sql_components(SQL_DEDUP_MINHASH_LSH, "doc_a", "doc_b")},
 grouped AS (
   SELECT d.doc_id, COALESCE(l.label, d.doc_id) AS group_id
-  FROM documents d LEFT JOIN labels l USING (doc_id)
+  FROM documents d LEFT JOIN labels l ON l.doc = d.doc_id
 )
 SELECT doc_id, group_id,
        CASE WHEN bucket < {SPLIT_TRAIN_PCT} THEN 'train'

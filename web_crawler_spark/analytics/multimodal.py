@@ -8,10 +8,6 @@ PIL/libvips changes only encode/decode). The Spark-side plumbing — binary
 through Arrow, batch shapes, schemas, partitioning — is real and is what
 these queries exercise.
 
-These are the non-SQL-expressible entries: no DuckDB oracle (binary payloads
-+ numpy decode), so the driver records the weaker rows-only check; exactness
-is covered by tests/test_payload.py and tests/test_analytics.py instead.
-
 The images/audio here are synthesized deterministically from
 `documents.doc_id` (one payload per doc, seed-keyed) — no external data, same
 shape as the input_hint images table.
@@ -44,7 +40,7 @@ from pyspark.sql import types as T
 from ..core import audiocodec, imagecodec, videocodec
 from ..functions import udfs
 from ..schemas import AUDIO_SCHEMA, IMAGES_SCHEMA, VIDEO_SCHEMA
-from .common import table
+from .common import sql_components, table
 
 N_IMAGES = 200  # images synthesized per run (first N doc_ids)
 
@@ -65,20 +61,33 @@ def _gen_partitions(spark: SparkSession, n_rows: int) -> int:
     return max(1, min(shuffle, -(-n_rows // _GEN_ROWS_PER_TASK)))
 
 
-def _images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic images table keyed on doc_id — exact input_hint shape."""
-    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(N_IMAGES)
+def _payloads(
+    spark: SparkSession, sf_dir: str, n: int, rows_of, schema: T.StructType
+) -> DataFrame:
+    """The one synthetic-payload generator: the first *n* documents' doc_ids,
+    spread over `_gen_partitions(spark, n)` tasks, each id expanded by the
+    per-id row function *rows_of(doc_id) -> list[dict]* in a mapInPandas
+    stage. The driver-side ground-truth builders (`_expected_*`) iterate the
+    same row functions over ids 0..n-1, pure-Python in-process."""
+    cols = schema.fieldNames()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                row = imagecodec.image_row(f"img-{doc_id}", seed=42)
-                row["caption"] = f"caption for img-{doc_id}"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
+            yield pd.DataFrame([r for d in pdf["doc_id"] for r in rows_of(int(d))], columns=cols)
 
-    return ids.repartition(_gen_partitions(spark, N_IMAGES), "doc_id").mapInPandas(gen, IMAGES_SCHEMA)
+    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(n)
+    return ids.repartition(_gen_partitions(spark, n), "doc_id").mapInPandas(gen, schema)
+
+
+def _image_rows(doc_id: int) -> list[dict]:
+    row = imagecodec.image_row(f"img-{doc_id}", seed=42)
+    row["caption"] = f"caption for img-{doc_id}"
+    return [row]
+
+
+def _images(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic images table keyed on doc_id — exact input_hint shape."""
+    return _payloads(spark, sf_dir, N_IMAGES, _image_rows, IMAGES_SCHEMA)
 
 
 # (the decode/validate/feature extractor lives in functions/udfs.py —
@@ -93,16 +102,13 @@ def _images(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_AUDIO = 200  # clips synthesized per run (first N doc_ids)
 
 
+def _audio_rows(doc_id: int) -> list[dict]:
+    return [audiocodec.audio_row(f"aud-{doc_id}", seed=42)]
+
+
 def _audios(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic audio table keyed on doc_id (WCSA clips, int16 PCM)."""
-    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(N_AUDIO)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [audiocodec.audio_row(f"aud-{doc_id}", seed=42) for doc_id in pdf["doc_id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_SCHEMA.fields])
-
-    return ids.repartition(_gen_partitions(spark, N_AUDIO), "doc_id").mapInPandas(gen, AUDIO_SCHEMA)
+    return _payloads(spark, sf_dir, N_AUDIO, _audio_rows, AUDIO_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -177,16 +183,13 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_VIDEO = 100  # clips synthesized per run (first N doc_ids); ~25k frames total
 
 
+def _video_rows(doc_id: int) -> list[dict]:
+    return [videocodec.video_row(f"vid-{doc_id}", seed=42)]
+
+
 def _videos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic video table keyed on doc_id (WCSV multi-frame clips)."""
-    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(N_VIDEO)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [videocodec.video_row(f"vid-{doc_id}", seed=42) for doc_id in pdf["doc_id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_SCHEMA.fields])
-
-    return ids.repartition(_gen_partitions(spark, N_VIDEO), "doc_id").mapInPandas(gen, VIDEO_SCHEMA)
+    return _payloads(spark, sf_dir, N_VIDEO, _video_rows, VIDEO_SCHEMA)
 
 
 VIDEO_FEATURES_SCHEMA = T.StructType(
@@ -336,7 +339,7 @@ _PH_PAIRS = [(i, j) for i in range(8) for j in range(i + 1, 8)]
 
 def _pair_blocks(df: DataFrame, idcol: str, phcol: str, keep: tuple = ()) -> DataFrame:
     """28 (k, blk) index rows per hash. `keep` carries extra columns through
-    the explode — the streaming probe needs the phash alongside its blocks,
+    the explode — a streaming probe needs the phash alongside its blocks,
     because joining the candidate set back to a second branch of the same
     stream would be a (forbidden-in-complete-mode) stream-stream join."""
     structs = [
@@ -363,7 +366,12 @@ def _hamming_pairs(
     block self-join yields candidates, and the exact bit_count(xor) verify
     runs on candidates only. All flat codegen expressions, one shuffle for
     the block self-join — the shape that survives 10^10 rows because bucket
-    sizes are set by the 16-bit key width, not the corpus."""
+    sizes are set by the 16-bit key width, not the corpus.
+
+    Self-pairs keep this plan rather than `_hamming_probe(sig, sig)` +
+    `a < b`: that variant finds the same pairs but lost all 5 alternating
+    runs for each modality at sf0.01, `local[4]` (medians 1.2-1.4x slower;
+    CHANGES.md has the table)."""
     sig = sig.localCheckpoint(eager=True)  # feeds blocks + both pair sides once
     blocks = _pair_blocks(sig, idcol, hcol)
     cand = (
@@ -384,25 +392,51 @@ def _hamming_pairs(
     )
 
 
+def _index_blocks(index: DataFrame) -> DataFrame:
+    """Static side of `_hamming_probe`: (index_id, phash) block-exploded into
+    (index_id, ph_i, k, blk), the hash carried through as ph_i. At 10^10
+    indexed images this is a bucketed table on (k, blk)."""
+    idx = index.select("index_id", F.col("phash").alias("ph_i"))
+    return _pair_blocks(idx, "index_id", "ph_i", keep=("ph_i",))
+
+
+def _hamming_probe(probe: DataFrame, index: DataFrame, t: int) -> DataFrame:
+    """The one probe of a phash set against a static index, shared by the
+    batch (`image_decontaminate`) and streaming (`stream_phash`) plans — the
+    stream-static shape of "Distributed Streaming Set Similarity Join"
+    (ICDE 2020): a partitioned index that the probe side looks up.
+
+    ``probe``: (image_id, phash), batch or streaming; ``index``: (index_id,
+    phash), static. Both sides carry their hash through the 28-key explode,
+    so ONE equi-join on (k, blk) feeds the exact bit_count(xor) verify with
+    no join back to a second branch of the probe (which a stream could not
+    do). Returns one row per (image_id, index_id) within Hamming <= *t*,
+    self matches excluded; min() only collapses the multi-block duplicate
+    candidates (hamming is constant per pair)."""
+    blocks = _pair_blocks(
+        probe.select("image_id", F.col("phash").alias("ph_p")), "image_id", "ph_p", keep=("ph_p",)
+    )
+    return (
+        blocks.join(_index_blocks(index), ["k", "blk"])
+        .withColumn("hamming", F.bit_count(F.col("ph_p").bitwiseXOR(F.col("ph_i"))).cast("int"))
+        .filter((F.col("hamming") <= t) & (F.col("image_id") != F.col("index_id")))
+        .groupBy("image_id", "index_id")
+        .agg(F.min("hamming").alias("hamming"))
+    )
+
+
+def _variant_rows(doc_id: int) -> list[dict]:
+    rows = _image_rows(doc_id)
+    if doc_id % VARIANT_EVERY == 0:
+        v = imagecodec.variant_row(f"img-{doc_id}", seed=42)
+        rows.append({**v, "caption": rows[0]["caption"]})
+    return rows
+
+
 def _images_with_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Images table plus planted near-duplicate variants (``img-{id}-v`` with
     perturbed pixels) so phash dedup has genuine near-dup structure to find."""
-    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(N_IMAGES)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                row = imagecodec.image_row(f"img-{doc_id}", seed=42)
-                row["caption"] = f"caption for img-{doc_id}"
-                rows.append(row)
-                if int(doc_id) % VARIANT_EVERY == 0:
-                    v = imagecodec.variant_row(f"img-{doc_id}", seed=42)
-                    v["caption"] = f"caption for img-{doc_id}"
-                    rows.append(v)
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
-
-    return ids.repartition(_gen_partitions(spark, N_IMAGES), "doc_id").mapInPandas(gen, IMAGES_SCHEMA)
+    return _payloads(spark, sf_dir, N_IMAGES, _variant_rows, IMAGES_SCHEMA)
 
 
 def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,6 +476,20 @@ _VFP_SCHEMA = T.StructType(
 )
 
 
+def _afp_rows(doc_id: int) -> list[dict]:
+    clips = _audio_rows(doc_id)
+    if doc_id % VARIANT_EVERY == 0:
+        clips.append(audiocodec.variant_row(clips[0]["audio_id"], seed=42))
+    return [{"audio_id": c["audio_id"], "afp": audiocodec.fingerprint_of(c["bytes"])} for c in clips]
+
+
+def _vfp_rows(doc_id: int) -> list[dict]:
+    clips = _video_rows(doc_id)
+    if doc_id % VARIANT_EVERY == 0:
+        clips.append(videocodec.variant_row(clips[0]["video_id"], seed=42))
+    return [{"video_id": c["video_id"], "vhash": videocodec.vhash64(c["bytes"])} for c in clips]
+
+
 def _audio_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(audio_id, afp) signature table for base clips + planted near-dup
     variants (every VARIANT_EVERY'th base gets an ``{id}-v`` with perturbed
@@ -449,20 +497,7 @@ def _audio_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     step inlined (the sandbox AUDIO_SCHEMA carries no afp column the way the
     input_hint images table carries phash): ONE decode per clip here, and
     the dedup plan downstream is metadata-only — it never touches bytes."""
-    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(N_AUDIO)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                aid = f"aud-{doc_id}"
-                rows.append((aid, audiocodec.fingerprint_of(audiocodec.audio_row(aid, seed=42)["bytes"])))
-                if int(doc_id) % VARIANT_EVERY == 0:
-                    v = audiocodec.variant_row(aid, seed=42)
-                    rows.append((v["audio_id"], audiocodec.fingerprint_of(v["bytes"])))
-            yield pd.DataFrame(rows, columns=["audio_id", "afp"])
-
-    return ids.repartition(_gen_partitions(spark, N_AUDIO), "doc_id").mapInPandas(gen, _AFP_SCHEMA)
+    return _payloads(spark, sf_dir, N_AUDIO, _afp_rows, _AFP_SCHEMA)
 
 
 def _video_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,20 +506,7 @@ def _video_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     temporal-mean phash of the SAMPLED frames — the fingerprint costs the
     same O(N_SAMPLE) partial decode the feature pass already pays at ingest;
     the dedup plan downstream never decodes anything."""
-    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(N_VIDEO)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                vid = f"vid-{doc_id}"
-                rows.append((vid, videocodec.vhash64(videocodec.video_row(vid, seed=42)["bytes"])))
-                if int(doc_id) % VARIANT_EVERY == 0:
-                    v = videocodec.variant_row(vid, seed=42)
-                    rows.append((v["video_id"], videocodec.vhash64(v["bytes"])))
-            yield pd.DataFrame(rows, columns=["video_id", "vhash"])
-
-    return ids.repartition(_gen_partitions(spark, N_VIDEO), "doc_id").mapInPandas(gen, _VFP_SCHEMA)
+    return _payloads(spark, sf_dir, N_VIDEO, _vfp_rows, _VFP_SCHEMA)
 
 
 def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,11 +536,36 @@ def video_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IMG_DECON_MOD = 10  # base image ids with n % MOD == 0 form the benchmark set
 
-# byte i of a signed int64 phash, as logical shift via HUGEINT
+# a signed int64 column {c} as its unsigned 64-bit value (HUGEINT), so that
+# integer division by 2^(8i) is the logical shift Spark's shiftrightunsigned does
 _SQL_U64 = (
-    "(CAST(phash AS HUGEINT) + CASE WHEN phash < 0 "
+    "(CAST({c} AS HUGEINT) + CASE WHEN {c} < 0 "
     "THEN CAST(18446744073709551616 AS HUGEINT) ELSE CAST(0 AS HUGEINT) END)"
 )
+
+
+def _sql_blocks(src: str, idcol: str, hcol: str) -> str:
+    """DuckDB twin of `_pair_blocks`: the 28 (k, blk) byte-pair keys of every
+    64-bit hash *hcol* in *src*, numbered by `_PH_PAIRS` exactly as in Spark."""
+    u64 = _SQL_U64.format(c=hcol)
+    byte = lambda i: f"(({u64} // (CAST(1 AS HUGEINT) << (8 * {i}))) % 256)"  # noqa: E731
+    pairs = ", ".join(f"({k}, {i}, {j})" for k, (i, j) in enumerate(_PH_PAIRS))
+    return (
+        f"SELECT {idcol}, k, CAST({byte('i')} * 256 + {byte('j')} AS BIGINT) AS blk\n"
+        f"  FROM {src}, (VALUES {pairs}) AS pp(k, i, j)"
+    )
+
+
+def _image_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc=image_id, label) star labels of the phash near-dup pair graph,
+    near-dup members only — the Spark twin of the `sql_components` oracle
+    over `_sql_image_pairs`."""
+    from .dedup import _star_labels
+
+    pairs = image_phash_neardup(spark, sf_dir).select(
+        F.col("img_a").alias("doc_a"), F.col("img_b").alias("doc_b")
+    )
+    return _star_labels(pairs)
 
 
 def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -534,14 +581,9 @@ def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically in Spark and DuckDB). Every labeled node is in >= 1 pair, so
     every reported cluster has >= 2 members by construction. The DuckDB
     oracle is a recursive CTE over the identical pair set."""
-    from .dedup import _star_labels
-
-    pairs = image_phash_neardup(spark, sf_dir).select(
-        F.col("img_a").alias("doc_a"), F.col("img_b").alias("doc_b")
-    )
-    labels = _star_labels(pairs)
     return (
-        labels.groupBy(F.col("label").alias("keeper_id"))
+        _image_labels(spark, sf_dir)
+        .groupBy(F.col("label").alias("keeper_id"))
         .agg(F.count("*").alias("n_images"), F.max("doc").alias("last_member"))
     )
 
@@ -559,13 +601,8 @@ def image_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     then minimum-resolution and aspect-ratio gates on the metadata columns,
     with drop-reason precedence. No decode anywhere in the plan; at 10^10
     images the only wide ops are the bucketed pair join and one label join."""
-    from .dedup import _star_labels
-
     imgs = _images_with_variants(spark, sf_dir).select("image_id", "w", "h", "phash")
-    pairs = image_phash_neardup(spark, sf_dir).select(
-        F.col("img_a").alias("doc_a"), F.col("img_b").alias("doc_b")
-    )
-    labels = _star_labels(pairs)
+    labels = _image_labels(spark, sf_dir)
     reason = (
         F.when(
             F.col("label").isNotNull() & (F.col("label") != F.col("image_id")),
@@ -795,11 +832,12 @@ def image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
 def image_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-side benchmark decontamination: flag training images within
     phash Hamming <= IMG_HAMMING_T of ANY held-out benchmark image — the
-    multimodal twin of `corpus_decontaminate`. Same byte-pair block-bucket
-    candidate rule as image_phash_neardup (complete for the threshold), so
-    the probe is a bounded equi-join against the (small, broadcastable at
-    scale) benchmark block table — never an all-pairs scan. The planted
-    `img-N-v` variants of benchmark images are the ground-truth hits."""
+    multimodal twin of `corpus_decontaminate`. The training images probe the
+    benchmark images through `_hamming_probe` (the same byte-pair block rule
+    as image_phash_neardup, complete for the threshold), so the probe is a
+    bounded equi-join against the (small, broadcastable at scale) benchmark
+    block table — never an all-pairs scan. The planted `img-N-v` variants
+    of benchmark images are the ground-truth hits."""
     sig = (
         _images_with_variants(spark, sf_dir)
         .select("image_id", "phash")
@@ -808,48 +846,26 @@ def image_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_bench = (~F.col("image_id").endswith("-v")) & (
         F.regexp_extract("image_id", r"img-(\d+)", 1).cast("long") % IMG_DECON_MOD == 0
     )
-    bench = sig.filter(is_bench).select(
-        F.col("image_id").alias("bench_id"), F.col("phash").alias("bph")
-    )
-    train = sig.filter(~is_bench)
-
-    cand = (
-        _pair_blocks(train, "image_id", "phash")
-        .join(
-            _pair_blocks(bench.withColumnRenamed("bph", "phash"), "bench_id", "phash"),
-            ["k", "blk"],
-        )
-        .select("image_id", "bench_id")
-        .distinct()
-    )
+    bench = sig.filter(is_bench).select(F.col("image_id").alias("index_id"), "phash")
     return (
-        cand.join(train, "image_id")
-        .join(bench, "bench_id")
-        .withColumn(
-            "hamming", F.bit_count(F.col("phash").bitwiseXOR(F.col("bph"))).cast("int")
-        )
-        .filter(F.col("hamming") <= IMG_HAMMING_T)
+        _hamming_probe(sig.filter(~is_bench), bench, IMG_HAMMING_T)
         .groupBy("image_id")
         .agg(
             F.count("*").alias("n_bench_hits"),
             F.min("hamming").alias("best_hamming"),
-            F.min("bench_id").alias("first_bench"),
+            F.min("index_id").alias("first_bench"),
         )
         .orderBy("image_id")
     )
 
 
-SQL_IMAGE_DECONTAMINATE = f"""
+@functools.lru_cache(maxsize=None)
+def _sql_image_decontaminate() -> str:
+    return f"""
 WITH expected(image_id, phash) AS (
-  VALUES {{values}}
+  VALUES {_values(_expected_phashes())}
 ),
-sel AS (SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id, doc_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {{n_images}})),
-ids AS (
-  SELECT image_id FROM sel
-  UNION ALL
-  SELECT image_id || '-v' FROM sel WHERE doc_id % {{variant_every}} = 0
-),
+{_sql_variant_ids(N_IMAGES)},
 ph AS (SELECT image_id, phash FROM ids JOIN expected USING (image_id)),
 bench AS (
   SELECT image_id AS bench_id, phash AS bph FROM ph
@@ -859,30 +875,8 @@ bench AS (
 train AS (
   SELECT * FROM ph WHERE image_id NOT IN (SELECT bench_id FROM bench)
 ),
-tblk AS (
-  SELECT image_id, i * 8 + j AS k,
-         CAST((({_SQL_U64} // (CAST(1 AS HUGEINT) << (8 * i))) % 256) * 256
-            + (({_SQL_U64} // (CAST(1 AS HUGEINT) << (8 * j))) % 256) AS BIGINT) AS blk
-  FROM train, (SELECT i, j
-               FROM (SELECT unnest(generate_series(0, 7)) AS i),
-                    (SELECT unnest(generate_series(0, 7)) AS j)
-               WHERE i < j)
-),
-bu AS (
-  SELECT bench_id,
-         (CAST(bph AS HUGEINT) + CASE WHEN bph < 0
-          THEN CAST(18446744073709551616 AS HUGEINT) ELSE CAST(0 AS HUGEINT) END) AS u64
-  FROM bench
-),
-bblk AS (
-  SELECT bench_id, i * 8 + j AS k,
-         CAST(((u64 // (CAST(1 AS HUGEINT) << (8 * i))) % 256) * 256
-            + ((u64 // (CAST(1 AS HUGEINT) << (8 * j))) % 256) AS BIGINT) AS blk
-  FROM bu, (SELECT i, j
-            FROM (SELECT unnest(generate_series(0, 7)) AS i),
-                 (SELECT unnest(generate_series(0, 7)) AS j)
-            WHERE i < j)
-),
+tblk AS ({_sql_blocks("train", "image_id", "phash")}),
+bblk AS ({_sql_blocks("bench", "bench_id", "bph")}),
 cand AS (
   SELECT DISTINCT t.image_id, b.bench_id
   FROM tblk t JOIN bblk b ON t.k = b.k AND t.blk = b.blk
@@ -903,75 +897,36 @@ ORDER BY c.image_id
 @functools.lru_cache(maxsize=None)
 def _expected_phashes() -> list[tuple]:
     """Driver-side (image_id, phash) ground truth for base + variant images."""
-    out = []
-    for i in range(N_IMAGES):
-        iid = f"img-{i}"
-        out.append((iid, imagecodec.image_row(iid, seed=42)["phash"]))
-        if i % VARIANT_EVERY == 0:
-            v = imagecodec.variant_row(iid, seed=42)
-            out.append((v["image_id"], v["phash"]))
-    return out
+    return [(r["image_id"], r["phash"]) for i in range(N_IMAGES) for r in _variant_rows(i)]
 
 
 @functools.lru_cache(maxsize=None)
 def _expected_afps() -> list[tuple]:
     """Driver-side (audio_id, fingerprint) ground truth for base + variant
     clips — same pure-Python codec path as the executors, decoded bytes in."""
-    out = []
-    for i in range(N_AUDIO):
-        aid = f"aud-{i}"
-        out.append((aid, audiocodec.fingerprint_of(audiocodec.audio_row(aid, seed=42)["bytes"])))
-        if i % VARIANT_EVERY == 0:
-            v = audiocodec.variant_row(aid, seed=42)
-            out.append((v["audio_id"], audiocodec.fingerprint_of(v["bytes"])))
-    return out
+    return [(r["audio_id"], r["afp"]) for i in range(N_AUDIO) for r in _afp_rows(i)]
 
 
 @functools.lru_cache(maxsize=None)
 def _expected_vhashes() -> list[tuple]:
     """Driver-side (video_id, vhash) ground truth for base + variant clips."""
-    out = []
-    for i in range(N_VIDEO):
-        vid = f"vid-{i}"
-        out.append((vid, videocodec.vhash64(videocodec.video_row(vid, seed=42)["bytes"])))
-        if i % VARIANT_EVERY == 0:
-            v = videocodec.variant_row(vid, seed=42)
-            out.append((v["video_id"], videocodec.vhash64(v["bytes"])))
-    return out
+    return [(r["video_id"], r["vhash"]) for i in range(N_VIDEO) for r in _vfp_rows(i)]
 
 
-def _sql_av_neardup(rows: list[tuple], prefix: str, n: int, a: str, b: str, t: int) -> str:
-    """Near-dup oracle for a (id, 64-bit fingerprint) modality: the expected
-    fingerprints (driver-side pure-Python codec) are inlined as VALUES and
-    joined against the actual documents id prefix (an id drift fails loudly);
-    the SQL then mirrors the SAME 28-byte-pair candidate rule + exact
-    bit_count verify as `_hamming_pairs`, so both engines see identical
-    pairs by construction."""
-    u64 = (
-        "(CAST(fp AS HUGEINT) + CASE WHEN fp < 0 "
-        "THEN CAST(18446744073709551616 AS HUGEINT) ELSE CAST(0 AS HUGEINT) END)"
-    )
+def _sql_hamming_pairs(rows: list[tuple], prefix: str, n: int, a: str, b: str, t: int) -> str:
+    """Near-dup oracle for a (id, 64-bit fingerprint) modality — images,
+    audio and video: the expected fingerprints (driver-side pure-Python
+    codec) are inlined as VALUES and joined against the actual documents id
+    prefix (an id drift fails loudly); the SQL then mirrors the SAME
+    28-byte-pair candidate rule + exact bit_count verify as `_hamming_pairs`,
+    so both engines see identical pairs by construction."""
     return f"""
 WITH expected(id, fp) AS (
   VALUES {_values(rows)}
 ),
-sel AS (SELECT '{prefix}-' || CAST(doc_id AS VARCHAR) AS id, doc_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {n})),
-ids AS (
-  SELECT id FROM sel
-  UNION ALL
-  SELECT id || '-v' FROM sel WHERE doc_id % {VARIANT_EVERY} = 0
-),
+{_sql_variant_ids(n, prefix, "id")},
 fp AS (SELECT id, fp FROM ids JOIN expected USING (id)),
-blk AS (
-  SELECT id, i * 8 + j AS k,
-         CAST((({u64} // (CAST(1 AS HUGEINT) << (8 * i))) % 256) * 256
-            + (({u64} // (CAST(1 AS HUGEINT) << (8 * j))) % 256) AS BIGINT) AS blk
-  FROM fp, (SELECT i, j
-            FROM (SELECT unnest(generate_series(0, 7)) AS i),
-                 (SELECT unnest(generate_series(0, 7)) AS j)
-            WHERE i < j)
-),
+blk AS ({_sql_blocks("fp", "id", "fp")}),
 cand AS (
   SELECT DISTINCT x.id AS ia, y.id AS ib
   FROM blk x JOIN blk y ON x.k = y.k AND x.blk = y.blk AND x.id < y.id
@@ -983,6 +938,13 @@ JOIN fp pa ON pa.id = c.ia
 JOIN fp pb ON pb.id = c.ib
 WHERE bit_count(xor(pa.fp, pb.fp)) <= {t}
 """
+
+
+@functools.lru_cache(maxsize=None)
+def _sql_image_pairs() -> str:
+    return _sql_hamming_pairs(
+        _expected_phashes(), "img", N_IMAGES, "img_a", "img_b", IMG_HAMMING_T
+    )
 
 
 @functools.lru_cache(maxsize=None)
@@ -1003,50 +965,8 @@ def _expected_thumbs() -> list[tuple]:
 
 @functools.lru_cache(maxsize=None)
 def _expected_dims() -> list[tuple]:
-    """Driver-side (image_id, w, h) ground truth for base + variant images
-    (a variant keeps its base's dimensions — imagecodec.variant_row)."""
-    out = []
-    for i in range(N_IMAGES):
-        iid = f"img-{i}"
-        r = imagecodec.image_row(iid, seed=42)
-        out.append((iid, r["w"], r["h"]))
-        if i % VARIANT_EVERY == 0:
-            out.append((f"{iid}-v", r["w"], r["h"]))
-    return out
-
-
-SQL_IMAGE_PHASH_NEARDUP = f"""
-WITH expected(image_id, phash) AS (
-  VALUES {{values}}
-),
-sel AS (SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id, doc_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_IMAGES})),
-ids AS (
-  SELECT image_id FROM sel
-  UNION ALL
-  SELECT image_id || '-v' FROM sel WHERE doc_id % {VARIANT_EVERY} = 0
-),
-ph AS (SELECT image_id, phash FROM ids JOIN expected USING (image_id)),
-blk AS (
-  SELECT image_id, i * 8 + j AS k,
-         CAST((({_SQL_U64} // (CAST(1 AS HUGEINT) << (8 * i))) % 256) * 256
-            + (({_SQL_U64} // (CAST(1 AS HUGEINT) << (8 * j))) % 256) AS BIGINT) AS blk
-  FROM ph, (SELECT i, j
-            FROM (SELECT unnest(generate_series(0, 7)) AS i),
-                 (SELECT unnest(generate_series(0, 7)) AS j)
-            WHERE i < j)
-),
-cand AS (
-  SELECT DISTINCT a.image_id AS img_a, b.image_id AS img_b
-  FROM blk a JOIN blk b ON a.k = b.k AND a.blk = b.blk AND a.image_id < b.image_id
-)
-SELECT c.img_a, c.img_b,
-       CAST(bit_count(xor(pa.phash, pb.phash)) AS INT) AS hamming
-FROM cand c
-JOIN ph pa ON pa.image_id = c.img_a
-JOIN ph pb ON pb.image_id = c.img_b
-WHERE bit_count(xor(pa.phash, pb.phash)) <= {IMG_HAMMING_T}
-"""
+    """Driver-side (image_id, w, h) ground truth for base + variant images."""
+    return [(r["image_id"], r["w"], r["h"]) for i in range(N_IMAGES) for r in _variant_rows(i)]
 
 
 # ---------------------------------------------------------------------------
@@ -1143,10 +1063,22 @@ def _expected_video_metrics() -> list[tuple]:
     return out
 
 
-def _img_sel(n: int) -> str:
+def _sql_sel(n: int, prefix: str = "img", idcol: str = "image_id") -> str:
+    """`sel` CTE: the first *n* documents' (doc_id, '{prefix}-{doc_id}')."""
     return (
-        f"sel AS (SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id\n"
+        f"sel AS (SELECT doc_id, '{prefix}-' || CAST(doc_id AS VARCHAR) AS {idcol}\n"
         f"       FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {n}))"
+    )
+
+
+def _sql_variant_ids(n: int, prefix: str = "img", idcol: str = "image_id") -> str:
+    """`sel` plus `ids`: every selected id and, for every VARIANT_EVERY-th
+    doc, its '-v' variant. The rule is restated here rather than read from
+    the generator, so the oracle still checks the Spark/Arrow plumbing."""
+    return (
+        f"{_sql_sel(n, prefix, idcol)},\n"
+        f"ids AS (SELECT {idcol} FROM sel UNION ALL\n"
+        f"        SELECT {idcol} || '-v' FROM sel WHERE doc_id % {VARIANT_EVERY} = 0)"
     )
 
 
@@ -1169,8 +1101,7 @@ WITH expected(audio_id, fmt, sr, n_samples, decode_ok, samples_ok, duration_s,
               rms, peak, n_clipped, zero_crossings) AS (
   VALUES {_values(_expected_audio_metrics())}
 ),
-sel AS (SELECT 'aud-' || CAST(doc_id AS VARCHAR) AS audio_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_AUDIO}))
+{_sql_sel(N_AUDIO, "aud", "audio_id")}
 SELECT fmt, count(*) AS n_clips,
        CAST(sum(decode_ok) AS BIGINT) AS decode_pass,
        CAST(sum(samples_ok) AS BIGINT) AS samples_pass,
@@ -1193,8 +1124,7 @@ WITH expected(video_id, fmt, fps, n_frames, n_sampled, decode_ok, frames_ok,
               duration_s, brightness, motion) AS (
   VALUES {_values(_expected_video_metrics())}
 ),
-sel AS (SELECT 'vid-' || CAST(doc_id AS VARCHAR) AS video_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_VIDEO}))
+{_sql_sel(N_VIDEO, "vid", "video_id")}
 SELECT fmt, count(*) AS n_videos,
        CAST(sum(decode_ok) AS BIGINT) AS decode_pass,
        CAST(sum(frames_ok) AS BIGINT) AS frames_pass,
@@ -1219,8 +1149,7 @@ WITH expected(audio_id, fmt, sr, n_samples, decode_ok, samples_ok, duration_s,
               rms, peak, n_clipped, zero_crossings) AS (
   VALUES {_values(_expected_audio_metrics())}
 ),
-sel AS (SELECT 'aud-' || CAST(doc_id AS VARCHAR) AS audio_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_AUDIO})),
+{_sql_sel(N_AUDIO, "aud", "audio_id")},
 v AS (
   SELECT e.audio_id, e.fmt, e.duration_s,
          CASE WHEN e.decode_ok = 0 THEN 'decode_failed'
@@ -1243,8 +1172,7 @@ WITH expected(video_id, fmt, fps, n_frames, n_sampled, decode_ok, frames_ok,
               duration_s, brightness, motion) AS (
   VALUES {_values(_expected_video_metrics())}
 ),
-sel AS (SELECT 'vid-' || CAST(doc_id AS VARCHAR) AS video_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_VIDEO})),
+{_sql_sel(N_VIDEO, "vid", "video_id")},
 v AS (
   SELECT e.video_id, e.fmt, e.fps, e.duration_s,
          CASE WHEN e.decode_ok = 0 THEN 'decode_failed'
@@ -1305,7 +1233,7 @@ WITH expected(image_id, fmt, w, h, decode_ok, pixels_ok, phash_ok, caption_ok, p
               brightness, thumb_var) AS (
   VALUES {_values(_expected_image_metrics())}
 ),
-{_img_sel(N_IMAGES)}
+{_sql_sel(N_IMAGES)}
 SELECT fmt, count(*) AS n_images,
        CAST(sum(decode_ok) AS BIGINT) AS decode_pass,
        CAST(sum(pixels_ok) AS BIGINT) AS pixels_pass,
@@ -1329,16 +1257,6 @@ QUERIES = {
     "image_decontaminate": image_decontaminate,
 }
 
-# one-line form of the (values-formatted) near-dup oracle, embeddable as a
-# subquery of the recursive-CTE cluster oracle — same pattern as
-# SQL_DEDUP_CLUSTERS over SQL_DEDUP_MINHASH_LSH
-@functools.lru_cache(maxsize=None)
-def _sql_neardup_flat() -> str:
-    return SQL_IMAGE_PHASH_NEARDUP.format(
-        values=_values(_expected_phashes())
-    ).replace("\n", " ")
-
-
 def corpus_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSS-MODAL keep/drop verdict — the decision a multimodal training
     pipeline actually makes per document: keep iff the TEXT retention
@@ -1354,16 +1272,12 @@ def corpus_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one fingerprint-window pass for text; block-bucketed pairs + star
     labels for images; two embedding-key equi-joins for alignment) joined
     on doc_id — two extra equi-joins, no new wide op."""
-    from .dedup import _star_labels
     from .text import corpus_retention
 
     text_v = corpus_retention(spark, sf_dir).select(
         "doc_id", F.col("keep").alias("text_keep")
     )
-    pairs = image_phash_neardup(spark, sf_dir).select(
-        F.col("img_a").alias("doc_a"), F.col("img_b").alias("doc_b")
-    )
-    labels = _star_labels(pairs)  # (doc=image_id, label) — near-dup members only
+    labels = _image_labels(spark, sf_dir)
     sel = (
         table(spark, sf_dir, "documents")
         .select("doc_id").orderBy("doc_id").limit(N_IMAGES)
@@ -1404,21 +1318,10 @@ def _sql_image_dedup_clusters() -> str:
     return f"""
 SELECT label AS keeper_id, CAST(count(*) AS BIGINT) AS n_images,
        max(doc) AS last_member
-FROM (
-  SELECT doc, min(r) AS label FROM (
-    WITH RECURSIVE
-    pairs AS (SELECT img_a AS a, img_b AS b FROM ({_sql_neardup_flat()}) p),
-    bi AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-    reach(doc, r) AS (
-      SELECT DISTINCT a, a FROM bi
-      UNION
-      SELECT bi.b, reach.r FROM reach JOIN bi ON bi.a = reach.doc
-    )
-    SELECT doc, r FROM reach
-  ) GROUP BY doc
-)
+FROM {sql_components(_sql_image_pairs(), "img_a", "img_b")}
 GROUP BY label
 """
+
 
 @functools.lru_cache(maxsize=None)
 def _oracle_map() -> dict:
@@ -1426,16 +1329,10 @@ def _oracle_map() -> dict:
         "multimodal_image": _sql_multimodal_image(),
         "multimodal_audio": _sql_multimodal_audio(),
         "multimodal_video": _sql_multimodal_video(),
-        # values filled here because _values is defined below the SQL template
-        "image_phash_neardup": SQL_IMAGE_PHASH_NEARDUP.format(
-            values=_values(_expected_phashes())
-        ),
-        "image_decontaminate": SQL_IMAGE_DECONTAMINATE.format(
-            values=_values(_expected_phashes()),
-            n_images=N_IMAGES,
-            variant_every=VARIANT_EVERY,
-        ),
+        "image_phash_neardup": _sql_image_pairs(),
+        "image_decontaminate": _sql_image_decontaminate(),
     }
+
 
 # cross-modal pipeline verdict: text retention ⋈ image cluster labels.
 # Local registry — the driver file is at its 50-row budget.
@@ -1445,23 +1342,8 @@ from .text import SQL_CORPUS_RETENTION as _SQL_RET  # noqa: E402
 def _sql_corpus_multimodal_pipeline() -> str:
     return f"""
 WITH ret AS ({_SQL_RET.replace(chr(10), ' ')}),
-labels AS (
-  SELECT doc, min(r) AS label FROM (
-    WITH RECURSIVE
-    pairs AS (SELECT img_a AS a, img_b AS b FROM ({_sql_neardup_flat()}) p),
-    bi AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-    reach(doc, r) AS (
-      SELECT DISTINCT a, a FROM bi
-      UNION
-      SELECT bi.b, reach.r FROM reach JOIN bi ON bi.a = reach.doc
-    )
-    SELECT doc, r FROM reach
-  ) GROUP BY doc
-),
-sel AS (
-  SELECT doc_id, 'img-' || CAST(doc_id AS VARCHAR) AS image_id
-  FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_IMAGES})
-),
+labels AS {sql_components(_sql_image_pairs(), "img_a", "img_b")},
+{_sql_sel(N_IMAGES)},
 status AS (
   SELECT s.doc_id,
          CASE WHEN l.label IS NULL THEN 'unique'
@@ -1487,31 +1369,15 @@ _SQL_CAPTION_STATUS = (
 
 # LAION-style curation verdict: star labels (recursive-CTE oracle) + the
 # metadata gates over the expected-dims VALUES table
-SQL_IMAGE_CURATE = f"""
+@functools.lru_cache(maxsize=None)
+def _sql_image_curate() -> str:
+    return f"""
 WITH dims(image_id, w, h) AS (
-  VALUES {{dims}}
+  VALUES {_values(_expected_dims())}
 ),
-sel AS (SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id, doc_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {{n_images}})),
-ids AS (
-  SELECT image_id FROM sel
-  UNION ALL
-  SELECT image_id || '-v' FROM sel WHERE doc_id % {{variant_every}} = 0
-),
+{_sql_variant_ids(N_IMAGES)},
 imgs AS (SELECT d.image_id, d.w, d.h FROM ids JOIN dims d USING (image_id)),
-labels AS (
-  SELECT doc, min(r) AS label FROM (
-    WITH RECURSIVE
-    pairs AS (SELECT img_a AS a, img_b AS b FROM ({{neardup}}) p),
-    bi AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-    reach(doc, r) AS (
-      SELECT DISTINCT a, a FROM bi
-      UNION
-      SELECT bi.b, reach.r FROM reach JOIN bi ON bi.a = reach.doc
-    )
-    SELECT doc, r FROM reach
-  ) GROUP BY doc
-),
+labels AS {sql_components(_sql_image_pairs(), "img_a", "img_b")},
 v AS (
   SELECT i.image_id, i.w, i.h,
          CASE WHEN l.label IS NOT NULL AND l.label != i.image_id THEN 'near_duplicate'
@@ -1522,6 +1388,7 @@ v AS (
 )
 SELECT image_id, w, h, drop_reason, (drop_reason = 'kept') AS keep FROM v
 """
+
 
 # resize-transform oracle: pure metadata join against the independently
 # computed (pure-Python, zlib-crc) thumbnail ground truth
@@ -1547,9 +1414,9 @@ WITH normed AS (
          sqrt({_sql_dot('embedding', 'embedding')}) AS nrm
   FROM embeddings
 ),
-sel AS (SELECT doc_id FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {N_IMAGES})),
+{_sql_sel(N_IMAGES)},
 cap AS (
-  SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id, doc_id,
+  SELECT image_id, doc_id,
          CASE WHEN doc_id % {N_MISCAP} = 0
               THEN (doc_id + {MISCAP_SHIFT}) % {N_IMAGES}
               ELSE doc_id END AS ref_id
@@ -1608,19 +1475,17 @@ def image_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _expected_sizes() -> list[tuple]:
     """Driver-side (doc_id, image_id, n_bytes) ground truth: payload bytes +
     utf-8 caption bytes, same codec path pure-Python in-process."""
-    out = []
-    for i in range(N_IMAGES):
-        iid = f"img-{i}"
-        r = imagecodec.image_row(iid, seed=42)
-        out.append((i, iid, len(r["bytes"]) + len(f"caption for img-{i}".encode())))
-    return out
+    return [
+        (i, r["image_id"], len(r["bytes"]) + len(r["caption"].encode()))
+        for i in range(N_IMAGES) for r in _image_rows(i)
+    ]
 
 
 SQL_IMAGE_SHARD_PACK = """
 WITH expected(doc_id, image_id, n_bytes) AS (
   VALUES {values}
 ),
-sel AS (SELECT doc_id FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {n_images})),
+{img_sel},
 sized AS (SELECT e.doc_id, e.image_id, e.n_bytes FROM expected e JOIN sel USING (doc_id)),
 cum AS (
   SELECT image_id, doc_id, n_bytes,
@@ -1642,25 +1507,16 @@ FROM cum ORDER BY doc_id
 COPY_EVERY = 5
 
 
+def _copy_rows(doc_id: int) -> list[dict]:
+    rows = _image_rows(doc_id)
+    if doc_id % COPY_EVERY == 0:
+        rows.append({**rows[0], "image_id": rows[0]["image_id"] + "-c"})
+    return rows
+
+
 def _images_with_copies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Images table plus planted byte-identical copies (``img-{id}-c``)."""
-    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(N_IMAGES)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                row = imagecodec.image_row(f"img-{doc_id}", seed=42)
-                row["caption"] = f"caption for img-{doc_id}"
-                rows.append(row)
-                if int(doc_id) % COPY_EVERY == 0:
-                    copy = dict(row)
-                    copy["image_id"] = row["image_id"] + "-c"
-                    rows.append(copy)
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
-
-    n = N_IMAGES + -(-N_IMAGES // COPY_EVERY)
-    return ids.repartition(_gen_partitions(spark, n), "doc_id").mapInPandas(gen, IMAGES_SCHEMA)
+    return _payloads(spark, sf_dir, N_IMAGES, _copy_rows, IMAGES_SCHEMA)
 
 
 def image_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1684,21 +1540,17 @@ def image_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _expected_digests() -> list[tuple]:
     """Driver-side (doc_id, image_id, md5-hex) ground truth for base images
     and their planted byte-identical copies."""
-    out = []
-    for i in range(N_IMAGES):
-        iid = f"img-{i}"
-        digest = hashlib.md5(imagecodec.image_row(iid, seed=42)["bytes"]).hexdigest()
-        out.append((i, iid, digest))
-        if i % COPY_EVERY == 0:
-            out.append((i, f"{iid}-c", digest))
-    return out
+    return [
+        (i, r["image_id"], hashlib.md5(r["bytes"]).hexdigest())
+        for i in range(N_IMAGES) for r in _copy_rows(i)
+    ]
 
 
 SQL_IMAGE_EXACT_DEDUP = """
 WITH expected(doc_id, image_id, digest) AS (
   VALUES {values}
 ),
-sel AS (SELECT doc_id FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {n_images})),
+{img_sel},
 rows_ AS (SELECT e.image_id, e.digest FROM expected e JOIN sel USING (doc_id))
 SELECT digest, COUNT(*) AS n_copies, MIN(image_id) AS keeper
 FROM rows_ GROUP BY digest
@@ -1910,12 +1762,10 @@ def _expected_shards() -> tuple[list[tuple], list[tuple]]:
     same codec payloads, pure-Python in-process."""
     cum, by_shard, asg = 0, {}, []
     for i in range(N_IMAGES):
-        iid = f"img-{i}"
-        data = imagecodec.image_row(iid, seed=42)["bytes"]
-        cap = f"caption for img-{i}"
+        (r,) = _image_rows(i)
         sid = cum // SHARD_BYTES
-        cum += len(data) + len(cap.encode())
-        by_shard.setdefault(sid, []).append((iid, data, cap))
+        cum += len(r["bytes"]) + len(r["caption"].encode())
+        by_shard.setdefault(sid, []).append((r["image_id"], r["bytes"], r["caption"]))
         asg.append((i, sid))
     stats = []
     for sid in sorted(by_shard):
@@ -1928,7 +1778,7 @@ SQL_IMAGE_SHARD_BYTES = """
 WITH asg(doc_id, shard_id) AS (
   VALUES {asg}
 ),
-sel AS (SELECT doc_id FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {n_images})),
+{img_sel},
 cnt AS (
   SELECT shard_id, COUNT(*) AS n_records
   FROM asg JOIN sel USING (doc_id) GROUP BY shard_id
@@ -1992,8 +1842,7 @@ SQL_VLM_PACK = """
 WITH dims(image_id, w, h) AS (
   VALUES {dims}
 ),
-sel AS (SELECT 'img-' || CAST(doc_id AS VARCHAR) AS image_id, doc_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {n_images})),
+{img_sel},
 toks AS (
   SELECT s.doc_id, s.image_id,
          ((d.w + {pm1}) // {p}) * ((d.h + {pm1}) // {p})
@@ -2152,24 +2001,17 @@ def _scan_text(doc_id: int) -> str | None:
     return f"alt text for scan-{doc_id}"
 
 
+def _scan_rows(doc_id: int) -> list[dict]:
+    row = imagecodec.scan_row(f"scan-{doc_id}", _scan_text(doc_id), seed=42)
+    row["caption"] = f"alt text for scan-{doc_id}"
+    return [row]
+
+
 def _scans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 'scanned page' images: base pixels + planted text band
     (imagecodec.scan_row); caption column carries the EXPECTED alt text for
     every row, so the extraction verdict is a plain column comparison."""
-    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(N_SCANS)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                row = imagecodec.scan_row(f"scan-{doc_id}", _scan_text(int(doc_id)), seed=42)
-                row["caption"] = f"alt text for scan-{doc_id}"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
-
-    return ids.repartition(_gen_partitions(spark, N_SCANS), "doc_id").mapInPandas(
-        gen, IMAGES_SCHEMA
-    )
+    return _payloads(spark, sf_dir, N_SCANS, _scan_rows, IMAGES_SCHEMA)
 
 
 def image_ocr_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2212,20 +2054,17 @@ def _expected_scans() -> list[tuple]:
     """Driver-side (image_id, extracted) ground truth: the same codec path
     run pure-Python in-process — parity proves the planted band survived
     encode → Arrow → decode → extract byte-for-byte."""
-    out = []
-    for i in range(N_SCANS):
-        row = imagecodec.scan_row(f"scan-{i}", _scan_text(i), seed=42)
-        px, _, _, _ = imagecodec.decode(row["bytes"])
-        out.append((f"scan-{i}", imagecodec.ocr_extract(px)))
-    return out
+    return [
+        (r["image_id"], imagecodec.ocr_extract(imagecodec.decode(r["bytes"])[0]))
+        for i in range(N_SCANS) for r in _scan_rows(i)
+    ]
 
 
 SQL_IMAGE_OCR_EXTRACT = """
 WITH expected(image_id, extracted) AS (
   VALUES {values}
 ),
-sel AS (SELECT 'scan-' || CAST(doc_id AS VARCHAR) AS image_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {n_scans}))
+{sel}
 SELECT e.image_id,
        e.extracted,
        e.extracted <> '' AS has_text,
@@ -2263,22 +2102,15 @@ def _pii_planted(doc_id: int) -> int:
     return 1 if doc_id % 3 == 0 else 0
 
 
+def _photo_rows(doc_id: int) -> list[dict]:
+    row = imagecodec.photo_row(f"pho-{doc_id}", _pii_planted(doc_id), seed=42)
+    row["caption"] = f"photo {doc_id}"
+    return [row]
+
+
 def _photos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 'photo' images with planted PII regions."""
-    ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(N_PHOTOS)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                row = imagecodec.photo_row(f"pho-{doc_id}", _pii_planted(int(doc_id)), seed=42)
-                row["caption"] = f"photo {doc_id}"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
-
-    return ids.repartition(_gen_partitions(spark, N_PHOTOS), "doc_id").mapInPandas(
-        gen, IMAGES_SCHEMA
-    )
+    return _payloads(spark, sf_dir, N_PHOTOS, _photo_rows, IMAGES_SCHEMA)
 
 
 def image_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2321,11 +2153,11 @@ def _expected_redactions() -> list[tuple]:
     crc via zlib (same polynomial as the JVM's java.util.zip.CRC32)."""
     out = []
     for i in range(N_PHOTOS):
-        row = imagecodec.photo_row(f"pho-{i}", _pii_planted(i), seed=42)
-        px, _, _, _ = imagecodec.decode(row["bytes"])
+        (r,) = _photo_rows(i)
+        px, _, _, _ = imagecodec.decode(r["bytes"])
         mask, n = imagecodec.detect_pii(px)
         rb = imagecodec.encode(imagecodec.redact(px, mask), "png")
-        out.append((f"pho-{i}", n, int(mask.sum()), len(rb), zlib.crc32(rb)))
+        out.append((r["image_id"], n, int(mask.sum()), len(rb), zlib.crc32(rb)))
     return out
 
 
@@ -2333,8 +2165,7 @@ SQL_IMAGE_PII_REDACT = """
 WITH expected(image_id, n_regions, area_px, red_len, red_crc) AS (
   VALUES {values}
 ),
-sel AS (SELECT 'pho-' || CAST(doc_id AS VARCHAR) AS image_id
-        FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT {n_photos}))
+{sel}
 SELECT e.image_id, CAST(e.n_regions AS INT) AS n_regions,
        CAST(e.area_px AS INT) AS area_px,
        CAST(e.red_len AS INT) AS red_len, e.red_crc
@@ -2367,10 +2198,10 @@ LOCAL_QUERIES = {
 def _local_oracle_map() -> dict:
     return {
     "caption_hard_negatives": _sql_caption_hard_negatives(),
-    "audio_fingerprint_neardup": _sql_av_neardup(
+    "audio_fingerprint_neardup": _sql_hamming_pairs(
         _expected_afps(), "aud", N_AUDIO, "aud_a", "aud_b", AFP_HAMMING_T
     ),
-    "video_phash_neardup": _sql_av_neardup(
+    "video_phash_neardup": _sql_hamming_pairs(
         _expected_vhashes(), "vid", N_VIDEO, "vid_a", "vid_b", VID_HAMMING_T
     ),
     "corpus_multimodal_pipeline": _sql_corpus_multimodal_pipeline().format(
@@ -2378,59 +2209,54 @@ def _local_oracle_map() -> dict:
         align=_sql_caption_align().replace("\n", " "),
     ),
     "image_dedup_clusters": _sql_image_dedup_clusters(),
-    "image_curate": SQL_IMAGE_CURATE.format(
-        dims=_values(_expected_dims()),
-        n_images=N_IMAGES,
-        variant_every=VARIANT_EVERY,
-        neardup=_sql_neardup_flat(),
-    ),
+    "image_curate": _sql_image_curate(),
     "audio_curate": _sql_audio_curate(),
     "video_curate": _sql_video_curate(),
     "image_thumbnail": SQL_IMAGE_THUMBNAIL.format(
-        values=_values(_expected_thumbs()), img_sel=_img_sel(N_IMAGES)
+        values=_values(_expected_thumbs()), img_sel=_sql_sel(N_IMAGES)
     ),
     "image_caption_align": _sql_caption_align(),
     "image_shard_pack": SQL_IMAGE_SHARD_PACK.format(
         values=_values(_expected_sizes()),
-        n_images=N_IMAGES,
+        img_sel=_sql_sel(N_IMAGES),
         shard_bytes=SHARD_BYTES,
     ),
     "image_exact_dedup": SQL_IMAGE_EXACT_DEDUP.format(
-        values=_values(_expected_digests()), n_images=N_IMAGES
+        values=_values(_expected_digests()), img_sel=_sql_sel(N_IMAGES)
     ),
     "image_res_bucket": SQL_IMAGE_RES_BUCKET.format(
         dims=_values(_expected_dims()),
-        img_sel=_img_sel(N_IMAGES),
+        img_sel=_sql_sel(N_IMAGES),
         ladder=_values(_bucket_ladder()),
     ),
     "image_shard_bytes": SQL_IMAGE_SHARD_BYTES.format(
         asg=_values(_expected_shards()[0]),
         stats=_values(_expected_shards()[1]),
-        n_images=N_IMAGES,
+        img_sel=_sql_sel(N_IMAGES),
     ),
     "vlm_pack": SQL_VLM_PACK.format(
         dims=_values(_expected_dims()),
-        n_images=N_IMAGES,
+        img_sel=_sql_sel(N_IMAGES),
         p=VLM_PATCH,
         pm1=VLM_PATCH - 1,
         ctx=VLM_CTX,
     ),
     "image_bucket_sample": SQL_IMAGE_BUCKET_SAMPLE.format(
         dims=_values(_expected_dims()),
-        img_sel=_img_sel(N_IMAGES),
+        img_sel=_sql_sel(N_IMAGES),
         ladder=_values(_bucket_ladder()),
         target=SAMPLE_PER_BUCKET,
     ),
     "image_classify_aesthetic": SQL_IMAGE_CLASSIFY_AESTHETIC.format(
         values=_values(_expected_image_metrics()),
-        img_sel=_img_sel(N_IMAGES),
+        img_sel=_sql_sel(N_IMAGES),
         thresh=AESTH_THRESH,
     ),
     "image_ocr_extract": SQL_IMAGE_OCR_EXTRACT.format(
-        values=_values(_expected_scans()), n_scans=N_SCANS
+        values=_values(_expected_scans()), sel=_sql_sel(N_SCANS, "scan")
     ),
     "image_pii_redact": SQL_IMAGE_PII_REDACT.format(
-        values=_values(_expected_redactions()), n_photos=N_PHOTOS
+        values=_values(_expected_redactions()), sel=_sql_sel(N_PHOTOS, "pho")
     ),
     }
 

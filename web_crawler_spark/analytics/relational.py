@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import dsum, dsum_expr, sql_dsum, table
+from .common import dsum, sql_dsum, table
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
@@ -371,113 +371,6 @@ FROM events WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50
 """
 
 
-# --- headline aggregation: TPC-H Q1-shaped pricing summary -----------------
-
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        l.filter(F.col("l_shipdate") <= F.lit("2024-09-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum("l_quantity", "sum_qty"),
-            dsum("l_extendedprice", "sum_base_price"),
-            dsum_expr(disc_price, "sum_disc_price"),
-            dsum_expr(charge, "sum_charge"),
-            (F.sum(F.round(F.col("l_quantity") * F.lit(1e6), 0).cast("long")).cast("double") / F.lit(1e6) / F.count("*")).alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-SQL_PRICING_SUMMARY = f"""
-SELECT l_returnflag, l_linestatus,
-       {sql_dsum('l_quantity', 'sum_qty')},
-       {sql_dsum('l_extendedprice', 'sum_base_price')},
-       {sql_dsum('l_extendedprice * (1 - l_discount)', 'sum_disc_price')},
-       {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 'sum_charge')},
-       CAST(SUM(CAST(ROUND(l_quantity * 1000000.0, 0) AS BIGINT)) AS DOUBLE) / 1000000.0 / count(*) AS avg_qty,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2024-09-01'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-# --- headline join: TPC-H Q3-shaped shipping priority ----------------------
-
-def ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    l = table(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        # customer scales with the dataset (unlike nation/region): no
-        # broadcast hint — AQE broadcasts the filtered side while it fits
-        # and shuffles on the uniform custkey once it does not
-        .join(c.filter(F.col("c_mktsegment") == "BUILDING"), o.o_custkey == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dsum_expr(revenue, "revenue"))
-        .select(
-            "l_orderkey",
-            F.date_format("o_orderdate", TS_FMT_SPARK).alias("order_date"),
-            "o_orderpriority",
-            "revenue",
-        )
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
-    )
-
-
-SQL_SHIP_PRIORITY = f"""
-SELECT l_orderkey, strftime(o_orderdate, '{TS_FMT_DUCK}') AS order_date,
-       o_orderpriority,
-       {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')}
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-WHERE c.c_mktsegment = 'BUILDING'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey LIMIT 10
-"""
-
-
-# --- headline multi-join: TPC-H Q5-shaped regional volume ------------------
-
-def region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = table(spark, sf_dir, "region")
-    n = table(spark, sf_dir, "nation")
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    l = table(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    dims = F.broadcast(
-        n.join(r, n.n_regionkey == r.r_regionkey).select("n_nationkey", "n_name", "r_name")
-    )
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)  # data-scaling side: AQE decides
-        .join(dims, c.c_nationkey == F.col("n_nationkey"))
-        .groupBy("r_name", "n_name")
-        .agg(dsum_expr(revenue, "revenue"), F.count("*").alias("n_items"))
-    )
-
-
-SQL_REGION_VOLUME = f"""
-SELECT r_name, n_name,
-       {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')},
-       count(*) AS n_items
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY r_name, n_name
-"""
-
-
 # --- streaming-analog: event-time tumbling-window rollup -------------------
 
 def hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,27 +694,16 @@ QUERIES = {
 # content_stats, and the slot funds promoting corpus_pipeline_full +
 # embed_semdedup into the driver tier. topk_recent likewise: ordered top-k
 # (O1-O8) stays driver-evidenced by linkgraph_sort (multi-key sort+limit) and
-# admission_cap (rank cap). Round 5 demotes the three TPC-H-style showcase
-# queries (pricing_summary, ship_priority, region_volume): they map to no
-# SURVEY §2 row — their grouped-agg/join machinery is driver-evidenced by
-# pages_per_job/enrich_join/status_breakdown — and the freed slots fund
-# promoting round-4's flagship operators (dedup_incremental, span_dedup,
-# text_classify_quality) into the driver gate.
+# admission_cap (rank cap).
 LOCAL_QUERIES = {
     "status_rollup": status_rollup,
     "json_extract": json_extract,
     "topk_recent": topk_recent,
-    "pricing_summary": pricing_summary,
-    "ship_priority": ship_priority,
-    "region_volume": region_volume,
 }
 LOCAL_ORACLES = {
     "status_rollup": SQL_STATUS_ROLLUP,
     "json_extract": SQL_JSON_EXTRACT,
     "topk_recent": SQL_TOPK_RECENT,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "ship_priority": SQL_SHIP_PRIORITY,
-    "region_volume": SQL_REGION_VOLUME,
 }
 
 ORACLES = {

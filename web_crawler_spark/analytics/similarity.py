@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import table
+from .common import sql_components, table
 
 DIM = 64
 _QSCALE = 1024  # fixed-point scale: integer sums are associative-exact in both engines
@@ -725,19 +725,7 @@ def embed_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_EMBED_DEDUP_CLUSTERS = f"""
 SELECT label AS keeper_id, CAST(count(*) AS BIGINT) AS n_vectors,
        max(doc) AS last_member
-FROM (
-  SELECT doc, min(r) AS label FROM (
-    WITH RECURSIVE
-    pairs AS (SELECT vec_a AS a, vec_b AS b FROM ({SQL_EMBED_NEARDUP.replace(chr(10), ' ')}) p),
-    bi AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
-    reach(doc, r) AS (
-      SELECT DISTINCT a, a FROM bi
-      UNION
-      SELECT bi.b, reach.r FROM reach JOIN bi ON bi.a = reach.doc
-    )
-    SELECT doc, r FROM reach
-  ) GROUP BY doc
-)
+FROM {sql_components(SQL_EMBED_NEARDUP, "vec_a", "vec_b")}
 GROUP BY label
 """
 

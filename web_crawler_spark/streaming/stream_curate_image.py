@@ -13,9 +13,14 @@ Verdict stages and their stream shape:
 - near_duplicate: the image's phash block-exploded into the 28 16-bit
   (k, blk) keys (``multimodal._pair_blocks``; pigeonhole-complete for
   Hamming <= 6) and probed against the static block index of the accepted
-  corpus — a stream-static LEFT equi-join (no state for the static side),
-  exact bit_count(xor) verify on block collisions only, then ONE grouped
-  aggregation restores image grain. Complete mode in the bounded-source
+  corpus (``multimodal._index_blocks``, the index side of
+  ``multimodal._hamming_probe``) — a stream-static LEFT equi-join (no state
+  for the static side), exact bit_count(xor) verify on block collisions
+  only, then ONE grouped aggregation restores image grain. It keeps this
+  LEFT-join/count shape instead of calling ``_hamming_probe``, because a
+  stream cannot join a probe result back to its own image-grain branch.
+  Within-corpus self-pairs stay on ``multimodal._hamming_pairs`` (its
+  docstring says why). Complete mode in the bounded-source
   parity tests; a production deployment runs update mode keyed on an
   ingest-time watermark. At 10^10 indexed images the static side is a
   bucketed table and each micro-batch shuffles only its own block keys.
@@ -50,6 +55,7 @@ from ..analytics.multimodal import (
     IMG_HAMMING_T,
     IMG_MAX_ASPECT,
     IMG_MIN_SIDE,
+    _index_blocks,
     _pair_blocks,
 )
 from ..schemas import IMAGES_SCHEMA
@@ -60,14 +66,7 @@ def build_index(corpus_images: DataFrame) -> DataFrame:
     schema): the block-exploded phash index. At 10^10 images this is a
     bucketed table on (k, blk) maintained incrementally; here it is the
     plan that would populate it."""
-    return _pair_blocks(
-        corpus_images.select(
-            F.col("image_id").alias("index_id"), F.col("phash").alias("ph_i")
-        ).withColumn("phash", F.col("ph_i")),
-        "index_id",
-        "phash",
-        keep=("ph_i",),
-    ).select("index_id", "ph_i", "k", "blk")
+    return _index_blocks(corpus_images.select(F.col("image_id").alias("index_id"), "phash"))
 
 
 def _verdict(images: DataFrame, index: DataFrame, embeddings: DataFrame) -> DataFrame:

@@ -7,16 +7,19 @@ WITHIN a corpus; this module answers the ingest-time question a training
 pipeline asks for every newly crawled image: "is this a near-duplicate of
 anything already indexed?" — without waiting for a batch pass.
 
-Scale shape: the index side is STATIC (the already-accepted corpus's phash
-metadata, block-exploded once into 28 16-bit keys per image — see
-`multimodal._PH_PAIRS` for the pigeonhole completeness argument). The join
-is a stream-static equi-join on (k, blk): Spark keeps NO join state for the
-static side between micro-batches, so state is O(1) in stream length — the
-property that matters at 10^10 indexed images, where the static side is a
-bucketed table and each micro-batch shuffles only its own block keys. The
-exact bit_count(xor) verify runs on block-collision candidates only, and the
-per-(image, index) aggregation collapses the multi-block candidate
-duplicates. No decode anywhere: phash metadata only, same as the batch tier.
+Scale shape: this is `multimodal._hamming_probe`, the one Hamming probe
+the batch tier (`image_decontaminate`) also runs. The index side is STATIC
+(the already-accepted corpus's phash metadata, block-exploded once into 28
+16-bit keys per image — see `multimodal._PH_PAIRS` for the pigeonhole
+completeness argument). The join is a stream-static equi-join on (k, blk):
+Spark keeps NO join state for the static side between micro-batches, so
+state is O(1) in stream length — the property that matters at 10^10
+indexed images, where the static side is a bucketed table and each
+micro-batch shuffles only its own block keys. The exact bit_count(xor)
+verify runs on block-collision candidates only, and the per-(image, index)
+aggregation collapses the multi-block candidate duplicates. No decode
+anywhere: phash metadata only. Within-corpus self-pairs stay on
+`multimodal._hamming_pairs` (its docstring says why).
 
 Batch/stream parity is the test contract (test_streaming.py): over a static
 source directory, the complete-mode streaming result must equal the batch
@@ -26,34 +29,9 @@ twin row-for-row.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..analytics.multimodal import IMG_HAMMING_T, _pair_blocks
+from ..analytics.multimodal import IMG_HAMMING_T, _hamming_probe
 from ..schemas import IMAGES_SCHEMA
-
-
-def _block_probe(images: DataFrame, index: DataFrame) -> DataFrame:
-    """Shared plan for both engines: block-bucket candidates from the
-    28-key multi-index, exact Hamming verify, one row per (image, match).
-
-    ``images``: (image_id, phash) — streaming or batch.
-    ``index``:  (index_id, phash) — static.
-    """
-    # both sides carry their phash through the explode: ONE stream-static
-    # equi-join on (k, blk), no join-back to a second stream branch
-    probe = _pair_blocks(images.withColumn("ph_s", F.col("phash")), "image_id", "phash", keep=("ph_s",))
-    idx = _pair_blocks(index.withColumn("ph_i", F.col("phash")), "index_id", "phash", keep=("ph_i",))
-    return (
-        probe.join(idx, ["k", "blk"])
-        .withColumn("hamming", F.bit_count(F.col("ph_s").bitwiseXOR(F.col("ph_i"))).cast("int"))
-        .filter(
-            (F.col("hamming") <= IMG_HAMMING_T) & (F.col("image_id") != F.col("index_id"))
-        )
-        # collapse multi-block duplicate candidates; hamming is constant per
-        # pair so min() is just the dedup (state: one row per emitted pair)
-        .groupBy("image_id", "index_id")
-        .agg(F.min("hamming").alias("hamming"))
-    )
 
 
 def neardup_stream(spark: SparkSession, src_dir: str, index: DataFrame) -> DataFrame:
@@ -62,17 +40,11 @@ def neardup_stream(spark: SparkSession, src_dir: str, index: DataFrame) -> DataF
     bounded-source parity tests; a production deployment runs the same plan
     in update mode (each pair appears once its first candidate block lands,
     which is the same micro-batch its image arrives in)."""
-    imgs = (
-        spark.readStream.schema(IMAGES_SCHEMA)
-        .parquet(src_dir)
-        .select("image_id", "phash")
-    )
-    return _block_probe(imgs, index)
+    imgs = spark.readStream.schema(IMAGES_SCHEMA).parquet(src_dir)
+    return _hamming_probe(imgs, index, IMG_HAMMING_T)
 
 
 def neardup_batch(spark: SparkSession, src_dir: str, index: DataFrame) -> DataFrame:
     """Batch twin over the same source directory — the parity oracle."""
-    imgs = (
-        spark.read.schema(IMAGES_SCHEMA).parquet(src_dir).select("image_id", "phash")
-    )
-    return _block_probe(imgs, index)
+    imgs = spark.read.schema(IMAGES_SCHEMA).parquet(src_dir)
+    return _hamming_probe(imgs, index, IMG_HAMMING_T)
