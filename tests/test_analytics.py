@@ -510,18 +510,85 @@ def test_corpus_pipeline_full_verdict(spark):
     assert {"repetitive", "boilerplate", "model_filtered", "downsampled", "kept"} <= seen_reasons
 
 
-def test_brute_force_guard_refuses_large_inputs(spark):
+def test_brute_force_guard_refuses_large_inputs(spark, tmp_path):
     """The O(n²) exactness baselines must REFUSE oversized inputs — the
     contract that stops a registered all-pairs query from ever emitting a
     10²⁰-pair plan against a production corpus."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     import pytest as _pytest
 
     from web_crawler_spark.analytics.similarity import _guard_brute_force
 
-    small = spark.range(10).withColumnRenamed("id", "vec_id")
-    _guard_brute_force(small, "q", cap=100)  # under the cap: no raise
+    pq.write_table(pa.table({"vec_id": pa.array(range(10), pa.int64())}),
+                   tmp_path / "embeddings.parquet")
+    _guard_brute_force(spark, str(tmp_path), "embeddings", "q", cap=100)  # under: no raise
     with _pytest.raises(ValueError, match="refuses inputs over"):
-        _guard_brute_force(small, "q", cap=5)
+        _guard_brute_force(spark, str(tmp_path), "embeddings", "q", cap=5)
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs submitted while *fn()* runs, read from the status store."""
+    sc = spark.sparkContext
+
+    def newest() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    before = newest()
+    fn()
+    return newest() - before
+
+
+def _executed_plan(df) -> str:
+    """The plan *df* ran with: collected first, so AQE's final plan."""
+    df.collect()
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+
+
+def test_table_warm_read_runs_no_job(spark):
+    """`table()` infers a table's schema once per session and table
+    version: a warm read, its schema and the brute-force guard's row count
+    submit no Spark job."""
+    from web_crawler_spark.analytics.common import table, table_rows
+
+    table(spark, SF_DIR, "embeddings")
+    table_rows(spark, SF_DIR, "embeddings")
+    assert _jobs_run(spark, lambda: table(spark, SF_DIR, "embeddings").schema) == 0
+    assert _jobs_run(spark, lambda: table_rows(spark, SF_DIR, "embeddings")) == 0
+
+
+def test_table_schema_follows_rewrite(spark, tmp_path):
+    """The schema cache is keyed on the table's file, not only its path: a
+    rewrite with an extra column shows that column on the next read, and
+    the older version's entry is evicted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from web_crawler_spark.analytics import common
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert common.table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    assert common.table(spark, str(tmp_path), "t").columns == ["a", "b"]
+    assert _jobs_run(spark, lambda: common.table(spark, str(tmp_path), "t").schema) == 0
+    assert sum(k[1:3] == (str(tmp_path), "t") for k in common._TABLE_META) == 1
+
+
+def test_embed_cosine_topk_broadcasts_query_side(spark):
+    """The N_QUERIES-row query side is the broadcast (build) side, so the
+    repartitioned candidates stream through the nested-loop join in
+    parallel tasks."""
+    plan = _executed_plan(QUERIES["embed_cosine_topk"](spark, SF_DIR))
+    assert "BroadcastNestedLoopJoin BuildLeft" in plan, plan
+
+
+def test_image_curate_generates_images_once(spark):
+    """image_curate's pair graph and its gates read one checkpointed image
+    table: no generator pass is left in the executed plan."""
+    plan = _executed_plan(LOCAL_QUERIES["image_curate"](spark, SF_DIR))
+    assert "MapInPandas" not in plan, plan
 
 
 def test_image_shard_pack_verdict(spark):

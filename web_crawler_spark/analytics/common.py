@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import os
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 # JIT-able generated code
@@ -33,10 +37,57 @@ def ensure_jitable_codegen(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.codegen.hugeMethodLimit", _HUGE_METHOD_LIMIT)
 
 
+def table_version(spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    """`(applicationId, sf_dir, name, st_mtime_ns, st_size)` of the table's
+    `.parquet` file or directory: the key of every per-session, per-table-
+    version memo (`_TABLE_META` here, `dedup._LABELS_MEMO`). Rewriting the
+    table changes its stat, so a memo never serves an older version."""
+    st = os.stat(f"{sf_dir}/{name}.parquet")
+    return (spark.sparkContext.applicationId, sf_dir, name, st.st_mtime_ns, st.st_size)
+
+
+@dataclass
+class _TableMeta:
+    schema: T.StructType
+    rows: int | None = None  # filled on first `table_rows`
+
+
+_TABLE_META: dict[tuple, _TableMeta] = {}
+
+
+def _table_meta(spark: SparkSession, sf_dir: str, name: str) -> _TableMeta:
+    key = table_version(spark, sf_dir, name)
+    meta = _TABLE_META.get(key)
+    if meta is None:
+        for k in [k for k in _TABLE_META if k[0] != key[0] or k[1:3] == key[1:3]]:
+            del _TABLE_META[k]
+        schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        meta = _TABLE_META[key] = _TableMeta(schema)
+    return meta
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-generated parquet table (TESTDATA.md)."""
+    """Load one driver-generated parquet table (TESTDATA.md).
+
+    `spark.read.parquet` with no schema runs one Spark job per call to infer
+    it (~0.1 s warm at sf0.01, most of a small query's fixed cost). So the
+    schema Spark infers is cached per `table_version` key (session, path,
+    mtime, size) and passed to `.schema(...)`, which runs no job. A rewrite
+    of the table, or a new session, infers again."""
     ensure_jitable_codegen(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    schema = _table_meta(spark, sf_dir, name).schema
+    return spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of one table version, summed from its parquet footers on
+    the driver (no Spark job) and cached beside its schema."""
+    meta = _table_meta(spark, sf_dir, name)
+    if meta.rows is None:
+        import pyarrow.dataset as ds
+
+        meta.rows = ds.dataset(f"{sf_dir}/{name}.parquet", format="parquet").count_rows()
+    return meta.rows
 
 
 def sql_components(pairs_sql: str, a: str, b: str) -> str:

@@ -24,13 +24,12 @@ touches candidate pairs. Simhash block join is 4 rows/doc, uniformly hashed.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .common import (
-    SQL_WORDS, WORDS as _WORDS, sql_components, sql_word_hash32, table, word_hash32,
+    SQL_WORDS, WORDS as _WORDS, sql_components, sql_word_hash32, table, table_version,
+    word_hash32,
 )
 
 N_HASHES = 16
@@ -718,8 +717,9 @@ def _star_labels(edges: DataFrame) -> DataFrame:
 # The first consumer materializes the labels once (eager localCheckpoint:
 # the star loop has already executed its rounds; this pins the final join
 # too); every later consumer in the same session reads the checkpointed
-# blocks. Keyed by (applicationId, sf_dir, documents.parquet mtime_ns and
-# size), so a new session, a different corpus or a rewritten corpus rebuilds.
+# blocks. Keyed by `table_version` of documents.parquet (applicationId,
+# sf_dir, mtime_ns, size), so a new session, a different corpus or a
+# rewritten corpus rebuilds.
 # Stale sessions' entries and older versions of the same corpus are evicted
 # on access (a dead session's checkpoint blocks are unreadable anyway), and
 # at most _LABELS_MEMO_MAX entries stay, oldest evicted first, since each
@@ -729,11 +729,9 @@ _LABELS_MEMO_MAX = 4
 
 
 def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    st = os.stat(f"{sf_dir}/documents.parquet")
-    key = (app, sf_dir, st.st_mtime_ns, st.st_size)
+    key = table_version(spark, sf_dir, "documents")
     if key not in _LABELS_MEMO:
-        for k in [k for k in _LABELS_MEMO if k[0] != app or k[1] == sf_dir]:
+        for k in [k for k in _LABELS_MEMO if k[0] != key[0] or k[1] == sf_dir]:
             del _LABELS_MEMO[k]
         while len(_LABELS_MEMO) >= _LABELS_MEMO_MAX:
             del _LABELS_MEMO[next(iter(_LABELS_MEMO))]

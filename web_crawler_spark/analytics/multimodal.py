@@ -366,13 +366,13 @@ def _hamming_pairs(
     block self-join yields candidates, and the exact bit_count(xor) verify
     runs on candidates only. All flat codegen expressions, one shuffle for
     the block self-join — the shape that survives 10^10 rows because bucket
-    sizes are set by the 16-bit key width, not the corpus.
+    sizes are set by the 16-bit key width, not the corpus. *sig* feeds the
+    blocks and both pair sides, so callers pass it eagerly checkpointed.
 
     Self-pairs keep this plan rather than `_hamming_probe(sig, sig)` +
     `a < b`: that variant finds the same pairs but lost all 5 alternating
     runs for each modality at sf0.01, `local[4]` (medians 1.2-1.4x slower;
     CHANGES.md has the table)."""
-    sig = sig.localCheckpoint(eager=True)  # feeds blocks + both pair sides once
     blocks = _pair_blocks(sig, idcol, hcol)
     cand = (
         blocks.select(F.col(idcol).alias(a), "k", "blk")
@@ -439,6 +439,17 @@ def _images_with_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _payloads(spark, sf_dir, N_IMAGES, _variant_rows, IMAGES_SCHEMA)
 
 
+def _image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(image_id, w, h, phash) of `_images_with_variants`, generated once and
+    eagerly checkpointed: the input of every image pair plan, and of
+    `image_curate`'s gates beside its pair graph."""
+    return (
+        _images_with_variants(spark, sf_dir)
+        .select("image_id", "w", "h", "phash")
+        .localCheckpoint(eager=True)
+    )
+
+
 def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate image pairs by phash Hamming distance, found the way a
     10^10-image corpus has to: the 64-bit phash METADATA column (computed once
@@ -449,8 +460,9 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate rule in the oracle so both engines see identical pairs); the
     exact bit_count(xor) verify runs on candidates only. All flat codegen expressions, one shuffle for the
     block self-join."""
-    sig = _images_with_variants(spark, sf_dir).select("image_id", "phash")
-    return _hamming_pairs(sig, "image_id", "phash", "img_a", "img_b", IMG_HAMMING_T)
+    return _hamming_pairs(
+        _image_meta(spark, sf_dir), "image_id", "phash", "img_a", "img_b", IMG_HAMMING_T
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -517,9 +529,8 @@ def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit keys; the exact bit_count(xor) verify runs on candidates only.
     Planted variants sit at Hamming 0-6 of their base (measured), unrelated
     white-noise clips at >= 22 — the threshold separates them exactly."""
-    return _hamming_pairs(
-        _audio_fingerprints(spark, sf_dir), "audio_id", "afp", "aud_a", "aud_b", AFP_HAMMING_T
-    )
+    sig = _audio_fingerprints(spark, sf_dir).localCheckpoint(eager=True)
+    return _hamming_pairs(sig, "audio_id", "afp", "aud_a", "aud_b", AFP_HAMMING_T)
 
 
 def video_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,9 +540,8 @@ def video_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     28-byte-pair block index + candidate-only exact verify; re-encoded /
     brightness-wobbled variants sit at Hamming 0-5 of their base (measured),
     unrelated clips at >= 22."""
-    return _hamming_pairs(
-        _video_fingerprints(spark, sf_dir), "video_id", "vhash", "vid_a", "vid_b", VID_HAMMING_T
-    )
+    sig = _video_fingerprints(spark, sf_dir).localCheckpoint(eager=True)
+    return _hamming_pairs(sig, "video_id", "vhash", "vid_a", "vid_b", VID_HAMMING_T)
 
 
 IMG_DECON_MOD = 10  # base image ids with n % MOD == 0 form the benchmark set
@@ -556,16 +566,14 @@ def _sql_blocks(src: str, idcol: str, hcol: str) -> str:
     )
 
 
-def _image_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc=image_id, label) star labels of the phash near-dup pair graph,
-    near-dup members only — the Spark twin of the `sql_components` oracle
-    over `_sql_image_pairs`."""
+def _image_labels(meta: DataFrame) -> DataFrame:
+    """(doc=image_id, label) star labels of the phash near-dup pair graph of
+    *meta* (`_image_meta`), near-dup members only — the Spark twin of the
+    `sql_components` oracle over `_sql_image_pairs`. The pair plan is
+    `image_phash_neardup`'s."""
     from .dedup import _star_labels
 
-    pairs = image_phash_neardup(spark, sf_dir).select(
-        F.col("img_a").alias("doc_a"), F.col("img_b").alias("doc_b")
-    )
-    return _star_labels(pairs)
+    return _star_labels(_hamming_pairs(meta, "image_id", "phash", "doc_a", "doc_b", IMG_HAMMING_T))
 
 
 def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,7 +590,7 @@ def image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     every reported cluster has >= 2 members by construction. The DuckDB
     oracle is a recursive CTE over the identical pair set."""
     return (
-        _image_labels(spark, sf_dir)
+        _image_labels(_image_meta(spark, sf_dir))
         .groupBy(F.col("label").alias("keeper_id"))
         .agg(F.count("*").alias("n_images"), F.max("doc").alias("last_member"))
     )
@@ -600,9 +608,10 @@ def image_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the phash cluster graph, same star labels as `image_dedup_clusters`),
     then minimum-resolution and aspect-ratio gates on the metadata columns,
     with drop-reason precedence. No decode anywhere in the plan; at 10^10
-    images the only wide ops are the bucketed pair join and one label join."""
-    imgs = _images_with_variants(spark, sf_dir).select("image_id", "w", "h", "phash")
-    labels = _image_labels(spark, sf_dir)
+    images the only wide ops are the bucketed pair join and one label join.
+    One `_image_meta` table feeds both the pair graph and the gates."""
+    imgs = _image_meta(spark, sf_dir)
+    labels = _image_labels(imgs)
     reason = (
         F.when(
             F.col("label").isNotNull() & (F.col("label") != F.col("image_id")),
@@ -1094,14 +1103,44 @@ def _sql_variant_ids(n: int, prefix: str = "img", idcol: str = "image_id") -> st
 # isolated at sf0.1, entirely worker cold-import).
 
 
+def _sql_expected(cols: str, rows: list[tuple], n: int, prefix: str, idcol: str) -> str:
+    """`expected(cols)` CTE over the driver-side per-payload metrics *rows*,
+    then the `sel` CTE of the first *n* documents' ids."""
+    return f"expected({cols}) AS (\n  VALUES {_values(rows)}\n),\n{_sql_sel(n, prefix, idcol)}"
+
+
+# one expected-metrics fragment per modality, shared by its rollup and its
+# curate (or classify) oracle
 @functools.lru_cache(maxsize=None)
+def _sql_image_expected() -> str:
+    return _sql_expected(
+        "image_id, fmt, w, h, decode_ok, pixels_ok, phash_ok, caption_ok, psnr_db,"
+        " brightness, thumb_var",
+        _expected_image_metrics(), N_IMAGES, "img", "image_id",
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _sql_audio_expected() -> str:
+    return _sql_expected(
+        "audio_id, fmt, sr, n_samples, decode_ok, samples_ok, duration_s, rms, peak,"
+        " n_clipped, zero_crossings",
+        _expected_audio_metrics(), N_AUDIO, "aud", "audio_id",
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _sql_video_expected() -> str:
+    return _sql_expected(
+        "video_id, fmt, fps, n_frames, n_sampled, decode_ok, frames_ok, duration_s,"
+        " brightness, motion",
+        _expected_video_metrics(), N_VIDEO, "vid", "video_id",
+    )
+
+
 def _sql_multimodal_audio() -> str:
     return f"""
-WITH expected(audio_id, fmt, sr, n_samples, decode_ok, samples_ok, duration_s,
-              rms, peak, n_clipped, zero_crossings) AS (
-  VALUES {_values(_expected_audio_metrics())}
-),
-{_sql_sel(N_AUDIO, "aud", "audio_id")}
+WITH {_sql_audio_expected()}
 SELECT fmt, count(*) AS n_clips,
        CAST(sum(decode_ok) AS BIGINT) AS decode_pass,
        CAST(sum(samples_ok) AS BIGINT) AS samples_pass,
@@ -1117,14 +1156,9 @@ GROUP BY fmt ORDER BY fmt
 """
 
 
-@functools.lru_cache(maxsize=None)
 def _sql_multimodal_video() -> str:
     return f"""
-WITH expected(video_id, fmt, fps, n_frames, n_sampled, decode_ok, frames_ok,
-              duration_s, brightness, motion) AS (
-  VALUES {_values(_expected_video_metrics())}
-),
-{_sql_sel(N_VIDEO, "vid", "video_id")}
+WITH {_sql_video_expected()}
 SELECT fmt, count(*) AS n_videos,
        CAST(sum(decode_ok) AS BIGINT) AS decode_pass,
        CAST(sum(frames_ok) AS BIGINT) AS frames_pass,
@@ -1142,14 +1176,9 @@ GROUP BY fmt ORDER BY fmt
 # curate oracles: the per-clip features come from the driver-side pure-Python
 # codec path (independent of Spark/Arrow), and the GATE LOGIC is re-stated in
 # SQL — so the verdict precedence itself is cross-checked in two engines.
-@functools.lru_cache(maxsize=None)
 def _sql_audio_curate() -> str:
     return f"""
-WITH expected(audio_id, fmt, sr, n_samples, decode_ok, samples_ok, duration_s,
-              rms, peak, n_clipped, zero_crossings) AS (
-  VALUES {_values(_expected_audio_metrics())}
-),
-{_sql_sel(N_AUDIO, "aud", "audio_id")},
+WITH {_sql_audio_expected()},
 v AS (
   SELECT e.audio_id, e.fmt, e.duration_s,
          CASE WHEN e.decode_ok = 0 THEN 'decode_failed'
@@ -1165,14 +1194,9 @@ SELECT audio_id, fmt, duration_s, drop_reason, (drop_reason = 'kept') AS keep
 FROM v
 """
 
-@functools.lru_cache(maxsize=None)
 def _sql_video_curate() -> str:
     return f"""
-WITH expected(video_id, fmt, fps, n_frames, n_sampled, decode_ok, frames_ok,
-              duration_s, brightness, motion) AS (
-  VALUES {_values(_expected_video_metrics())}
-),
-{_sql_sel(N_VIDEO, "vid", "video_id")},
+WITH {_sql_video_expected()},
 v AS (
   SELECT e.video_id, e.fmt, e.fps, e.duration_s,
          CASE WHEN e.decode_ok = 0 THEN 'decode_failed'
@@ -1226,14 +1250,9 @@ def multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@functools.lru_cache(maxsize=None)
 def _sql_multimodal_image() -> str:
     return f"""
-WITH expected(image_id, fmt, w, h, decode_ok, pixels_ok, phash_ok, caption_ok, psnr_db,
-              brightness, thumb_var) AS (
-  VALUES {_values(_expected_image_metrics())}
-),
-{_sql_sel(N_IMAGES)}
+WITH {_sql_image_expected()}
 SELECT fmt, count(*) AS n_images,
        CAST(sum(decode_ok) AS BIGINT) AS decode_pass,
        CAST(sum(pixels_ok) AS BIGINT) AS pixels_pass,
@@ -1277,7 +1296,7 @@ def corpus_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_v = corpus_retention(spark, sf_dir).select(
         "doc_id", F.col("keep").alias("text_keep")
     )
-    labels = _image_labels(spark, sf_dir)
+    labels = _image_labels(_image_meta(spark, sf_dir))
     sel = (
         table(spark, sf_dir, "documents")
         .select("doc_id").orderBy("doc_id").limit(N_IMAGES)
@@ -1961,11 +1980,7 @@ def image_classify_aesthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_IMAGE_CLASSIFY_AESTHETIC = """
-WITH expected(image_id, fmt, w, h, decode_ok, pixels_ok, phash_ok, caption_ok,
-              psnr_db, brightness, thumb_var) AS (
-  VALUES {values}
-),
-{img_sel},
+WITH {expected},
 scored AS (
   SELECT e.image_id,
          CAST(floor(CAST(e.thumb_var AS DOUBLE) * 16) AS BIGINT)
@@ -2248,9 +2263,7 @@ def _local_oracle_map() -> dict:
         target=SAMPLE_PER_BUCKET,
     ),
     "image_classify_aesthetic": SQL_IMAGE_CLASSIFY_AESTHETIC.format(
-        values=_values(_expected_image_metrics()),
-        img_sel=_sql_sel(N_IMAGES),
-        thresh=AESTH_THRESH,
+        expected=_sql_image_expected(), thresh=AESTH_THRESH
     ),
     "image_ocr_extract": SQL_IMAGE_OCR_EXTRACT.format(
         values=_values(_expected_scans()), sel=_sql_sel(N_SCANS, "scan")
@@ -2264,7 +2277,7 @@ def _local_oracle_map() -> dict:
 def __getattr__(name: str):
     # PEP 562: oracle maps build on first access (driver-side, once per
     # process), never at import — see the lazy-oracle note above
-    # _sql_multimodal_audio
+    # _sql_expected
     if name == "ORACLES":
         return _oracle_map()
     if name == "LOCAL_ORACLES":

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import sql_components, table
+from .common import sql_components, table, table_rows
 
 DIM = 64
 _QSCALE = 1024  # fixed-point scale: integer sums are associative-exact in both engines
@@ -39,8 +39,10 @@ N_PLANES = 10  # bits per LSH table (see N_TABLES below for the L×B tradeoff)
 BRUTE_FORCE_CAP = 100_000
 
 
-def _guard_brute_force(df: DataFrame, query: str, cap: int = BRUTE_FORCE_CAP) -> None:
-    n = df.count()  # parquet-metadata count on a plain scan — cheap
+def _guard_brute_force(
+    spark: SparkSession, sf_dir: str, name: str, query: str, cap: int = BRUTE_FORCE_CAP
+) -> None:
+    n = table_rows(spark, sf_dir, name)  # parquet footers, no Spark job
     if n > cap:
         raise ValueError(
             f"{query} is the O(n²) exactness baseline and refuses inputs over "
@@ -91,21 +93,23 @@ normed AS (
 
 
 def embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = table(spark, sf_dir, "embeddings")
-    _guard_brute_force(raw, "embed_cosine_topk")
-    e = _with_norm(raw)
+    _guard_brute_force(spark, sf_dir, "embeddings", "embed_cosine_topk")
+    e = _with_norm(table(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"), F.col("nrm").alias("qn")
     )
     c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"), F.col("nrm").alias("cn"))
     sim = F.round(_flat_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 6)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    # explicit-count repartition (AQE never coalesces a user-fixed count):
-    # the candidate scan is 1 file -> 1 partition, and BNLJ parallelism
-    # equals the stream side's partition count (see embed_neardup)
+    # broadcast the N_QUERIES-row query side and stream the candidates: BNLJ
+    # parallelism equals the stream side's partition count, and the
+    # candidate scan is 1 file -> 1 partition, so it is repartitioned to an
+    # explicit count (AQE never coalesces a user-fixed count). Without the
+    # hint the planner builds the repartitioned side and streams the
+    # 1-partition query scan, so one task runs every dot product.
     c = c.repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
     return (
-        q.crossJoin(c)
+        F.broadcast(q).crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("sim", sim)
         .withColumn("rank", F.row_number().over(w))
@@ -131,9 +135,8 @@ SELECT query_id, neighbor_id, rank, sim FROM (
 
 
 def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = table(spark, sf_dir, "embeddings")
-    _guard_brute_force(raw, "embed_neardup")
-    e = _with_norm(raw)
+    _guard_brute_force(spark, sf_dir, "embeddings", "embed_neardup")
+    e = _with_norm(table(spark, sf_dir, "embeddings"))
     a = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"),
                  F.col("nrm").alias("na"), F.col("label").alias("label_a"))
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"),
