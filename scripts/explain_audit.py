@@ -25,6 +25,9 @@ AUDITS = {
     "dedup_minhash_lsh": ([], ["BatchEvalPython", "ArrowEvalPython"]),
     "dedup_ngram_jaccard": ([], ["BatchEvalPython", "ArrowEvalPython"]),
     "embed_lsh_ann": ([], ["CartesianProduct", "BatchEvalPython"]),
+    # the corpus-scale pair source stays bucketed: signature matmul
+    # (MapInPandas), (t, bkt) probe equi-join, vec_id verify joins
+    "embed_neardup_lsh": (["MapInPandas"], ["CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython"]),
     # round 3: both assignment passes are in-partition numpy matmuls
     # (MapInPandas); the only join left is the candidate equi-join on cell —
     # no crossJoin, no per-vec window shuffle, no row-at-a-time Python
@@ -95,7 +98,9 @@ AUDITS = {
     # (MapInPandas), then equi-joins on cell / vec_id only — the pairwise
     # stage can never fall back to a cartesian or per-vec window shuffle
     "embed_semdedup": (["MapInPandas"], ["CartesianProduct", "BroadcastNestedLoopJoin", "Window", "BatchEvalPython"]),
-    "embed_decontaminate": (["MapInPandas"], ["CartesianProduct", "BroadcastNestedLoopJoin", "Window", "BatchEvalPython"]),
+    # (the same, with the assignment behind one eager localCheckpoint, so
+    # the final plan starts at the checkpointed scan)
+    "embed_decontaminate": ([], ["CartesianProduct", "BroadcastNestedLoopJoin", "Window", "BatchEvalPython"]),
     # digest groupBy only: map-side partial agg + ONE shuffle on the digest,
     # no join, no window (min(string) has no fixed-width buffer, so Spark
     # picks SortAggregate — still partial-agg'd before the exchange; Python

@@ -39,10 +39,26 @@ PARITY_SUBSET = [
     "text_langid",
     "embed_cosine_topk",
     "embed_lsh_ann",
+    "embed_ivf_ann",
+    "embed_neardup_lsh",
     "host_pagerank",
     "doc_pack",
     "tfidf_topterms",
 ]
+
+
+def ltr_cos(a, b):
+    """round(a·b / (‖a‖·‖b‖), 6) with every dot summed left to right in
+    float64: bit-equal to `similarity._cos` and its DuckDB twin."""
+    import numpy as np
+
+    def dot(x, y):
+        acc = 0.0
+        for p, q in zip(x, y):
+            acc += p * q
+        return acc
+
+    return round(dot(a, b) / (np.sqrt(dot(a, a)) * np.sqrt(dot(b, b))), 6)
 
 
 @pytest.fixture(scope="module")
@@ -222,18 +238,11 @@ def test_embed_semdedup_verdict(spark):
     from web_crawler_spark.analytics import LOCAL_QUERIES
     from web_crawler_spark.analytics.similarity import SEMDEDUP_T
 
-    def ltr_dot(a, b):  # left-to-right sum, bit-equal to _flat_dot / list_sum
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
     rows = QUERIES["embed_semdedup"](spark, SF_DIR).collect()
     emb = {
         r["vec_id"]: [float(np.float64(x)) for x in r["embedding"]]
         for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet").collect()
     }
-    nrm = {k: np.sqrt(ltr_dot(v, v)) for k, v in emb.items()}
     assert len(rows) == len(emb)  # exactly one verdict per vector
     cells = {}
     for r in rows:
@@ -244,9 +253,7 @@ def test_embed_semdedup_verdict(spark):
         assert members[0][1]  # lowest id per cell always kept
         for i, (vid, keep) in enumerate(members):
             dup = any(
-                round(ltr_dot(emb[uid], emb[vid]) / (nrm[uid] * nrm[vid]), 6)
-                >= SEMDEDUP_T
-                for uid, _ in members[:i]
+                ltr_cos(emb[uid], emb[vid]) >= SEMDEDUP_T for uid, _ in members[:i]
             )
             assert keep == (not dup)
             n_dropped += int(dup)
@@ -265,24 +272,14 @@ def test_embed_decontaminate_verdict(spark):
     from web_crawler_spark.analytics.similarity import (
         EMBED_DECON_MOD,
         EMBED_DECON_T,
-        _assign_cells,
+        _corpus_cells,
     )
-
-    def ltr_dot(a, b):  # left-to-right sum, bit-equal to _flat_dot / list_sum
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
 
     rows = LOCAL_QUERIES["embed_decontaminate"](spark, SF_DIR).collect()
-    e_scan = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
     cell_of, emb = {}, {}
-    for r in _assign_cells(spark, e_scan).collect():
+    for r in _corpus_cells(spark, SF_DIR).collect():
         cell_of[r["vec_id"]] = r["cell"]
         emb[r["vec_id"]] = [float(np.float64(x)) for x in r["embedding"]]
-    nrm = {k: np.sqrt(ltr_dot(v, v)) for k, v in emb.items()}
     bench_by_cell = {}
     for vid, c in cell_of.items():
         if vid % EMBED_DECON_MOD == 0:
@@ -295,8 +292,7 @@ def test_embed_decontaminate_verdict(spark):
         assert vid % EMBED_DECON_MOD != 0
         assert r["cell"] == cell_of[vid]
         expect = any(
-            round(ltr_dot(emb[b], emb[vid]) / (nrm[b] * nrm[vid]), 6)
-            >= EMBED_DECON_T
+            ltr_cos(emb[b], emb[vid]) >= EMBED_DECON_T
             for b in bench_by_cell.get(r["cell"], [])
         )
         assert r["contaminated"] == expect
@@ -582,6 +578,15 @@ def test_embed_cosine_topk_broadcasts_query_side(spark):
     parallel tasks."""
     plan = _executed_plan(QUERIES["embed_cosine_topk"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin BuildLeft" in plan, plan
+
+
+def test_embed_index_stats_builds_with_two_jobs(spark):
+    """Building a corpus-quantizer query runs only the quantizer's seed and
+    training jobs: the corpus row count comes from the parquet footers."""
+    from web_crawler_spark.analytics.similarity import embed_index_stats
+
+    embed_index_stats(spark, SF_DIR)  # warm the table's schema and row count
+    assert _jobs_run(spark, lambda: embed_index_stats(spark, SF_DIR)) == 2
 
 
 def test_image_curate_generates_images_once(spark):
@@ -1293,19 +1298,12 @@ def test_corpus_stats_rollup_totals(spark):
 def test_embed_index_stats_consistency(spark):
     """The index health card's single row must be internally consistent and
     agree with an independent recount of the assignment stage."""
-    from web_crawler_spark.analytics.similarity import (
-        _assign_cells,
-        embed_index_stats,
-    )
-    from web_crawler_spark.analytics.common import table as _table
+    from web_crawler_spark.analytics.similarity import _corpus_cells, embed_index_stats
 
     r = embed_index_stats(spark, SF_DIR).collect()
     assert len(r) == 1
     r = r[0]
-    occ = (
-        _assign_cells(spark, _table(spark, SF_DIR, "embeddings").select("vec_id", "embedding"))
-        .groupBy("cell").count().collect()
-    )
+    occ = _corpus_cells(spark, SF_DIR).groupBy("cell").count().collect()
     ns = sorted(c["count"] for c in occ)
     assert r["n_cells"] == len(ns)
     assert r["n_vecs"] == sum(ns)

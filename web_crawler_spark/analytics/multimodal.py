@@ -33,7 +33,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -651,9 +651,9 @@ def image_caption_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     another image's caption and must gate out (matched pairs score 1.0,
     planted mismatches <= 0.34 here — the gate has real margin).
 
-    Scale shape: two equi-joins on the embedding key and per-row codegen
-    dot products (`similarity._flat_dot`); norms computed once per vector
-    before the joins, never per pair. No similarity self-join anywhere
+    Scale shape: two equi-joins on the embedding key and the embedding
+    tier's one similarity rule (`similarity._cos`); norms computed once per
+    vector before the joins, never per pair. No similarity self-join anywhere
     (this is 1:1 scoring, not retrieval; retrieval is
     embed_lsh_ann/embed_ivf_ann's job). The caps side is hard-capped at
     N_IMAGES rows by the generator's LIMIT — a true bounded constant, so it
@@ -664,7 +664,7 @@ def image_caption_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding scans with zero shuffles and zero big broadcasts). Scoring an
     UNBOUNDED image set instead: drop the hints and let both joins
     sort-merge on the co-partitionable embedding key."""
-    from .similarity import _flat_dot
+    from .similarity import _cos, _with_norm
 
     doc_id = F.substring("image_id", 5, 20).cast("bigint")
     miscap = F.concat(
@@ -680,20 +680,13 @@ def image_caption_align(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("ref_id", F.regexp_extract("caption", r"img-(\d+)$", 1).cast("bigint"))
     )
-    normed = table(spark, sf_dir, "embeddings").withColumn(
-        "nrm", F.sqrt(_flat_dot("embedding", "embedding"))
-    )
-    v = normed.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vemb"),
-                      F.col("nrm").alias("vn"))
-    t = normed.select(F.col("vec_id").alias("tid"), F.col("embedding").alias("temb"),
-                      F.col("nrm").alias("tn"))
+    e = table(spark, sf_dir, "embeddings")
+    v = _with_norm(e, "vid", "vemb")
+    t = _with_norm(e, "tid", "temb")
     j1 = F.broadcast(F.broadcast(caps).join(v, caps.doc_id == v.vid))
     return (
         j1.join(t, j1.ref_id == t.tid)
-        .withColumn(
-            "align_sim",
-            F.round(_flat_dot("vemb", "temb") / (F.col("vn") * F.col("tn")), 6),
-        )
+        .withColumn("align_sim", _cos("vemb", "temb"))
         .select(
             "image_id", "align_sim",
             (F.col("align_sim") >= ALIGN_T).alias("keep"),
@@ -742,18 +735,15 @@ def caption_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Columns: image_id, neg_ref (candidate caption's payload id), hn_rank,
     sim (exact re-ranked cosine from the ANN stage, rounded 6)."""
-    from .similarity import embed_ivf_ann
+    from .similarity import _top_k, embed_ivf_ann
 
     ann = embed_ivf_ann(spark, sf_dir)  # query_id, neighbor_id, rank, sim
     q = F.col("query_id")
     claimed_ref = F.when(
         q % N_MISCAP == 0, (q + MISCAP_SHIFT) % N_IMAGES
     ).otherwise(q)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return (
-        ann.filter(F.col("neighbor_id") != claimed_ref)
-        .withColumn("hn_rank", F.row_number().over(w))
-        .filter(F.col("hn_rank") <= HN_K)
+        _top_k(ann.filter(F.col("neighbor_id") != claimed_ref), HN_K, "hn_rank")
         .select(
             F.concat(F.lit("img-"), q.cast("string")).alias("image_id"),
             F.col("neighbor_id").alias("neg_ref"),
@@ -765,7 +755,7 @@ def caption_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @functools.lru_cache(maxsize=None)
 def _sql_caption_hard_negatives() -> str:
-    from .similarity import SQL_EMBED_IVF_ANN
+    from .similarity import SQL_EMBED_IVF_ANN, _sql_top_k
 
     return f"""
 WITH ann AS ({SQL_EMBED_IVF_ANN}),
@@ -778,11 +768,7 @@ negs AS (
 )
 SELECT 'img-' || CAST(query_id AS VARCHAR) AS image_id,
        neighbor_id AS neg_ref, hn_rank, sim
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY sim DESC, neighbor_id) AS hn_rank
-  FROM negs
-) WHERE hn_rank <= {HN_K}
+FROM ({_sql_top_k('negs', HN_K, 'hn_rank')})
 """
 
 
@@ -1423,16 +1409,10 @@ FROM sel JOIN expected e USING (image_id)
 
 @functools.lru_cache(maxsize=None)
 def _sql_caption_align() -> str:
-    # import here: similarity's DuckDB dot helper (1-indexed list comprehension,
-    # same left-to-right float sum as Spark's _flat_dot — see similarity.py)
-    from .similarity import _sql_dot
+    from .similarity import _SQL_NORMED, _sql_cos
 
     return f"""
-WITH normed AS (
-  SELECT vec_id, embedding,
-         sqrt({_sql_dot('embedding', 'embedding')}) AS nrm
-  FROM embeddings
-),
+WITH {_SQL_NORMED},
 {_sql_sel(N_IMAGES)},
 cap AS (
   SELECT image_id, doc_id,
@@ -1442,8 +1422,7 @@ cap AS (
   FROM sel
 ),
 sims AS (
-  SELECT c.image_id,
-         round({_sql_dot('v.embedding', 't.embedding')} / (v.nrm * t.nrm), 6) AS align_sim
+  SELECT c.image_id, {_sql_cos('v', 't')} AS align_sim
   FROM cap c
   JOIN normed v ON v.vec_id = c.doc_id
   JOIN normed t ON t.vec_id = c.ref_id

@@ -1,20 +1,39 @@
-"""Similarity search over the `embeddings` table (array<float>, dim 64).
+"""Similarity search and embedding-space curation over the `embeddings`
+table (vec_id, embedding array<float> of dim 64, label).
 
-- embed_cosine_topk: brute-force cosine top-k (the exactness baseline)
-- embed_neardup:     all-pairs cosine >= threshold (embedding near-dup dedup)
-- embed_lsh_ann:     multi-table sign-LSH with Hamming-1 multiprobe ->
-                     top-k on bucket-collision candidates (the scale path:
-                     at 10^10 vectors the crossjoin dies; the candidate join
-                     shuffles on (table, bucket) instead)
+Queries (`QUERIES` first, then `LOCAL_QUERIES`):
+- embed_cosine_topk:    brute-force cosine top-k (the exactness baseline)
+- embed_lsh_ann:        multi-table sign-LSH, Hamming-1 multiprobe, exact
+                        top-k on bucket-collision candidates
+- embed_ivf_ann:        IVF-flat ANN over a trained coarse quantizer
+- embed_semdedup:       cell-bounded semantic dedup (keep/drop per vector)
+- embed_index_stats:    cell-occupancy health card of the corpus quantizer
+- embed_neardup:        all-pairs cosine >= NEARDUP_T (guarded baseline)
+- embed_neardup_lsh:    the same pairs from LSH probes (corpus-scale source)
+- embed_dedup_clusters: keeper-per-cluster verdict over embed_neardup
+- embed_decontaminate:  training vectors too close to the benchmark split
 
-Numeric discipline: dot products are computed as an explicit left-to-right
-sum over index order in BOTH engines (a flat codegen term chain in Spark —
-see `_flat_dot` — and an indexed list comprehension + list_sum in DuckDB) so
-the floating sum is order-identical; similarities are rounded to 6 dp before
-ranking/thresholding and ranks are tie-broken by vec_id, making the output
-integer-exact. JVM-side expressions throughout, except the LSH signature
-stage — an integer matmul in one Arrow/numpy mapInPandas pass (see
-_signature_buckets for why that beats every codegen formulation tried).
+One cosine core serves every query, its DuckDB oracle, the ingest streams
+(`streaming.stream_decontaminate`, `streaming.stream_curate_image`) and
+`multimodal.image_caption_align`, with one definition per engine of each
+rule:
+- similarity: `_cos` / `_sql_cos`, round(a·b / (‖a‖·‖b‖), 6) over norms
+  from `_with_norm` / `_SQL_NORMED`. Dot products are an explicit
+  left-to-right sum over index order in BOTH engines (a flat codegen term
+  chain in Spark, `_flat_dot`; an indexed list comprehension + list_sum in
+  DuckDB, `_sql_dot`), so the floating sums are order-identical and the
+  rounded sims bit-equal;
+- top-k: `_top_k` / `_sql_top_k`, ties broken by (sim DESC, neighbor_id);
+- LSH candidates: `_probe_pairs` / `_sql_probe_pairs`, the one-sided
+  Hamming-1 multiprobe join over `_signature_buckets` / `_SQL_TABLE_BUCKETS`;
+- quantizer cells: one numpy kernel (`_quantize` → `_cell_sims`,
+  integer-exact) in the training pass and in `_ranked_cells`, the twin of
+  the oracles' `ranked` CTE (`_sql_ivf_cells`).
+
+Pair joins, verify and top-k are JVM-side expressions; the LSH signature,
+quantizer training and cell ranking are Arrow/numpy mapInPandas passes
+(integer matmuls — see `_signature_buckets` for why they beat every codegen
+formulation tried).
 """
 
 from __future__ import annotations
@@ -50,6 +69,11 @@ def _guard_brute_force(
             "corpus-scale similarity search"
         )
 
+
+# ---------------------------------------------------------------------------
+# the cosine core: similarity, norms, top-k
+# ---------------------------------------------------------------------------
+
 def _flat_dot(a: str, b: str):
     """Whole-stage-codegen dot product: an explicit left-to-right sum of
     a[i]*b[i] terms. Bit-identical to an interpreted aggregate/zip_with fold
@@ -80,68 +104,94 @@ def _sql_dot(a: str, b: str) -> str:
     )
 
 
-def _with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
-    return df.withColumn("nrm", F.sqrt(_flat_dot(vec, vec)))
+def _with_norm(df: DataFrame, id_as: str | None, v: str, *cols) -> DataFrame:
+    """One side of a cosine pairing: `vec_id` as `id_as` (dropped when None),
+    the embedding as `v` and its norm as `{v}_nrm` — the columns `_cos`
+    reads — plus *cols*. Norms are computed once per vector, never per pair."""
+    ids = [F.col("vec_id").alias(id_as)] if id_as else []
+    return df.select(
+        *ids, F.col("embedding").alias(v),
+        F.sqrt(_flat_dot("embedding", "embedding")).alias(f"{v}_nrm"), *cols,
+    )
 
 
-_SQL_NORMED = f"""
-normed AS (
-  SELECT vec_id, embedding, sqrt({_sql_dot('embedding', 'embedding')}) AS nrm
-  FROM embeddings
-)
-"""
+def _cos(u: str, v: str):
+    """The similarity rule: round(u·v / (‖u‖·‖v‖), 6) of two `_with_norm`
+    sides. Rounding before every rank or threshold makes both engines'
+    outputs integer-exact."""
+    return F.round(_flat_dot(u, v) / (F.col(f"{u}_nrm") * F.col(f"{v}_nrm")), 6)
 
+
+_SQL_NORMED = f"""normed AS (
+  SELECT *, sqrt({_sql_dot('embedding', 'embedding')}) AS nrm FROM embeddings
+)"""
+
+
+def _sql_cos(a: str, b: str) -> str:
+    """DuckDB twin of `_cos` over two `normed` rows aliased *a* and *b*."""
+    return f"round({_sql_dot(f'{a}.embedding', f'{b}.embedding')} / ({a}.nrm * {b}.nrm), 6)"
+
+
+def _top_k(pairs: DataFrame, k: int = TOP_K, rank: str = "rank") -> DataFrame:
+    """Each query's *k* best (query_id, neighbor_id, sim) rows, ranked by
+    (sim DESC, neighbor_id) into column *rank*."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
+    return (
+        pairs.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .select("query_id", "neighbor_id", rank, "sim")
+    )
+
+
+def _sql_top_k(pairs: str, k: int = TOP_K, rank: str = "rank") -> str:
+    """DuckDB twin of `_top_k` over the relation *pairs*."""
+    return f"""SELECT query_id, neighbor_id, {rank}, sim FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id
+                               ORDER BY sim DESC, neighbor_id) AS {rank}
+  FROM {pairs}
+) WHERE {rank} <= {k}"""
+
+
+# ---------------------------------------------------------------------------
+# brute force
+# ---------------------------------------------------------------------------
 
 def embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _guard_brute_force(spark, sf_dir, "embeddings", "embed_cosine_topk")
-    e = _with_norm(table(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"), F.col("nrm").alias("qn")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"), F.col("nrm").alias("cn"))
-    sim = F.round(_flat_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
+    e = table(spark, sf_dir, "embeddings")
+    q = _with_norm(e.filter(F.col("vec_id") < N_QUERIES), "query_id", "qv")
     # broadcast the N_QUERIES-row query side and stream the candidates: BNLJ
     # parallelism equals the stream side's partition count, and the
     # candidate scan is 1 file -> 1 partition, so it is repartitioned to an
     # explicit count (AQE never coalesces a user-fixed count). Without the
     # hint the planner builds the repartitioned side and streams the
     # 1-partition query scan, so one task runs every dot product.
-    c = c.repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
-    return (
+    c = _with_norm(e, "neighbor_id", "cv").repartition(
+        int(spark.conf.get("spark.sql.shuffle.partitions"))
+    )
+    return _top_k(
         F.broadcast(q).crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "sim")
+        .withColumn("sim", _cos("qv", "cv"))
     )
 
 
 SQL_EMBED_COSINE_TOPK = f"""
 WITH {_SQL_NORMED},
 pairs AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({_sql_dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm), 6) AS sim
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_sql_cos('q', 'c')} AS sim
   FROM normed q JOIN normed c ON q.vec_id != c.vec_id
   WHERE q.vec_id < {N_QUERIES}
 )
-SELECT query_id, neighbor_id, rank, sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY sim DESC, neighbor_id) AS rank
-  FROM pairs
-) WHERE rank <= {TOP_K}
+{_sql_top_k('pairs')}
 """
 
 
 def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _guard_brute_force(spark, sf_dir, "embeddings", "embed_neardup")
-    e = _with_norm(table(spark, sf_dir, "embeddings"))
-    a = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"),
-                 F.col("nrm").alias("na"), F.col("label").alias("label_a"))
-    b = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"),
-                 F.col("nrm").alias("nb"), F.col("label").alias("label_b"))
-    sim = F.round(_flat_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
+    e = table(spark, sf_dir, "embeddings")
+    a = _with_norm(e, "vec_a", "va", F.col("label").alias("label_a"))
+    b = _with_norm(e, "vec_b", "vb", F.col("label").alias("label_b"))
     # spread the pair evaluation: the embeddings scan is often ONE file/
     # partition, and a BroadcastNestedLoopJoin's parallelism equals its
     # stream-side partition count — without this repartition a single task
@@ -150,24 +200,25 @@ def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         a.crossJoin(b)
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("sim", sim)
+        .withColumn("sim", _cos("va", "vb"))
         .filter(F.col("sim") >= NEARDUP_T)
         .select("vec_a", "vec_b", "sim", "label_a", "label_b")
     )
 
 
 SQL_EMBED_NEARDUP = f"""
-WITH normed AS (
-  SELECT vec_id, embedding, label, sqrt({_sql_dot('embedding', 'embedding')}) AS nrm
-  FROM embeddings
-)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round({_sql_dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm), 6) AS sim,
-       a.label AS label_a, b.label AS label_b
-FROM normed a JOIN normed b ON a.vec_id < b.vec_id
-WHERE round({_sql_dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm), 6) >= {NEARDUP_T}
+WITH {_SQL_NORMED}
+SELECT * FROM (
+  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {_sql_cos('a', 'b')} AS sim,
+         a.label AS label_a, b.label AS label_b
+  FROM normed a JOIN normed b ON a.vec_id < b.vec_id
+) WHERE sim >= {NEARDUP_T}
 """
 
+
+# ---------------------------------------------------------------------------
+# sign-LSH: signatures and the one Hamming-1 multiprobe join
+# ---------------------------------------------------------------------------
 
 # deterministic pseudo-random hyperplane component, plane g (global id) x i
 # (1-based dim): first 8 md5 hex chars centered on 2^31. Computed driver-side
@@ -200,13 +251,11 @@ def _signature_buckets(spark: SparkSession, e: DataFrame) -> DataFrame:
     """(vec_id, t, bkt) bucket assignments for all N_TABLES LSH tables.
 
     One Arrow-batched mapInPandas over the embeddings scan: the signature is
-    an INTEGER matrix product XQ (n×DIM, _QSCALE-quantized components) @ C
+    an INTEGER matrix product XQ (n×DIM, `_quantize`d components) @ C
     (DIM×L·B plane constants) followed by sign-bit packing — all int64, so
     the result is associative-exact and bit-equal to any per-term sum order
     (|term| < 2^42, DIM terms, far inside int64), including the DuckDB
-    oracle's list_sum fold. Quantization matches both engines exactly:
-    float32 → float64 cast is exact, ×_QSCALE (a power of two) is exact,
-    floor then int.
+    oracle's list_sum fold.
 
     History, so nobody walks back down this path: (1) per-row md5() inside
     the expression — n·planes·DIM md5 calls in an interpreted fold, minutes
@@ -237,9 +286,7 @@ def _signature_buckets(spark: SparkSession, e: DataFrame) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            XQ = np.floor(X * _QSCALE).astype(np.int64)
-            bits = np.where(XQ @ Cm > 0, Pw, 0)
+            bits = np.where(_quantize(pdf["embedding"]) @ Cm > 0, Pw, 0)
             bkts = bits.reshape(len(pdf), N_TABLES, N_PLANES).sum(axis=2).astype(np.int32)
             yield pd.DataFrame(
                 {
@@ -268,15 +315,58 @@ def _sql_bucket_expr(t: int) -> str:
     return " + ".join(bits)
 
 
-# multiprobe: each query also probes the N_PLANES buckets at Hamming
-# distance 1 in every table (query side only — the indexed side stays one
-# bucket per (vec, table), so the index is unchanged and the probe fan-out
-# is a constant L·(B+1) keys per query, independent of corpus size).
-# Raises per-table collision probability from (1-θ/π)^B to
+_SQL_TABLE_BUCKETS = " UNION ALL ".join(
+    f"SELECT vec_id, {t} AS t, CAST({_sql_bucket_expr(t)} AS INT) AS bkt FROM embeddings"
+    for t in range(N_TABLES)
+)
+
+# multiprobe: each probing vector also probes the N_PLANES buckets at
+# Hamming distance 1 in every table (probe side only — the indexed side
+# stays one bucket per (vec, table), so the index is unchanged and the
+# probe fan-out is a constant L·(B+1) keys per vector, independent of
+# corpus size). Raises per-table collision probability from (1-θ/π)^B to
 # (1-θ/π)^B + B·(θ/π)(1-θ/π)^(B-1), which is what lets B stretch to 10
 # bits (non-neighbor collisions ~(B+1)/2^B) without giving up neighbor
-# recall — measured numbers at the N_TABLES comment below and in BENCH.md.
+# recall — measured numbers at the N_TABLES comment above and in BENCH.md.
 _PROBE_MASKS = [0] + [1 << p for p in range(N_PLANES)]
+
+
+def _probe_pairs(probe: DataFrame, index: DataFrame) -> DataFrame:
+    """(vec_p, vec_i) candidate pairs of the one-sided Hamming-1 multiprobe:
+    every `probe` bucket row (vec_id, t, bkt) expands to its bucket and each
+    1-bit flip and equi-joins the `index` buckets on (t, bkt), so a pair is
+    a candidate iff its two signatures are within Hamming distance 1 in ANY
+    table. XOR is symmetric, so probing from every vector and canonicalizing
+    with least/greatest covers the unordered pair set. Self-pairs are
+    dropped; a pair repeats once per matching (table, probe)."""
+    probes = (
+        probe.select(
+            F.col("vec_id").alias("vec_p"),
+            "t",
+            F.explode(F.array(*[F.lit(m) for m in _PROBE_MASKS])).alias("_m"),
+            "bkt",
+        )
+        .withColumn("bkt", F.expr("bkt ^ _m"))
+        .drop("_m")
+    )
+    return (
+        probes.join(index.select(F.col("vec_id").alias("vec_i"), "t", "bkt"), ["t", "bkt"])
+        .filter(F.col("vec_p") != F.col("vec_i"))
+    )
+
+
+def _sql_probe_pairs(probe_where: str) -> str:
+    """DuckDB twin of `_probe_pairs`: CTEs `buckets` and `probe_pairs`
+    (vec_p, vec_i), probing from the bucket rows that satisfy *probe_where*."""
+    return f"""buckets AS ({_SQL_TABLE_BUCKETS}),
+probe_pairs AS (
+  SELECT a.vec_id AS vec_p, b.vec_id AS vec_i
+  FROM (SELECT vec_id, t, xor(bkt, m.m) AS bkt
+        FROM buckets, (SELECT unnest({_PROBE_MASKS}) AS m) m
+        WHERE {probe_where}) a
+  JOIN buckets b ON a.t = b.t AND a.bkt = b.bkt
+  WHERE a.vec_id != b.vec_id
+)"""
 
 
 def embed_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -286,77 +376,67 @@ def embed_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^10 vectors the candidate join shuffles on (table, bucket) — L·n rows
     on the indexed side, L·(B+1)·q on the probe side — never all pairs —
     and the verify joins shuffle on vec_id."""
-    e = _with_norm(table(spark, sf_dir, "embeddings"))
-    b = _signature_buckets(spark, table(spark, sf_dir, "embeddings"))
-    probes = (
-        b.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "t",
-            F.explode(F.array(*[F.lit(m) for m in _PROBE_MASKS])).alias("_m"),
-            "bkt",
-        )
-        .withColumn("bkt", F.expr("bkt ^ _m"))
-        .drop("_m")
-    )
+    e = table(spark, sf_dir, "embeddings")
+    b = _signature_buckets(spark, e)
     cand = (
-        probes
-        .join(b.select(F.col("vec_id").alias("neighbor_id"), "t", "bkt"), ["t", "bkt"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
+        _probe_pairs(b.filter(F.col("vec_id") < N_QUERIES), b)
+        .select(F.col("vec_p").alias("query_id"), F.col("vec_i").alias("neighbor_id"))
         .distinct()
     )
-    q = e.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-                 F.col("nrm").alias("qn"))
-    c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"),
-                 F.col("nrm").alias("cn"))
-    sim = F.round(_flat_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        cand.join(q, "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "sim")
+    return _top_k(
+        cand.join(_with_norm(e, "query_id", "qv"), "query_id")
+        .join(_with_norm(e, "neighbor_id", "cv"), "neighbor_id")
+        .withColumn("sim", _cos("qv", "cv"))
     )
 
-
-_SQL_TABLE_BUCKETS = " UNION ALL ".join(
-    f"SELECT vec_id, {t} AS t, CAST({_sql_bucket_expr(t)} AS INT) AS bkt FROM embeddings"
-    for t in range(N_TABLES)
-)
 
 SQL_EMBED_LSH_ANN = f"""
 WITH {_SQL_NORMED},
-buckets AS ({_SQL_TABLE_BUCKETS}),
-probes AS (
-  SELECT vec_id, t, xor(bkt, m.m) AS bkt
-  FROM buckets, (SELECT unnest({_PROBE_MASKS}) AS m) m
-  WHERE vec_id < {N_QUERIES}
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
-  FROM probes a JOIN buckets b ON a.t = b.t AND a.bkt = b.bkt
-  WHERE a.vec_id != b.vec_id
-),
+{_sql_probe_pairs(f"vec_id < {N_QUERIES}")},
 pairs AS (
-  SELECT cand.query_id, cand.neighbor_id,
-         round({_sql_dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm), 6) AS sim
-  FROM cand
+  SELECT cand.query_id, cand.neighbor_id, {_sql_cos('q', 'c')} AS sim
+  FROM (SELECT DISTINCT vec_p AS query_id, vec_i AS neighbor_id FROM probe_pairs) cand
   JOIN normed q ON q.vec_id = cand.query_id
   JOIN normed c ON c.vec_id = cand.neighbor_id
 )
-SELECT query_id, neighbor_id, rank, sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY sim DESC, neighbor_id) AS rank
-  FROM pairs
-) WHERE rank <= {TOP_K}
+{_sql_top_k('pairs')}
 """
 
 
+# ---------------------------------------------------------------------------
+# trained coarse quantizer: one cell-ranking kernel for training, IVF probes
+# and cell assignment
+# ---------------------------------------------------------------------------
+
 N_CENTROIDS = 8  # coarse-quantizer cells
 NPROBE = 2       # cells searched per query (recall/cost knob)
+
+
+def _quantize(vectors):
+    """Fixed-point quantization of a sequence of embeddings into an int64
+    matrix: float32 → float64 cast is exact, ×_QSCALE (a power of two) is
+    exact, floor then int64 — bit-equal to the oracles' `_SQL_QARR`."""
+    import numpy as np
+
+    return np.floor(np.stack(vectors).astype(np.float64) * _QSCALE).astype(np.int64)
+
+
+def _qnorm(XQ):
+    """sqrt of each quantized row's exact int64 squared norm."""
+    import numpy as np
+
+    return np.sqrt((XQ * XQ).sum(axis=1).astype(np.float64))
+
+
+def _cell_sims(XQ, CT, cn):
+    """The cell-ranking kernel: cosine of each quantized row against each
+    cell (rows of CT, norms cn) as an int64 matmul numerator (associative-
+    exact; overflow only past ~10^11 vectors per cell) over one IEEE
+    multiply of two sqrt's. numpy and the DuckDB oracle agree bit-for-bit
+    with NO rounding step; rank ties go to the lower cell index."""
+    import numpy as np
+
+    return (XQ @ CT.T).astype(np.float64) / (_qnorm(XQ)[:, None] * cn[None, :])
 
 
 def _ltr_sq_norm(row) -> float:
@@ -369,21 +449,9 @@ def _ltr_sq_norm(row) -> float:
     return acc
 
 
-def _quant_np(pdf):
-    """Fixed-point quantization of an Arrow batch: float32 → float64 cast is
-    exact, ×_QSCALE (a power of two) is exact, floor then int64 — matching
-    the DuckDB oracles' CAST(floor(... * _QSCALE) AS BIGINT) bit-for-bit."""
-    import numpy as np
-
-    X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-    XQ = np.floor(X * _QSCALE).astype(np.int64)
-    na = (XQ * XQ).sum(axis=1)
-    return XQ, np.sqrt(na.astype(np.float64))
-
-
 def _train_quantizer(spark: SparkSession, e_scan: DataFrame, k: int = N_CENTROIDS):
     """One deterministic k-means refinement, shared by embed_ivf_ann and
-    embed_semdedup: seed cells = nearest of the first k vectors;
+    the corpus quantizer: seed cells = nearest of the first k vectors;
     each refined centroid is the per-component SUM of its members'
     fixed-point-quantized components (floor(x·1024) as int64). Integer sums
     are associative-exact, so the trained centroids are bit-identical
@@ -391,14 +459,10 @@ def _train_quantizer(spark: SparkSession, e_scan: DataFrame, k: int = N_CENTROID
     can't give on a 1000-executor cluster — and cosine against a sum equals
     cosine against the mean (the member count cancels in the normalization).
 
-    Seed assignment is an Arrow/numpy integer matmul inside mapInPandas
-    (the _signature_buckets pattern): assignment sims are int64 numerators
-    (XQ @ C.T — overflow only past ~10^11 vectors per cell) over a
-    single-IEEE-multiply denominator, so numpy and the DuckDB oracle agree
-    bit-for-bit with NO rounding step; ties break on cent_id (first argmax
-    == ORDER BY sim DESC, cent_id). Training reduces O(P·k) per-partition
-    partial-sum rows on the driver (bounded like the graph.py partition
-    totals); the trained centroids ride back in a broadcast of
+    Seed assignment runs the `_cell_sims` kernel inside mapInPandas (first
+    argmax == ORDER BY sim DESC, cent_id). Training reduces O(P·k)
+    per-partition partial-sum rows on the driver (bounded like the graph.py
+    partition totals); the trained centroids ride back in a broadcast of
     (CT int64[k×DIM], cent_ids int64[k], ct_cn float64[k])."""
     import numpy as np
 
@@ -407,11 +471,8 @@ def _train_quantizer(spark: SparkSession, e_scan: DataFrame, k: int = N_CENTROID
         e_scan.filter(F.col("vec_id") < k).collect(),
         key=lambda r: r.vec_id,
     )
-    SQ = np.floor(
-        np.array([r.embedding for r in seed_rows], dtype=np.float64) * _QSCALE
-    ).astype(np.int64)
-    seed_cn = np.sqrt(((SQ * SQ).sum(axis=1)).astype(np.float64))
-    bc_seed = spark.sparkContext.broadcast((SQ, seed_cn))
+    SQ = _quantize([r.embedding for r in seed_rows])
+    bc_seed = spark.sparkContext.broadcast((SQ, _qnorm(SQ)))
 
     def gen_train(batches):
         import pandas as pd
@@ -422,9 +483,8 @@ def _train_quantizer(spark: SparkSession, e_scan: DataFrame, k: int = N_CENTROID
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            XQ, sqrt_na = _quant_np(pdf)
-            sim = (XQ @ SQm.T).astype(np.float64) / (sqrt_na[:, None] * scn[None, :])
-            cell0 = np.argmax(sim, axis=1)  # first max == lowest cent_id on ties
+            XQ = _quantize(pdf["embedding"])
+            cell0 = np.argmax(_cell_sims(XQ, SQm, scn), axis=1)
             np.add.at(S, cell0, XQ)
             cnt += np.bincount(cell0, minlength=k)
         yield pd.DataFrame(
@@ -447,38 +507,28 @@ def _train_quantizer(spark: SparkSession, e_scan: DataFrame, k: int = N_CENTROID
     return spark.sparkContext.broadcast((CT, cent_ids, ct_cn))
 
 
-def embed_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat ANN with a TRAINED coarse quantizer and nprobe cells/query
-    (training/assignment numerics: see _train_quantizer).
+def _ranked_cells(e_scan: DataFrame, bc_cent) -> DataFrame:
+    """(vec_id, rnk, cell, embedding): each vector's trained cells ranked by
+    the `_cell_sims` kernel (ties: lower cent_id) — NPROBE rows per query id
+    (vec_id < N_QUERIES), one for every other vector. The twin of the
+    oracles' `ranked` CTE, in ONE zero-shuffle Arrow pass: the row_number
+    windows it replaced partitioned the n·k crossed rows BY VEC_ID, a
+    full-corpus shuffle just to pick each row's best cells."""
 
-    Round 3: both assignment passes are Arrow/numpy integer matmuls inside
-    mapInPandas (the _signature_buckets pattern) instead of
-    crossJoin(broadcast) + row_number windows. The windows partitioned the
-    n·k crossed rows BY VEC_ID — two full-corpus shuffles just to pick each
-    row's argmax over 8 cells; the matmul computes the same assignment
-    per-partition with ZERO shuffles, so at 10^10 vectors the only wide
-    exchange left in the plan is the candidate join on cell id. Final exact
-    re-rank on raw embeddings is unchanged.
-    """
-    import numpy as np
-
-    e_scan = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    bc_cent = _train_quantizer(spark, e_scan)
-
-    def gen_assign(batches):
+    def gen(batches):
+        import numpy as np
         import pandas as pd
 
-        CTm, cids, ccn = bc_cent.value
-        nprobe_eff = min(NPROBE, len(cids))
+        CT, cids, ccn = bc_cent.value
+        nprobe = min(NPROBE, len(cids))
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            XQ, sqrt_na = _quant_np(pdf)
-            sim = (XQ @ CTm.T).astype(np.float64) / (sqrt_na[:, None] * ccn[None, :])
-            order = np.argsort(-sim, axis=1, kind="stable")  # ties: lower cent_id
+            sims = _cell_sims(_quantize(pdf["embedding"]), CT, ccn)
+            order = np.argsort(-sims, axis=1, kind="stable")  # ties: lower cent_id
             vids = pdf["vec_id"].to_numpy()
-            reps = np.where(vids < N_QUERIES, nprobe_eff, 1)
+            reps = np.where(vids < N_QUERIES, nprobe, 1)
             idx = np.repeat(np.arange(n), reps)
             rnk = np.arange(len(idx)) - np.repeat(np.cumsum(reps) - reps, reps)
             yield pd.DataFrame(
@@ -490,27 +540,15 @@ def embed_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    assigned = e_scan.mapInPandas(
-        gen_assign, "vec_id bigint, rnk int, cell bigint, embedding array<float>"
+    return e_scan.mapInPandas(
+        gen, "vec_id bigint, rnk int, cell bigint, embedding array<float>"
     )
-    q = _with_norm(assigned.filter(F.col("vec_id") < N_QUERIES)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-        F.col("nrm").alias("qn"), "cell",
-    )
-    c = _with_norm(assigned.filter(F.col("rnk") == 1)).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv2"),
-        F.col("nrm").alias("cn2"), "cell",
-    )
-    sim = F.round(_flat_dot("qv", "cv2") / (F.col("qn") * F.col("cn2")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        q.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+
+
+def _assign_cells(e_scan: DataFrame, bc_cent) -> DataFrame:
+    """(vec_id, cell, embedding): every vector's nearest trained cell, the
+    `rnk = 1` rows of `_ranked_cells`."""
+    return _ranked_cells(e_scan, bc_cent).filter(F.col("rnk") == 1).drop("rnk")
 
 
 _SQL_QARR = (
@@ -519,35 +557,23 @@ _SQL_QARR = (
 )
 
 
-def _sql_dot_big(a: str, b: str) -> str:
-    return (
-        f"list_sum([CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) "
-        f"FOR i IN generate_series(1, {DIM})])"
-    )
-
-
 def _sql_idot(a: str, b: str) -> str:
     """Integer dot of two quantized BIGINT lists — associative-exact, so it
     equals numpy's int64 matmul regardless of summation order."""
     return f"list_sum([{a}[i] * {b}[i] FOR i IN generate_series(1, {DIM})])"
 
 
-# Assignment similarity mirrors the Spark numpy pass bit-for-bit: int64
-# numerator (associative-exact), denominator = one IEEE multiply of two
-# sqrt's of exactly-representable values, NO rounding step needed.
-# Shared WITH-prefix (quantize → seed-assign → train → rank cells per vec)
-# for every trained-quantizer oracle: embed_ivf_ann (k = N_CENTROIDS) and
-# embed_semdedup (k scales with the corpus — pass a scalar-subquery k_expr).
+# Shared WITH-prefix (quantize → seed-assign → train → rank cells per vec →
+# nearest cell) for every trained-quantizer oracle: embed_ivf_ann
+# (k = N_CENTROIDS) and the corpus quantizer's queries (k scales with the
+# corpus — pass a scalar-subquery k_expr). The cell sims mirror
+# `_cell_sims` bit-for-bit; `ranked` and `assigned` are the twins of
+# `_ranked_cells` and `_assign_cells`.
 def _sql_ivf_cells(k_expr: str) -> str:
-    return f"""normed AS (
-  SELECT vec_id, embedding, sqrt({_sql_dot('embedding', 'embedding')}) AS nrm,
-         {_SQL_QARR} AS qarr
-  FROM embeddings
-),
+    return f"""{_SQL_NORMED},
 quant AS (
-  SELECT vec_id, embedding, nrm, qarr,
-         CAST({_sql_idot('qarr', 'qarr')} AS BIGINT) AS na
-  FROM normed
+  SELECT *, CAST({_sql_idot('qarr', 'qarr')} AS BIGINT) AS na
+  FROM (SELECT *, {_SQL_QARR} AS qarr FROM normed)
 ),
 cents0 AS (SELECT vec_id AS cent_id, qarr AS sq, na AS sna
            FROM quant WHERE vec_id < {k_expr}),
@@ -571,7 +597,7 @@ cents_raw AS (
   SELECT cent_id, list(s ORDER BY i) AS cv FROM csum GROUP BY cent_id
 ),
 cents AS (
-  SELECT cent_id, cv, sqrt({_sql_dot_big('cv', 'cv')}) AS cn FROM cents_raw
+  SELECT cent_id, cv, sqrt({_sql_dot('cv', 'cv')}) AS cn FROM cents_raw
 ),
 ranked AS (
   SELECT n.vec_id, n.embedding, n.nrm, c.cent_id AS cell,
@@ -581,24 +607,36 @@ ranked AS (
                     / (sqrt(CAST(n.na AS DOUBLE)) * c.cn) DESC,
                     c.cent_id) AS _cr
   FROM quant n CROSS JOIN cents c
-)"""
+),
+assigned AS (SELECT vec_id, embedding, nrm, cell FROM ranked WHERE _cr = 1)"""
 
 
-_SQL_IVF_CELLS = _sql_ivf_cells(str(N_CENTROIDS))
+def embed_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-flat ANN with a TRAINED coarse quantizer and nprobe cells/query
+    (training numerics: see _train_quantizer). Queries take their NPROBE
+    `_ranked_cells` rows, candidates their nearest cell; at 10^10 vectors
+    the only wide exchange is the candidate join on cell id, then an exact
+    re-rank on the raw embeddings."""
+    e_scan = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    bc_cent = _train_quantizer(spark, e_scan)
+    ranked = _ranked_cells(e_scan, bc_cent)
+    q = _with_norm(ranked.filter(F.col("vec_id") < N_QUERIES), "query_id", "qv", "cell")
+    c = _with_norm(_assign_cells(e_scan, bc_cent), "neighbor_id", "cv", "cell")
+    return _top_k(
+        q.join(c, "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("sim", _cos("qv", "cv"))
+    )
+
 
 SQL_EMBED_IVF_ANN = f"""
-WITH {_SQL_IVF_CELLS},
+WITH {_sql_ivf_cells(str(N_CENTROIDS))},
 pairs AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({_sql_dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm), 6) AS sim
-  FROM ranked q JOIN ranked c ON q.cell = c.cell AND q.vec_id != c.vec_id
-  WHERE q.vec_id < {N_QUERIES} AND q._cr <= {NPROBE} AND c._cr = 1
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_sql_cos('q', 'c')} AS sim
+  FROM ranked q JOIN assigned c ON q.cell = c.cell AND q.vec_id != c.vec_id
+  WHERE q.vec_id < {N_QUERIES} AND q._cr <= {NPROBE}
 )
-SELECT query_id, neighbor_id, rank, sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY sim DESC, neighbor_id) AS rank
-  FROM pairs
-) WHERE rank <= {TOP_K}
+{_sql_top_k('pairs')}
 """
 
 
@@ -618,14 +656,12 @@ def embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed all-pairs embedding near-dup — the CORPUS-SCALE pair source
     (`embed_neardup` is the O(n²) exactness baseline behind a cardinality
     guard; this is what actually runs at 10^10 vectors): candidate pairs
-    have table signatures within Hamming distance 1 in ANY of the L tables
-    (one-sided Hamming-1 multiprobe — the left side expands to B+1 probes,
-    the indexed side stays one bucket per (vec, table); XOR symmetry +
-    least/greatest canonicalization covers the unordered pair set), exact
-    cosine >= {NEARDUP_T} verified on candidates only. Recall
-    is bounded by the L×B collision probability IDENTICALLY in both engines
-    (same signature arithmetic, bit-for-bit), so the oracle sees the same
-    pair set. Shuffles on (table, bucket) then vec_id — never all pairs.
+    come from `_probe_pairs` probing from every vector, canonicalized with
+    least/greatest; exact cosine >= {NEARDUP_T} is verified on candidates
+    only. Recall is bounded by the L×B collision probability IDENTICALLY
+    in both engines (same signature arithmetic, bit-for-bit), so the
+    oracle sees the same pair set. Shuffles on (table, bucket) then
+    vec_id — probe fanout (B+1)·L·n rows, never all pairs.
 
     RECALL CONTRACT (scripts/pair_recall.py, BENCH.md §3b): precision = 1.0
     by construction (exact verify on candidates); pair recall vs the exact
@@ -637,43 +673,20 @@ def embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (single-probe was 0.07). Cost of the probes: candidate pairs grow
     4.8× (clustered) / 9.5× (adversarial) against the theoretical (B+1)=11×
     probe-row fanout — the verify tier stays candidate-bounded."""
-    e = _with_norm(table(spark, sf_dir, "embeddings"))
-    b = _signature_buckets(spark, table(spark, sf_dir, "embeddings"))
-    # one-sided Hamming-1 multiprobe (the query tier's trick): the LEFT side
-    # expands to its signature plus every 1-bit flip, the indexed side stays
-    # one bucket per (vec, table) — a pair is a candidate iff its two table
-    # signatures are within Hamming distance 1 in ANY table. XOR symmetry
-    # means one-sided probing + least/greatest canonicalization covers the
-    # unordered pair set; probe fanout is (B+1)·L·n rows, the indexed side
-    # is unchanged, never all pairs.
-    probes = (
-        b.select(
-            F.col("vec_id").alias("vec_p"),
-            "t",
-            F.explode(F.array(*[F.lit(m) for m in _PROBE_MASKS])).alias("_m"),
-            "bkt",
-        )
-        .withColumn("bkt", F.expr("bkt ^ _m"))
-        .drop("_m")
-    )
+    e = table(spark, sf_dir, "embeddings")
+    b = _signature_buckets(spark, e)
     cand = (
-        probes.join(b.select(F.col("vec_id").alias("vec_i"), "t", "bkt"), ["t", "bkt"])
-        .filter(F.col("vec_p") != F.col("vec_i"))
+        _probe_pairs(b, b)
         .select(
             F.least("vec_p", "vec_i").alias("vec_a"),
             F.greatest("vec_p", "vec_i").alias("vec_b"),
         )
         .distinct()
     )
-    a = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"),
-                 F.col("nrm").alias("na"))
-    c = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"),
-                 F.col("nrm").alias("nb"))
-    sim = F.round(_flat_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
     return (
-        cand.join(a, "vec_a")
-        .join(c, "vec_b")
-        .withColumn("sim", sim)
+        cand.join(_with_norm(e, "vec_a", "va"), "vec_a")
+        .join(_with_norm(e, "vec_b", "vb"), "vec_b")
+        .withColumn("sim", _cos("va", "vb"))
         .filter(F.col("sim") >= NEARDUP_T)
         .select("vec_a", "vec_b", "sim")
     )
@@ -681,23 +694,17 @@ def embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_EMBED_NEARDUP_LSH = f"""
 WITH {_SQL_NORMED},
-buckets AS ({_SQL_TABLE_BUCKETS}),
-probes AS (
-  SELECT vec_id, t, xor(bkt, m.m) AS bkt
-  FROM buckets, (SELECT unnest({_PROBE_MASKS}) AS m) m
-),
+{_sql_probe_pairs("TRUE")},
 cand AS (
-  SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_a,
-                  greatest(a.vec_id, b.vec_id) AS vec_b
-  FROM probes a JOIN buckets b ON a.t = b.t AND a.bkt = b.bkt
-  WHERE a.vec_id <> b.vec_id
+  SELECT DISTINCT least(vec_p, vec_i) AS vec_a, greatest(vec_p, vec_i) AS vec_b
+  FROM probe_pairs
 )
-SELECT c.vec_a, c.vec_b,
-       round({_sql_dot('x.embedding', 'y.embedding')} / (x.nrm * y.nrm), 6) AS sim
-FROM cand c
-JOIN normed x ON x.vec_id = c.vec_a
-JOIN normed y ON y.vec_id = c.vec_b
-WHERE round({_sql_dot('x.embedding', 'y.embedding')} / (x.nrm * y.nrm), 6) >= {NEARDUP_T}
+SELECT * FROM (
+  SELECT c.vec_a, c.vec_b, {_sql_cos('x', 'y')} AS sim
+  FROM cand c
+  JOIN normed x ON x.vec_id = c.vec_a
+  JOIN normed y ON y.vec_id = c.vec_b
+) WHERE sim >= {NEARDUP_T}
 """
 
 
@@ -710,8 +717,7 @@ def embed_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Components via the shared large-star/small-star labeling over
     `embed_neardup`'s cosine >= {NEARDUP_T} pairs; keeper = minimum vec_id.
     Inherits the brute-force cardinality guard — at corpus scale the pair
-    source swaps for an LSH-bucketed neardup variant (the bands of
-    `_signature_buckets` with exact verify), leaving this grouping stage
+    source swaps for `embed_neardup_lsh`, leaving this grouping stage
     unchanged."""
     from .dedup import _star_labels
 
@@ -737,45 +743,23 @@ SEMDEDUP_T = NEARDUP_T  # cosine threshold for "semantic duplicate"
 SEMDEDUP_CELL_TARGET = 256  # k = max(N_CENTROIDS, n // target): cells stay bounded
 
 
-def _corpus_quantizer(spark: SparkSession, e_scan: DataFrame):
-    """Train the corpus-scaled quantizer (k = max(N_CENTROIDS,
-    n // SEMDEDUP_CELL_TARGET), see _train_quantizer) and return its
-    broadcast — reused by the ingest-time stream (stream_decontaminate)
-    which assigns ARRIVING vectors with the same centroids."""
-    n = e_scan.count()  # parquet count — metadata-cheap
-    k = max(N_CENTROIDS, n // SEMDEDUP_CELL_TARGET)
-    return _train_quantizer(spark, e_scan, k)
+def _corpus_quantizer(spark: SparkSession, e_scan: DataFrame, n: int):
+    """Train the corpus-scaled quantizer over the *n* vectors of *e_scan*
+    (k = max(N_CENTROIDS, n // SEMDEDUP_CELL_TARGET), see _train_quantizer)
+    and return its broadcast — reused by the ingest-time stream
+    (stream_decontaminate), which assigns ARRIVING vectors with the same
+    centroids."""
+    return _train_quantizer(spark, e_scan, max(N_CENTROIDS, n // SEMDEDUP_CELL_TARGET))
 
 
-def _assign_cells(spark: SparkSession, e_scan: DataFrame, bc_cent=None) -> DataFrame:
-    """Nearest-trained-cell assignment shared by embed_semdedup,
-    embed_decontaminate and the ingest stream: train the corpus-scaled
-    quantizer (unless a broadcast is supplied) and map every vector to its
-    nearest cell in ONE zero-shuffle Arrow matmul pass (argmax over
-    integer-exact cosines; first max == lowest cent_id on ties, matching
-    the oracle's (sim DESC, cent_id) ordering).
-    Returns (vec_id, cell, embedding)."""
-    if bc_cent is None:
-        bc_cent = _corpus_quantizer(spark, e_scan)
-
-    def gen_assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        CTm, cids, ccn = bc_cent.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            XQ, sqrt_na = _quant_np(pdf)
-            sim = (XQ @ CTm.T).astype(np.float64) / (sqrt_na[:, None] * ccn[None, :])
-            cell0 = cids[np.argmax(sim, axis=1)]  # first max == lowest cent_id
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": cell0, "embedding": pdf["embedding"]}
-            )
-
-    return e_scan.mapInPandas(
-        gen_assign, "vec_id bigint, cell bigint, embedding array<float>"
-    )
+def _corpus_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cell, embedding) of every vector in the corpus quantizer:
+    the assignment embed_semdedup, embed_decontaminate and
+    embed_index_stats share. The row count comes from the parquet footers,
+    so building it runs only the quantizer's two training jobs."""
+    e_scan = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    n = table_rows(spark, sf_dir, "embeddings")
+    return _assign_cells(e_scan, _corpus_quantizer(spark, e_scan, n))
 
 
 def embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -799,7 +783,7 @@ def embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     10× fewer dot products across 10× more keys. At 10^10 vectors
     k≈4×10^7 cells of ~256; a real deployment samples the seed set instead
     of taking the first k ids (documented, not needed at test scale).
-    Assignment is integer-exact (see _train_quantizer), pair sims round to
+    Assignment is integer-exact (see _cell_sims), pair sims round to
     6 dp — bit-equal to the DuckDB oracle.
 
     RECALL CONTRACT (scripts/pair_recall.py, BENCH.md §3b): drops are a
@@ -808,21 +792,12 @@ def embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose lower-id duplicate fell in a different cell) and 0.42-0.53 on the
     adversarial near-threshold driver corpus — the floor, not the operating
     point."""
-    e_scan = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    assigned = _assign_cells(spark, e_scan)
-    a = _with_norm(assigned).select(
-        F.col("vec_id").alias("vec_a"), "cell",
-        F.col("embedding").alias("va"), F.col("nrm").alias("na"),
-    )
-    b = _with_norm(assigned).select(
-        F.col("vec_id").alias("vec_b"), "cell",
-        F.col("embedding").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    sim = F.round(_flat_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
+    assigned = _corpus_cells(spark, sf_dir)
     dropped = (
-        a.join(b, "cell")
+        _with_norm(assigned, "vec_a", "va", "cell")
+        .join(_with_norm(assigned, "vec_b", "vb", "cell"), "cell")
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("sim", sim)
+        .withColumn("sim", _cos("va", "vb"))
         .filter(F.col("sim") >= SEMDEDUP_T)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
@@ -841,14 +816,10 @@ _SQL_SEMDEDUP_K = (
 
 SQL_EMBED_SEMDEDUP = f"""
 WITH {_sql_ivf_cells(_SQL_SEMDEDUP_K)},
-assigned AS (
-  SELECT vec_id, embedding, nrm, cell FROM ranked WHERE _cr = 1
-),
 dropped AS (
   SELECT DISTINCT b.vec_id
   FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE round({_sql_dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm), 6)
-        >= {SEMDEDUP_T}
+  WHERE {_sql_cos('a', 'b')} >= {SEMDEDUP_T}
 )
 SELECT a.vec_id, a.cell, (d.vec_id IS NULL) AS keep
 FROM assigned a LEFT JOIN dropped d ON d.vec_id = a.vec_id
@@ -877,21 +848,17 @@ def embed_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a contaminated pair split across cells is missed, identically in both
     engines — the same trade IVF makes, stated here as the contract).
     Assignment is integer-exact, sims round to 6 dp — bit-equal to the
-    DuckDB oracle."""
-    e_scan = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    assigned = _assign_cells(spark, e_scan)
+    DuckDB oracle. The assignment is eagerly checkpointed once for its
+    three readers (train side, benchmark side, verdict): at sf0.1 that beat
+    three Arrow passes in 10 of 10 alternating pairs (embed_semdedup, whose
+    pair stage dominates, won only 5 of 10 and keeps its three passes)."""
+    assigned = _corpus_cells(spark, sf_dir).localCheckpoint(eager=True)
     is_bench = F.col("vec_id") % EMBED_DECON_MOD == 0
-    train = _with_norm(assigned.filter(~is_bench)).select(
-        F.col("vec_id"), "cell",
-        F.col("embedding").alias("vt"), F.col("nrm").alias("nt"),
-    )
-    bench = _with_norm(assigned.filter(is_bench)).select(
-        "cell", F.col("embedding").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    sim = F.round(_flat_dot("vt", "vb") / (F.col("nt") * F.col("nb")), 6)
+    train = _with_norm(assigned.filter(~is_bench), "vec_id", "vt", "cell")
+    bench = _with_norm(assigned.filter(is_bench), None, "vb", "cell")
     hits = (
         train.join(bench, "cell")
-        .withColumn("sim", sim)
+        .withColumn("sim", _cos("vt", "vb"))
         .filter(F.col("sim") >= EMBED_DECON_T)
         .select("vec_id")
         .distinct()
@@ -906,15 +873,11 @@ def embed_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_EMBED_DECONTAMINATE = f"""
 WITH {_sql_ivf_cells(_SQL_SEMDEDUP_K)},
-assigned AS (
-  SELECT vec_id, embedding, nrm, cell FROM ranked WHERE _cr = 1
-),
 hits AS (
   SELECT DISTINCT t.vec_id
   FROM assigned t JOIN assigned b ON t.cell = b.cell
   WHERE t.vec_id % {EMBED_DECON_MOD} != 0 AND b.vec_id % {EMBED_DECON_MOD} = 0
-    AND round({_sql_dot('t.embedding', 'b.embedding')} / (t.nrm * b.nrm), 6)
-        >= {EMBED_DECON_T}
+    AND {_sql_cos('t', 'b')} >= {EMBED_DECON_T}
 )
 SELECT t.vec_id, t.cell, (h.vec_id IS NOT NULL) AS contaminated
 FROM assigned t LEFT JOIN hits h ON h.vec_id = t.vec_id
@@ -938,10 +901,7 @@ def embed_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact percentiles; at unbounded cell counts percentile_approx is the
     documented swap, as in events_profile). Every ratio is one double
     division of exact bigints, so the DuckDB oracle is bit-equal."""
-    e_scan = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    occ = _assign_cells(spark, e_scan).groupBy("cell").agg(
-        F.count("*").alias("n")
-    )
+    occ = _corpus_cells(spark, sf_dir).groupBy("cell").agg(F.count("*").alias("n"))
     return occ.agg(
         F.count("*").alias("n_cells"),
         F.sum("n").cast("bigint").alias("n_vecs"),
@@ -956,7 +916,6 @@ def embed_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_EMBED_INDEX_STATS = f"""
 WITH {_sql_ivf_cells(_SQL_SEMDEDUP_K)},
-assigned AS (SELECT vec_id, cell FROM ranked WHERE _cr = 1),
 occ AS (SELECT cell, count(*) AS n FROM assigned GROUP BY cell)
 SELECT CAST(count(*) AS BIGINT) AS n_cells,
        CAST(sum(n) AS BIGINT) AS n_vecs,
@@ -972,7 +931,7 @@ FROM occ
 
 # Local-only (scripts/check_parity.py + pytest, not the driver registry):
 # embed_neardup drives the identical brute-force path as embed_cosine_topk
-# (same _flat_dot / guard / repartition) and is the all-pairs form the
+# (same cosine core / guard / repartition) and is the all-pairs form the
 # cardinality guard forbids at scale anyway; embed_dedup_clusters composes
 # it with the shared star labeling. Demoted to keep the driver's 8 KB
 # correctness file at its 50-row budget. embed_semdedup (the corpus-linear

@@ -58,6 +58,7 @@ from ..analytics.multimodal import (
     _index_blocks,
     _pair_blocks,
 )
+from ..analytics.similarity import _cos, _with_norm
 from ..schemas import IMAGES_SCHEMA
 
 
@@ -70,7 +71,8 @@ def build_index(corpus_images: DataFrame) -> DataFrame:
 
 
 def _verdict(images: DataFrame, index: DataFrame, embeddings: DataFrame) -> DataFrame:
-    """Shared plan for both engines: alignment joins at image grain, block
+    """Shared plan for both engines: alignment joins at image grain (the
+    two towers pre-normed once per vector, as in image_caption_align), block
     explode + static-index probe, one grouped agg back to image grain,
     reason precedence."""
     doc_id = F.regexp_extract("image_id", r"^img-(\d+)", 1).cast("bigint")
@@ -79,20 +81,13 @@ def _verdict(images: DataFrame, index: DataFrame, embeddings: DataFrame) -> Data
         "image_id", "w", "h", "phash",
         doc_id.alias("doc_id"), ref_id.alias("ref_id"),
     )
-    v = embeddings.select(F.col("vec_id").alias("vid"), F.col("vemb"), F.col("vn"))
-    t = embeddings.select(
-        F.col("vec_id").alias("tid"), F.col("vemb").alias("temb"), F.col("vn").alias("tn")
-    )
+    v = _with_norm(embeddings, "vid", "vemb")
+    t = _with_norm(embeddings, "tid", "temb")
     # stream-static tower joins (left: unseen references default to accept)
-    from ..analytics.similarity import _flat_dot
-
     sig = (
         sig.join(v, sig.doc_id == v.vid, "left")
         .join(t, sig.ref_id == t.tid, "left")
-        .withColumn(
-            "align_sim",
-            F.round(_flat_dot("vemb", "temb") / (F.col("vn") * F.col("tn")), 6),
-        )
+        .withColumn("align_sim", _cos("vemb", "temb"))
         .select("image_id", "w", "h", "phash", "align_sim")
     )
     # near-dup probe: block explode carries the image-grain columns through,
@@ -120,23 +115,11 @@ def _verdict(images: DataFrame, index: DataFrame, embeddings: DataFrame) -> Data
     )
 
 
-def _towers(embeddings: DataFrame) -> DataFrame:
-    """Pre-normed embedding table shared by both towers (norms once per
-    vector, never per pair — same discipline as image_caption_align)."""
-    from ..analytics.similarity import _flat_dot
-
-    return embeddings.select(
-        "vec_id",
-        F.col("embedding").alias("vemb"),
-        F.sqrt(_flat_dot("embedding", "embedding")).alias("vn"),
-    )
-
-
 def curate_stream(
     spark: SparkSession, src_dir: str, index: DataFrame, embeddings: DataFrame
 ) -> DataFrame:
     imgs = spark.readStream.schema(IMAGES_SCHEMA).parquet(src_dir)
-    return _verdict(imgs, index, _towers(embeddings))
+    return _verdict(imgs, index, embeddings)
 
 
 def curate_batch(
@@ -144,4 +127,4 @@ def curate_batch(
 ) -> DataFrame:
     """Batch twin over the same source directory — the parity oracle."""
     imgs = spark.read.schema(IMAGES_SCHEMA).parquet(src_dir)
-    return _verdict(imgs, index, _towers(embeddings))
+    return _verdict(imgs, index, embeddings)

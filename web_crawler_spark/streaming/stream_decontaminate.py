@@ -13,7 +13,8 @@ Scale shape at 10^10 vectors:
 - assignment: the trained corpus quantizer's centroids ride a BROADCAST
   (O(k·DIM) ints); each arriving micro-batch assigns its vectors to cells
   in one zero-shuffle Arrow integer-matmul pass (`_assign_cells`, the same
-  stage the batch tier runs)
+  stage the batch tier runs), and pairs score by the tier's one cosine
+  rule (`_cos`)
 - probe: the benchmark index is STATIC and tiny relative to the corpus
   (the held-out split), keyed by cell — a stream-static left equi-join on
   cell id; Spark keeps no join state for the static side between
@@ -41,7 +42,7 @@ from ..analytics.similarity import (
     EMBED_DECON_T,
     _assign_cells,
     _corpus_quantizer,
-    _flat_dot,
+    _cos,
     _with_norm,
 )
 
@@ -61,14 +62,9 @@ def build_index(spark: SparkSession, corpus: DataFrame):
     vectors the index is a cell-bucketed table maintained incrementally;
     here it is the plan that would populate it."""
     e_scan = corpus.select("vec_id", "embedding")
-    bc_cent = _corpus_quantizer(spark, e_scan)
-    bench = _with_norm(
-        _assign_cells(spark, e_scan, bc_cent).filter(
-            F.col("vec_id") % EMBED_DECON_MOD == 0
-        )
-    ).select(
-        "cell", F.col("embedding").alias("vb"), F.col("nrm").alias("nb")
-    )
+    bc_cent = _corpus_quantizer(spark, e_scan, e_scan.count())
+    is_bench = F.col("vec_id") % EMBED_DECON_MOD == 0
+    bench = _with_norm(_assign_cells(e_scan, bc_cent).filter(is_bench), None, "vb", "cell")
     return bc_cent, bench
 
 
@@ -78,13 +74,9 @@ def _verdict(vecs: DataFrame, bc_cent, bench: DataFrame) -> DataFrame:
     aggregate the hit flags back to vector grain. Arriving vectors are
     assumed new (an arriving id that IS a benchmark id would match itself;
     the parity tests stream the non-benchmark split)."""
-    train = _with_norm(_assign_cells(None, vecs, bc_cent)).select(
-        "vec_id", "cell",
-        F.col("embedding").alias("vt"), F.col("nrm").alias("nt"),
-    )
-    sim = F.round(_flat_dot("vt", "vb") / (F.col("nt") * F.col("nb")), 6)
+    train = _with_norm(_assign_cells(vecs, bc_cent), "vec_id", "vt", "cell")
     hit = F.when(F.col("vb").isNull(), F.lit(0)).otherwise(
-        (sim >= EMBED_DECON_T).cast("int")
+        (_cos("vt", "vb") >= EMBED_DECON_T).cast("int")
     )
     return (
         train.join(bench, ["cell"], "left")
