@@ -8,9 +8,10 @@ The external driver captures only a bounded TAIL of stdout (2000 bytes —
 round 3's record came back `parsed: null` because per-query raw-run arrays
 plus Spark's console progress `\r` spam pushed the front of the JSON line out
 of the window). So: console progress is disabled, the bulky raw data
-(query_runs, crawl_runs, canaries) goes to BENCH_detail.json next to this
-file, and the emitted line is size-checked against the tail budget before
-printing.
+(query_runs, crawl_runs, canaries) goes to bench_out/BENCH_detail.json beside
+this file (an ignored directory, so a run leaves the checkout clean; the
+tracked BENCH_detail.json is the round-5 record), and the emitted line is
+size-checked against the tail budget before printing.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32),
@@ -197,9 +198,9 @@ def main() -> None:
         "sf": sf,
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_detail.json"
-    )
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out")
+    os.makedirs(out_dir, exist_ok=True)
+    detail_path = os.path.join(out_dir, "BENCH_detail.json")
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=2)
 
@@ -220,7 +221,7 @@ def main() -> None:
         line = json.dumps(summary, separators=(",", ":"))
     if len(line) > TAIL_BUDGET:
         summary.pop("queries")  # full per-query data survives in the detail file
-        summary["queries_file"] = "BENCH_detail.json"
+        summary["queries_file"] = "bench_out/BENCH_detail.json"
         line = json.dumps(summary, separators=(",", ":"))
     sys.stdout.flush()
     print("\n" + line, flush=True)

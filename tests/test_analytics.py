@@ -35,12 +35,16 @@ PARITY_SUBSET = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_simhash_pairs",
+    "dedup_clusters",
+    "corpus_split",
     "text_fingerprint",
     "text_langid",
     "embed_cosine_topk",
     "embed_lsh_ann",
     "embed_ivf_ann",
     "embed_neardup_lsh",
+    "embed_dedup_clusters",
+    "image_dedup_clusters",
     "host_pagerank",
     "doc_pack",
     "tfidf_topterms",

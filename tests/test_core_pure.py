@@ -2,6 +2,11 @@
 reference's exact urllib pipeline, HTML round-trip parse, image codec
 invariants, robots semantics, and oracle-simulator sanity."""
 
+import ast
+import re
+import tokenize
+from collections import Counter
+from pathlib import Path
 from urllib.parse import unquote, urljoin, urlparse
 
 import numpy as np
@@ -12,6 +17,7 @@ from web_crawler_spark.core import htmlgen, htmlparse, imagecodec, oracle, webge
 from web_crawler_spark.core.robots import RobotsRule, allowed, generate_rules, rules_by_host
 from web_crawler_spark.core.urlnorm import canonicalize, extract_links
 
+REPO = Path(__file__).resolve().parent.parent
 BASE = "http://site0.test/p/3"
 DOMAIN = "site0.test"
 
@@ -232,3 +238,46 @@ def test_engine_tuning_one_place():
     for name in ("ROWS_PER_PARTITION", "SMALL_RANK_THRESHOLD", "WM_BROADCAST_MAX_HOSTS",
                  "BloomFilter64"):
         assert not hasattr(engine_mod, name)
+
+
+def _code_identifiers(path: Path):
+    """NAME tokens of *path*, plus the identifiers inside f-string
+    placeholders (one STRING token before CPython 3.12). Comments and
+    docstrings yield nothing."""
+    with open(path, "rb") as f:
+        for tok in tokenize.tokenize(f.readline):
+            if tok.type == tokenize.NAME:
+                yield tok.string
+            elif tok.type == tokenize.STRING and "f" in re.match(r"\w*", tok.string)[0].lower():
+                # every Name/Attribute of an f-string literal is in a placeholder
+                for node in ast.walk(ast.parse(tok.string, mode="eval")):
+                    if isinstance(node, ast.Name):
+                        yield node.id
+                    elif isinstance(node, ast.Attribute):
+                        yield node.attr
+
+
+def _top_level_names(path: Path):
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                yield from (n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+
+
+def test_every_package_name_is_used():
+    """Every top-level name the package defines (dunders aside) occurs at
+    least twice as a code identifier across the repo's .py files: its
+    definition plus one use. A name only a comment or docstring mentions is
+    dead code; delete it rather than keep it for documentation."""
+    files = [p for p in REPO.rglob("*.py") if p.relative_to(REPO).parts[0] != "bench_artifacts"]
+    uses = Counter(i for p in files for i in _code_identifiers(p))
+    dead = [
+        f"{p.relative_to(REPO)}:{name}"
+        for p in sorted((REPO / "web_crawler_spark").rglob("*.py"))
+        for name in _top_level_names(p)
+        if not (name.startswith("__") and name.endswith("__")) and uses[name] < 2
+    ]
+    assert not dead, f"{len(dead)} top-level names nothing uses: {dead}"

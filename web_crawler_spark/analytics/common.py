@@ -94,11 +94,13 @@ def sql_components(pairs_sql: str, a: str, b: str) -> str:
     """DuckDB connected-components oracle, the twin of `dedup._star_labels`:
     a parenthesized `(doc, label)` subquery over the undirected pair graph
     (`a`, `b`) of *pairs_sql*, label = the minimum id reachable from doc by
-    a recursive CTE. Only ids that appear in some pair get a row."""
+    a recursive CTE. Only ids that appear in some pair get a row. `pairs`
+    is MATERIALIZED: DuckDB otherwise inlines it and re-evaluates the pair
+    source in every recursion step."""
     return f"""(
   SELECT doc, min(r) AS label FROM (
     WITH RECURSIVE
-    pairs AS (SELECT {a} AS a, {b} AS b FROM ({pairs_sql.replace(chr(10), ' ')}) p),
+    pairs AS MATERIALIZED (SELECT {a} AS a, {b} AS b FROM ({pairs_sql.replace(chr(10), ' ')}) p),
     bi AS (SELECT a, b FROM pairs UNION ALL SELECT b, a FROM pairs),
     reach(doc, r) AS (
       SELECT DISTINCT a, a FROM bi

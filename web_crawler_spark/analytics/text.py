@@ -403,11 +403,11 @@ SEG_WORDS = 10        # words per segment
 SEG_SHARED_T = 0.5    # drop a doc when >= this fraction of segments is shared
 
 # built over a pre-bound `ws` column so the text is split exactly once;
-# hashes each non-overlapping 10-word segment and dedups within the doc
+# hashes each non-overlapping SEG_WORDS-word segment and dedups within the doc
 _SEG_HASHES = (
     "array_distinct(transform("
-    "sequence(0, cast(ceil(size(ws) / 10.0) as int) - 1), "
-    "i -> cast(conv(substring(md5(concat_ws(' ', slice(ws, i * 10 + 1, 10))), 1, 15), 16, 10)"
+    f"sequence(0, cast(ceil(size(ws) / {float(SEG_WORDS)}) as int) - 1), "
+    f"i -> cast(conv(substring(md5(concat_ws(' ', slice(ws, i * {SEG_WORDS} + 1, {SEG_WORDS}))), 1, 15), 16, 10)"
     " as bigint)))"
 )
 
@@ -438,8 +438,8 @@ SQL_LINE_DEDUP = f"""
 WITH w AS (SELECT doc_id, {SQL_WORDS} AS ws FROM documents),
 segs AS (
   SELECT doc_id,
-         unnest(list_distinct([CAST('0x' || substr(md5(array_to_string(ws[(i*10+1):(i*10+10)], ' ')), 1, 15) AS BIGINT)
-                               FOR i IN generate_series(0, CAST(ceil(len(ws) / 10.0) AS INT) - 1)])) AS h
+         unnest(list_distinct([CAST('0x' || substr(md5(array_to_string(ws[(i*{SEG_WORDS}+1):(i*{SEG_WORDS}+{SEG_WORDS})], ' ')), 1, 15) AS BIGINT)
+                               FOR i IN generate_series(0, CAST(ceil(len(ws) / {float(SEG_WORDS)}) AS INT) - 1)])) AS h
   FROM w
 ),
 seg_df AS (SELECT h, count(*) AS df FROM segs GROUP BY h)
@@ -685,15 +685,15 @@ FROM planted
 CLF_WMOD = 2001  # hash weights span [-1000, 1000]
 CLF_STOP_BOOST = 500  # planted stopword weight (the learned-signal stand-in)
 
-_CLF_STOPS_SPARK = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-_CLF_STOPS_DUCK = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
+_CLF_STOPS = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
+
 
 def _clf_logit_over(arr: str) -> str:
     """The integer logit fold over any words-array expression (reused by
     stream_curate over its pre-bound `ws` column)."""
     return (
         f"aggregate({arr}, cast(0 as bigint), (acc, w) -> acc + ("
-        f"CASE WHEN array_contains(array({_CLF_STOPS_SPARK}), w) THEN {CLF_STOP_BOOST} "
+        f"CASE WHEN array_contains(array({_CLF_STOPS}), w) THEN {CLF_STOP_BOOST} "
         f"ELSE cast(conv(substring(md5(w), 1, 15), 16, 10) as bigint) % {CLF_WMOD} - {(CLF_WMOD - 1) // 2} END))"
     )
 
@@ -701,7 +701,7 @@ def _clf_logit_over(arr: str) -> str:
 _CLF_LOGIT = _clf_logit_over(_WORDS)
 _SQL_CLF_LOGIT = (
     f"CAST(list_sum(list_transform({SQL_WORDS}, w -> "
-    f"CASE WHEN list_contains([{_CLF_STOPS_DUCK}], w) THEN {CLF_STOP_BOOST} "
+    f"CASE WHEN list_contains([{_CLF_STOPS}], w) THEN {CLF_STOP_BOOST} "
     f"ELSE CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) % {CLF_WMOD} - {(CLF_WMOD - 1) // 2} END"
     f")) AS BIGINT)"
 )

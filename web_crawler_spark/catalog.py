@@ -90,24 +90,23 @@ class SnapshotTable:
         self,
         spark: SparkSession,
         as_of_round: Optional[int] = None,
-        schema=None,
+        *,
+        schema,
     ) -> Optional[DataFrame]:
-        """Read the live state. Pass *schema* so snapshots written from empty
+        """Read the live state under *schema*, so snapshots written from empty
         DataFrames (no part files, just _SUCCESS) still resolve."""
         paths = self.live_paths(as_of_round)
         if not paths:
             return None
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        return reader.parquet(*paths)
+        return spark.read.schema(schema).parquet(*paths)
 
     def compact(
         self,
         spark: SparkSession,
         up_to_round: Optional[int] = None,
-        schema=None,
-        target_partitions: Optional[int] = None,
-        min_snapshots: int = 2,
-        cluster_by: Optional[list] = None,
+        *,
+        schema,
+        cluster_by: list,
     ) -> bool:
         """Merge the live snapshots with ``round <= up_to_round`` into ONE
         snapshot and expire the originals (Iceberg's rewrite_data_files +
@@ -122,7 +121,7 @@ class SnapshotTable:
         Only completed rounds may be compacted: the merged snapshot carries
         the max merged round, so a crash-resume ``rollback_to_round(r)`` with
         r >= horizon never drops merged data. Returns True if a rewrite
-        happened (skipped when fewer than *min_snapshots* qualify).
+        happened (skipped when fewer than two snapshots qualify).
         """
         snaps = self._load()
         horizon = max((s["round"] for s in snaps), default=0) if up_to_round is None else up_to_round
@@ -134,24 +133,20 @@ class SnapshotTable:
                 prefix.append(s)
             else:
                 break
-        if len(prefix) < min_snapshots:
+        if len(prefix) < 2:
             return False
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        df = reader.parquet(*(s["path"] for s in prefix))
-        if target_partitions is None:
-            target_partitions = spark.sparkContext.defaultParallelism
+        df = spark.read.schema(schema).parquet(*(s["path"] for s in prefix))
         sid = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
         # "-c" namespace: a crash between data write and manifest commit
         # orphans this dir without ever colliding with a future write()'s
         # snap-{sid} path (the manifest — and thus sid reuse — is unchanged)
         merged_path = os.path.join(self.dir, f"snap-{sid:06d}-c")
-        if cluster_by:
-            # preserve key-clustering so min/max parquet stats keep pruning
-            # reads (e.g. the derived frontier's `seq >= watermark` filter
-            # skips fully-consumed files by footer stats alone)
-            df = df.repartitionByRange(target_partitions, *cluster_by).sortWithinPartitions(*cluster_by)
-        else:
-            df = df.repartition(target_partitions)
+        # preserve key-clustering so min/max parquet stats keep pruning
+        # reads (e.g. the derived frontier's `seq >= watermark` filter
+        # skips fully-consumed files by footer stats alone)
+        df = df.repartitionByRange(
+            spark.sparkContext.defaultParallelism, *cluster_by
+        ).sortWithinPartitions(*cluster_by)
         df.write.mode("errorifexists").parquet(merged_path)
         merged = {
             "snapshot_id": sid,

@@ -10,9 +10,6 @@ from __future__ import annotations
 import hashlib
 import struct
 
-_U64 = (1 << 64) - 1
-
-
 _blake2b = hashlib.blake2b
 _from_bytes = int.from_bytes
 
@@ -21,29 +18,6 @@ def stable_hash64(*parts: object) -> int:
     """Unsigned 64-bit hash of the '\\x1f'-joined string forms of *parts*."""
     data = "\x1f".join(map(str, parts)).encode("utf-8")
     return _from_bytes(_blake2b(data, digest_size=8).digest(), "big")
-
-
-def prefix_hasher(*parts: object):
-    """Closure hashing (*parts, *tail) with the *parts* prefix pre-encoded.
-
-    ``prefix_hasher(a, b)(c, d) == stable_hash64(a, b, c, d)`` bit-for-bit
-    (UTF-8 encoding distributes over concatenation). Amortizes the join +
-    encode of a constant key prefix across many calls — the synthetic-web
-    generator hashes ~10^3 tails per page under one (seed, tag, url) prefix.
-    """
-    pre = ("\x1f".join(map(str, parts)) + "\x1f").encode("utf-8")
-
-    def h(*tail: object) -> int:
-        data = pre + "\x1f".join(map(str, tail)).encode("utf-8")
-        return _from_bytes(_blake2b(data, digest_size=8).digest(), "big")
-
-    return h
-
-
-def to_signed64(u: int) -> int:
-    """Map an unsigned 64-bit int to Spark's signed LongType range."""
-    u &= _U64
-    return u - (1 << 64) if u >= (1 << 63) else u
 
 
 def unit_float(*parts: object) -> float:

@@ -10,7 +10,7 @@ well-defined.
 
 from __future__ import annotations
 
-from .webgen import PageSpec, words
+from .webgen import PageSpec
 
 
 def render_html(spec: PageSpec, cfg=None) -> str:

@@ -125,6 +125,3 @@ def extract_links(
         out.append(ExtractedLink(clean, link_display_text(text, title_attr), len(out)))
     return out
 
-
-def url_host(url: str) -> str:
-    return urlparse(url).netloc

@@ -12,14 +12,14 @@ a 10^10-URL frontier exist without 10^10 stored pages.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import lru_cache
 from typing import Optional
 from urllib.parse import quote, urlparse
 
 from hashlib import blake2b as _blake2b
 
-from .hashing import pick, prefix_hasher, stable_hash64, unit_float
+from .hashing import pick, stable_hash64, unit_float
 
 _WORDS = (
     "lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod tempor "
@@ -107,12 +107,8 @@ def make_config(
     skew: float = 0.0,
     mean_outlinks: int = 8,
     seed: int = 42,
-    hot_host_pages: Optional[int] = None,
 ) -> WebConfig:
-    """Build a WebConfig: hosts = {sub}{site}.test grid, zipf-ish page counts.
-
-    ``hot_host_pages`` overrides host 0's page count (skew fixture, FIXTURES.md §7 t2).
-    """
+    """Build a WebConfig: hosts = {sub}{site}.test grid, zipf-ish page counts."""
     hosts: list[str] = []
     for s in range(n_sites):
         for sub in subdomains:
@@ -121,8 +117,6 @@ def make_config(
     for i in range(len(hosts)):
         p = max(2, int(base_pages / ((i + 1) ** skew)))
         pages.append(p)
-    if hot_host_pages is not None:
-        pages[0] = hot_host_pages
     return WebConfig(
         seed=seed,
         hosts=tuple(hosts),
@@ -136,31 +130,6 @@ def t1_config() -> WebConfig:
     return make_config(
         n_sites=2, subdomains=("", "docs."), base_pages=64, skew=0.3, mean_outlinks=8
     )
-
-
-def t2_config() -> WebConfig:
-    """correctness + skew scale: 20 hosts, ~20k URLs, one hot host."""
-    return make_config(
-        n_sites=10,
-        subdomains=("", "docs."),
-        base_pages=1400,
-        skew=0.8,
-        mean_outlinks=15,
-        hot_host_pages=8000,
-    )
-
-
-def bench_config(n_urls: int = 2_000_000, n_hosts: int = 100) -> WebConfig:
-    """bench scale: zipf host sizes over ``n_hosts`` hosts summing ~n_urls."""
-    weights = [1.0 / ((i + 1) ** 0.9) for i in range(n_hosts)]
-    total = sum(weights)
-    pages = tuple(max(10, int(n_urls * w / total)) for w in weights)
-    # site{k}.test / docs.site{k}.test pairs — unique host per index
-    hosts = tuple(
-        (f"site{i // 2}.test" if i % 2 == 0 else f"docs.site{i // 2}.test")
-        for i in range(n_hosts)
-    )
-    return WebConfig(seed=42, hosts=hosts, pages_per_host=pages, mean_outlinks=20)
 
 
 def url_of(host: str, i: int) -> str:

@@ -1,4 +1,5 @@
-"""Distributed builders for the fixture tables (FIXTURES.md §§1-4).
+"""Distributed builders for the URL universe and the images payload table
+(FIXTURES.md §1).
 
 Generation is executor-side (explode + mapInPandas over the pure-function core)
 so the same code produces the 200-URL pytest universe and a multi-million-row
@@ -11,36 +12,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from .config import JobConfig
 from .core import imagecodec, webgen
-from .core.robots import RobotsRule
-from .schemas import IMAGES_SCHEMA, ROBOTS_SCHEMA, SEEDS_SCHEMA
-
-WEB_GRAPH_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("status_code", T.IntegerType(), False),
-        T.StructField("title", T.StringType(), False),
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField(
-            "outlinks",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("href", T.StringType(), False),
-                        T.StructField("text", T.StringType(), False),
-                        T.StructField("title_attr", T.StringType(), False),
-                        T.StructField("link_idx", T.IntegerType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
+from .schemas import IMAGES_SCHEMA
 
 
 def urls_df(spark: SparkSession, cfg: webgen.WebConfig, partitions: int = 32) -> DataFrame:
@@ -53,33 +26,6 @@ def urls_df(spark: SparkSession, cfg: webgen.WebConfig, partitions: int = 32) ->
         .select(F.concat(F.lit("http://"), "host", F.lit("/p/"), "i").alias("url"), "host")
         .repartition(partitions, "url")
     )
-
-
-def web_graph_df(spark: SparkSession, cfg: webgen.WebConfig, partitions: int = 32) -> DataFrame:
-    """One row per URL with status/title/payload-id/raw-outlinks (FIXTURES.md §2)."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for url, host in zip(pdf["url"], pdf["host"]):
-                spec = webgen.page_spec(url, cfg)
-                rows.append(
-                    {
-                        "url": url,
-                        "host": host,
-                        "status_code": spec.status,
-                        "title": spec.title,
-                        "image_id": spec.image_id,
-                        "outlinks": [
-                            {"href": l.href, "text": l.text, "title_attr": l.title_attr,
-                             "link_idx": i}
-                            for i, l in enumerate(spec.raw_links)
-                        ],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in WEB_GRAPH_SCHEMA.fields])
-
-    return urls_df(spark, cfg, partitions).mapInPandas(gen, WEB_GRAPH_SCHEMA)
 
 
 def images_df(spark: SparkSession, cfg: webgen.WebConfig, partitions: int = 32) -> DataFrame:
@@ -97,15 +43,3 @@ def images_df(spark: SparkSession, cfg: webgen.WebConfig, partitions: int = 32) 
 
     return urls_df(spark, cfg, partitions).mapInPandas(gen, IMAGES_SCHEMA)
 
-
-def robots_df(spark: SparkSession, rules: list[RobotsRule]) -> DataFrame:
-    rows = [(r.host, r.user_agent, r.rule, r.path_prefix, r.parse_error) for r in rules]
-    return spark.createDataFrame(rows or [], ROBOTS_SCHEMA)
-
-
-def seeds_df(spark: SparkSession, jobs: list[JobConfig]) -> DataFrame:
-    rows = [
-        (j.job_id, j.start_url, j.max_pages, j.max_depth, j.delay, j.max_retries, j.user_agent)
-        for j in jobs
-    ]
-    return spark.createDataFrame(rows or [], SEEDS_SCHEMA)

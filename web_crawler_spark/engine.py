@@ -5,7 +5,7 @@ round (SURVEY.md §3.1):
 
     pending frontier → politeness-budget selection (FIFO chunk / per-host
     quota) → ONE fused Python stage (robots gate → fetch → parse, mapInPandas
-    over the synthetic web; salt-spread partitions) committed as the round's
+    over the synthetic web; url_hash-spread partitions) committed as the round's
     stage snapshot → explode children → within-batch first-occurrence dedup
     (window) → exact anti-join seen → global rank in
     (parent_seq, link_idx) order → page-cap admission → assign seq → commit
@@ -28,8 +28,8 @@ Scale design (the 10^10-frontier story):
   job costs seconds of fixed overhead; on a real cluster the same discipline
   is what keeps a 30-round crawl from paying 30× the commit latency.
 - partition counts adapt to the tracked pending-frontier size (small rounds
-  → 1 task; large rounds → host_bucket×salt spread, capped at the configured
-  parallelism), so per-task overhead never dominates.
+  → 1 task; large rounds → per-row url_hash spread, capped at
+  ``spark.sql.shuffle.partitions``), so per-task overhead never dominates.
 - the only global-order operation is admission ranking; small rounds rank
   in one partition inside the admissions write itself, large rounds take the
   two-phase range rank (``global_rank``) — never a single partition at scale.
@@ -47,7 +47,7 @@ Scale design (the 10^10-frontier story):
   distributed agg + append, and the pending filter joins the aggregated
   table (broadcast below tuning.wm_broadcast_max_hosts, AQE-planned above).
 - politeness is a virtual-clock budget (the reference sleeps ``delay`` seconds
-  between requests, crawler.py:637-638 ⇒ ≤ round_seconds/delay fetches per
+  between requests, crawler.py:637-638 ⇒ ≤ ROUND_SECONDS/delay fetches per
   round), so ordering is timing-independent and reproducible.
 """
 
@@ -66,10 +66,9 @@ from .config import DEFAULT_TUNING, EngineTuning, JobConfig
 from .core.robots import RulesByHost
 from .core.webgen import WebConfig
 from .functions import udfs
-from .schemas import FRONTIER_SCHEMA, N_HOST_BUCKETS, N_SALTS
+from .schemas import FRONTIER_SCHEMA, N_HOST_BUCKETS
 
 PHYSICAL_TABLES = ("stage", "admissions", "host_wm")
-DERIVED_TABLES = ("seen", "crawl_log", "links", "outcomes", "metrics")
 
 STAGE_SCHEMA = T.StructType(
     list(udfs.FETCHED_SCHEMA.fields) + [T.StructField("round", T.IntegerType(), False)]
@@ -252,7 +251,6 @@ def _frontier_row_cols(df: DataFrame, round_added: int) -> DataFrame:
         .withColumn("host", F.coalesce("host", F.lit("")))
         .withColumn("url_hash", F.xxhash64("url"))
         .withColumn("host_bucket", F.pmod(F.xxhash64("host"), F.lit(N_HOST_BUCKETS)).cast("int"))
-        .withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(N_SALTS)).cast("int"))
         .withColumn("round_added", F.lit(round_added))
         .select([f.name for f in FRONTIER_SCHEMA.fields])
     )
@@ -295,16 +293,20 @@ def _apply_host_wm(
     )
 
 
-def politeness_budget(job: JobConfig, round_seconds: float = 60.0) -> Optional[int]:
+# virtual-clock length of one scheduling round
+ROUND_SECONDS = 60.0
+
+
+def politeness_budget(job: JobConfig) -> Optional[int]:
     """Virtual-clock budget: fetches allowed per scheduling round.
 
     The reference enforces one global ``sleep(delay)`` between requests
-    (crawler.py:637-638) ⇒ at most round_seconds/delay fetches per round.
+    (crawler.py:637-638) ⇒ at most ROUND_SECONDS/delay fetches per round.
     delay == 0 ⇒ unbounded (None).
     """
     if job.delay <= 0:
         return None
-    return max(1, int(round_seconds / job.delay))
+    return max(1, int(ROUND_SECONDS / job.delay))
 
 
 def crawl(
@@ -317,7 +319,6 @@ def crawl(
     politeness_mode: str = "global",  # 'global' (reference-exact) | 'per_host'
     resume: bool = False,
     max_rounds: int = 10_000,
-    fetch_partitions: Optional[int] = None,
     compact_every: Optional[int] = None,
     tuning: EngineTuning = DEFAULT_TUNING,
 ) -> CrawlRun:
@@ -328,7 +329,7 @@ def crawl(
     state_store = RunState(storage_dir)
     run = CrawlRun(job=job, storage_dir=storage_dir, tables=tables, state=state_store)
 
-    P_max = int(fetch_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # NO mode writes a physical frontier — the pending set is always derived
     # from the append-only admissions table (Iceberg-style metadata-only
@@ -422,12 +423,10 @@ def crawl(
             scheduled = ranked.filter(F.col("_hr") <= budget).drop("_hr")
             n_sched = None  # the stage write's observed row count
 
-        # ---- fused gate+fetch+parse stage (salt-spread partitions defeat
-        # hot-host skew); ONE write, everything downstream is a projection ---
-        # uniform per-row spread: hashing (host_bucket, salt) gives only
-        # n_hosts*n_salts distinct keys — lumpy at high parallelism; url_hash
-        # is per-row uniform, so the slowest fetch task tracks the mean.
-        # (host_bucket/salt stay on the rows for the table partition spec.)
+        # ---- fused gate+fetch+parse stage; ONE write, everything downstream
+        # is a projection ---------------------------------------------------
+        # per-row url_hash spread defeats hot-host skew: it is uniform per
+        # row, so the slowest fetch task tracks the mean.
         # One partition needs no shuffle, so it coalesces instead.
         spread = scheduled.coalesce(1) if P == 1 else scheduled.repartition(P, "url_hash")
         # the write's own job also counts the rows and the candidate links

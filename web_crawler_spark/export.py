@@ -15,7 +15,6 @@ stamps ``datetime.now()``; here ordering is the deterministic
 from __future__ import annotations
 
 import json
-from typing import Optional
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -114,13 +113,6 @@ def preview_export(spark: SparkSession, run: CrawlRun) -> dict:
         "n_pages": n_pages,
         "estimated_size_bytes": per_page * n_pages,
     }
-
-
-def write_export(spark: SparkSession, run: CrawlRun, path: str) -> Optional[str]:
-    doc = export_job_json(spark, run)
-    with open(path, "w") as f:
-        json.dump(doc, f, ensure_ascii=False)
-    return path
 
 
 def export_job_jsonl(spark: SparkSession, run: CrawlRun, path: str) -> str:

@@ -2,9 +2,9 @@
 
 Everything the reference does per page with BeautifulSoup + urllib
 (``Crawler/crawler.py:398-480``) runs here as Arrow-batched stages
-(SURVEY.md §2.10): one fetch+parse ``mapInPandas`` (the synthetic network +
-parser), one robots-gate pandas UDF over broadcast rules, one canonicalization
-UDF, one image decode/validate ``mapInPandas``. No row-at-a-time
+(SURVEY.md §2.10): one fused robots-gate+fetch+parse ``mapInPandas`` (the
+synthetic network + parser), one canonicalization UDF, one image
+decode/validate ``mapInPandas``. No row-at-a-time
 ``F.udf`` anywhere.
 """
 
@@ -134,19 +134,6 @@ def make_fetch_parse(cfg: webgen.WebConfig, job: JobConfig, rules: RulesByHost |
             yield pd.DataFrame(rows, columns=[f.name for f in FETCHED_SCHEMA])
 
     return fetch_parse
-
-
-def make_robots_gate(rules: RulesByHost, user_agent: str):
-    """pandas UDF body: Series[url] → Series[bool] via broadcast robots rules.
-
-    Fail-open semantics per the reference (crawler.py:134-140). ``rules`` should
-    arrive via ``sc.broadcast`` at scale; a closure is fine for small rule sets.
-    """
-
-    def gate(urls: pd.Series) -> pd.Series:
-        return urls.map(lambda u: allowed(u, user_agent, rules))
-
-    return gate
 
 
 def make_canonicalize(domain: str):

@@ -1,4 +1,6 @@
-"""Typed schemas for every engine table (FIXTURES.md §§1-5).
+"""Typed schemas for the stored engine tables and the payload tables
+(FIXTURES.md §§1, 5). The derived projections (seen, crawl_log, links,
+outcomes, metrics) get their schemas from ``engine.CrawlRun.read``.
 
 The reference keeps pages as PostgreSQL rows with two JSONB documents whose
 shape is fixed by convention (``Crawler/database.py:259-266``, SURVEY.md §1.2);
@@ -11,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 N_HOST_BUCKETS = 1024  # hash-partition width for frontier/seen at scale
-N_SALTS = 16  # explicit salt fan-out for skewed (hot) hosts
 
 METADATA_STRUCT = T.StructType(
     [
@@ -100,28 +101,6 @@ VIDEO_SCHEMA = T.StructType(
     ]
 )
 
-ROBOTS_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("user_agent", T.StringType(), False),
-        T.StructField("rule", T.StringType(), False),
-        T.StructField("path_prefix", T.StringType(), False),
-        T.StructField("parse_error", T.BooleanType(), False),
-    ]
-)
-
-SEEDS_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.IntegerType(), False),
-        T.StructField("start_url", T.StringType(), False),
-        T.StructField("max_pages", T.IntegerType(), False),
-        T.StructField("max_depth", T.IntegerType(), False),
-        T.StructField("delay", T.DoubleType(), False),
-        T.StructField("max_retries", T.IntegerType(), False),
-        T.StructField("user_agent", T.StringType(), False),
-    ]
-)
-
 FRONTIER_SCHEMA = T.StructType(
     [
         T.StructField("job_id", T.IntegerType(), False),
@@ -130,84 +109,11 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("url_hash", T.LongType(), False),
         T.StructField("host", T.StringType(), False),
         T.StructField("host_bucket", T.IntegerType(), False),
-        T.StructField("salt", T.IntegerType(), False),
         T.StructField("depth", T.IntegerType(), False),
         T.StructField("parent_seq", T.LongType(), False),
         T.StructField("link_idx", T.IntegerType(), False),
         # retries are intra-fetch (reference-faithful, crawler.py:147-190), so
         # admissions never re-enter the frontier — no attempt counter here
         T.StructField("round_added", T.IntegerType(), False),
-    ]
-)
-
-SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.IntegerType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("seq", T.LongType(), False),
-        T.StructField("round_added", T.IntegerType(), False),
-    ]
-)
-
-PAYLOAD_STRUCT = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("caption", T.StringType(), True),  # alt text of first <img>
-    ]
-)
-
-CRAWL_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.IntegerType(), False),
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("schedule_rank", T.LongType(), False),  # == seq
-        T.StructField("url", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("status_code", T.IntegerType(), False),
-        T.StructField("title", T.StringType(), False),
-        T.StructField("metadata", METADATA_STRUCT, False),
-        T.StructField("headings", HEADINGS_TYPE, False),
-        T.StructField("content", CONTENT_STRUCT, False),
-        T.StructField("payload", PAYLOAD_STRUCT, False),
-    ]
-)
-
-LINKS_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.IntegerType(), False),
-        T.StructField("from_url", T.StringType(), False),
-        T.StructField("to_url", T.StringType(), False),
-        T.StructField("link_text", T.StringType(), False),  # "" when absent
-        T.StructField("link_idx", T.IntegerType(), False),
-        T.StructField("from_depth", T.IntegerType(), False),
-    ]
-)
-
-OUTCOMES_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.IntegerType(), False),
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("seq", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("outcome", T.StringType(), False),  # parsed|failed|disallowed
-        T.StructField("status_code", T.IntegerType(), True),
-        T.StructField("attempts", T.IntegerType(), False),
-        T.StructField("fetch_latency_ms", T.DoubleType(), False),
-    ]
-)
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.IntegerType(), False),
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("host_bucket", T.IntegerType(), False),
-        T.StructField("rows_in", T.LongType(), False),
-        T.StructField("rows_out", T.LongType(), False),
-        T.StructField("latency_p50_ms", T.DoubleType(), True),
-        T.StructField("latency_p95_ms", T.DoubleType(), True),
-        T.StructField("latency_hist", T.ArrayType(T.LongType()), True),
     ]
 )

@@ -2,7 +2,7 @@
 
 Local mode here; on a real cluster the same builder is used by
 ``spark-submit --py-files`` (see scripts/submit_crawl.py). AQE is on so skewed
-host buckets get runtime skew-join splitting on top of our explicit salting.
+joins get runtime skew-join splitting.
 
 Python workers fork from ``web_crawler_spark.worker_daemon`` instead of
 ``pyspark.daemon``: it keeps each task from re-reading the directory of every

@@ -1,15 +1,10 @@
-"""Structured Streaming surface: the progress/metrics plane as a stream.
-
-The reference polls an in-memory ``job_progress`` dict every 2-5 s from JS
-timers (``Crawler/app.py:565-589``, ``static/js/job-tracker.js:40``). The
-streaming rebuild treats per-round outcome rows as an unbounded source and
-maintains the same rollups continuously:
+"""Structured Streaming surface: event rollups as a stream.
 
 - ``rollup_stream``: event-time tumbling-window counts/sums with a watermark
   for late rows — the streaming twin of ``analytics.relational.hourly_rollup``
   (same plan shape, ``readStream`` instead of ``read``).
-- ``progress_stream``: running per-outcome counters (pages processed /
-  successful / failed — crawler.py:88-95) via update-mode aggregation.
+- ``session_stream``: per-user session windows — the streaming twin of
+  ``analytics.relational.session_rollup``.
 
 Batch/stream parity is the test contract: running the streaming query over a
 static directory must produce exactly the batch rollup (test_streaming.py).
@@ -95,9 +90,3 @@ def session_stream(
         )
     )
 
-
-def progress_stream(spark: SparkSession, outcomes_dir: str, outcomes_schema) -> DataFrame:
-    """Running crawl counters (the reference's stats dict, crawler.py:88-95)
-    as an update-mode streaming aggregation over outcome rows."""
-    oc = spark.readStream.schema(outcomes_schema).parquet(outcomes_dir)
-    return oc.groupBy("outcome").agg(F.count("*").alias("cnt"))
