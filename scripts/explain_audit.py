@@ -151,6 +151,18 @@ AUDITS = {
 }
 
 
+def audit(spark, sf_dir: str, name: str, queries) -> tuple[list[str], str]:
+    """(problems, formatted plan) of query *name* against its AUDITS entry."""
+    must, must_not = AUDITS[name]
+    plan = queries[name](spark, sf_dir)._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    probs = [f"missing: {m}" for m in must if m not in plan]
+    if name != "links_per_page":
+        probs += [f"present: {m}" for m in must_not if m in plan]
+    return probs, plan
+
+
 def main() -> int:
     from web_crawler_spark.analytics import LOCAL_QUERIES, QUERIES
     from web_crawler_spark.session import get_spark
@@ -161,16 +173,10 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark(app_name="explain-audit", master="local[4]", shuffle_partitions=8)
     failures = []
-    for name, (must, must_not) in AUDITS.items():
+    for name in AUDITS:
         if only and name not in only:
             continue
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        probs = [f"missing: {m}" for m in must if m not in plan]
-        if name != "links_per_page":
-            probs += [f"present: {m}" for m in must_not if m in plan]
+        probs, plan = audit(spark, sf_dir, name, QUERIES)
         status = "OK " if not probs else "FAIL"
         print(f"{status} {name}" + ("" if not probs else f"  {probs}"))
         if probs:

@@ -11,6 +11,7 @@ import pytest
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
 
 from check_parity import TABLES, value_hash  # noqa: E402
+from explain_audit import AUDITS, audit  # noqa: E402
 
 from web_crawler_spark.analytics import (  # noqa: E402
     LOCAL_ORACLES,
@@ -80,6 +81,13 @@ def test_oracle_parity(spark, duck, name):
     assert len(sdf) == len(odf), f"{name}: rowcount {len(sdf)} vs {len(odf)}"
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert value_hash(sdf) == value_hash(odf), f"{name}: value mismatch"
+
+
+@pytest.mark.parametrize("name", list(AUDITS))
+def test_plan_audit(spark, name):
+    """scripts/explain_audit.py's plan-shape invariants at sf0.01."""
+    probs, _ = audit(spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01"), name, QUERIES)
+    assert not probs
 
 
 def test_every_query_has_registry_consistency():

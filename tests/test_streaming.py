@@ -1,14 +1,26 @@
 """Batch/stream parity: the streaming rollup over a static directory must
 produce exactly the batch aggregation (same plan shape, readStream source)."""
 
+import os
 import shutil
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from web_crawler_spark.analytics.relational import (
+    TS_FMT_SPARK,
+    attribution_join,
+    hourly_rollup,
+    session_rollup,
+)
 from web_crawler_spark.streaming import run_to_memory, stream_rollup
 
 SF_EVENTS = "/root/testdata/sf0.001/events.parquet"
+SF_DIR = os.path.dirname(SF_EVENTS)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
 
 def test_stream_rollup_matches_batch(spark, tmp_path):
@@ -16,15 +28,18 @@ def test_stream_rollup_matches_batch(spark, tmp_path):
     src.mkdir()
     shutil.copy(SF_EVENTS, src / "part-0.parquet")
 
-    q = run_to_memory(
-        stream_rollup.rollup_stream(spark, str(src), window="1 hour", watermark="2 hours"),
-        name="rollup_t",
-    )
+    q = run_to_memory(stream_rollup.rollup_stream(spark, str(src)), name="rollup_t")
     try:
         got = {
             (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
             for r in spark.table("rollup_t").collect()
         }
+        # the registered batch query (and so, transitively, its DuckDB oracle)
+        registered = spark.table("rollup_t").select(
+            F.date_format("window_start", TS_FMT_SPARK).alias("hour_str"),
+            "event_type", "n_events", "total_value",
+        )
+        assert _rows(registered) == _rows(hourly_rollup(spark, SF_DIR))
     finally:
         q.stop()
 
@@ -54,15 +69,20 @@ def test_session_stream_matches_batch(spark, tmp_path):
     shutil.copy(SF_EVENTS, src / "part-0.parquet")
 
     q = run_to_memory(
-        stream_rollup.session_stream(spark, str(src), gap="10 minutes", watermark="2 hours"),
-        name="sess_t",
-        mode="complete",
+        stream_rollup.session_stream(spark, str(src)), name="sess_t", mode="complete"
     )
     try:
         got = {
             (r["user_id"], r["session_start"]): (r["session_end"], r["n_events"], r["total_value"])
             for r in spark.table("sess_t").collect()
         }
+        registered = spark.table("sess_t").select(
+            "user_id",
+            F.date_format("session_start", TS_FMT_SPARK).alias("session_start"),
+            F.date_format("session_end", TS_FMT_SPARK).alias("session_end"),
+            "n_events", "total_value",
+        )
+        assert _rows(registered) == _rows(session_rollup(spark, SF_DIR))
     finally:
         q.stop()
 
@@ -93,9 +113,7 @@ def test_stream_join_matches_batch(spark, tmp_path):
     shutil.copy(SF_EVENTS, src / "part-0.parquet")
 
     q = run_to_memory(
-        stream_join.attribution_stream(spark, str(src), watermark="35 days", max_lag="1 hour"),
-        name="attrib_t",
-        mode="append",
+        stream_join.attribution_stream(spark, str(src)), name="attrib_t", mode="append"
     )
     try:
         got = sorted(
@@ -107,9 +125,10 @@ def test_stream_join_matches_batch(spark, tmp_path):
 
     want = sorted(
         (r["user_id"], r["click_id"], r["purchase_id"], r["purchase_value"], r["lag_s"])
-        for r in stream_join.attribution_batch(spark, str(src), max_lag="1 hour").collect()
+        for r in stream_join.attribution_batch(spark, str(src)).collect()
     )
     assert got == want and len(got) > 0
+    assert got == _rows(attribution_join(spark, SF_DIR))
 
 
 def test_stateful_dedup_stream(spark, tmp_path):

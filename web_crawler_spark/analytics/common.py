@@ -165,31 +165,25 @@ def sql_word_hash32(offset: int = 1) -> str:
 # exact binary .5), and a sum of identical longs converts to double
 # identically.
 #
-# Overflow bound: |group sum| must stay below 2^63/10^scale — 9.2e12 at the
-# default scale 6.  sf1 group sums here are ~1e10.  At a 100 TB corpus drop
-# `scale` to 2 (cent precision, bound 9.2e16) or pre-aggregate per partition;
-# the scale knob is threaded through both helpers so Spark and the
-# oracle move together.
+# Overflow bound: |group sum| must stay below 2^63/10^_DSUM_SCALE — 9.2e12
+# at scale 6.  sf1 group sums here are ~1e10.  At a 100 TB corpus lower
+# _DSUM_SCALE to 2 (cent precision, bound 9.2e16) or pre-aggregate per
+# partition; both helpers read the one constant, so Spark and the oracle
+# move together.
 
 _DSUM_SCALE = 6
+_DSUM_UNIT = float(10 ** _DSUM_SCALE)
 
 
-def _fx(expr, scale: int):
-    return F.round(expr * F.lit(float(10 ** scale)), 0).cast("long")
-
-
-def dsum(col, alias: str, scale: int = _DSUM_SCALE):
+def dsum(col, alias: str):
     """Order-independent SUM of a double column via long fixed-point."""
-    return (
-        (F.sum(_fx(F.col(col), scale)).cast("double") / F.lit(float(10 ** scale)))
-        .alias(alias)
-    )
+    fx = F.round(F.col(col) * F.lit(_DSUM_UNIT), 0).cast("long")
+    return (F.sum(fx).cast("double") / F.lit(_DSUM_UNIT)).alias(alias)
 
 
-def sql_dsum(expr: str, alias: str, scale: int = _DSUM_SCALE) -> str:
+def sql_dsum(expr: str, alias: str) -> str:
     """DuckDB-side twin of :func:`dsum` (same fixed-point units)."""
-    unit = float(10 ** scale)
     return (
-        f"CAST(SUM(CAST(ROUND(({expr}) * {unit!r}, 0) AS BIGINT)) AS DOUBLE)"
-        f" / {unit!r} AS {alias}"
+        f"CAST(SUM(CAST(ROUND(({expr}) * {_DSUM_UNIT!r}, 0) AS BIGINT)) AS DOUBLE)"
+        f" / {_DSUM_UNIT!r} AS {alias}"
     )

@@ -890,6 +890,28 @@ _SPAN_GH = (
 )
 
 
+def gram_spans(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_words, pos, gh): one row per G-gram with its 1-based start
+    position (``span_dedup`` and ``streaming.stream_spans``). A document
+    shorter than G keeps one row with null pos and gh (explode_outer), so
+    an arriving document always gets a verdict."""
+    grams = (
+        f"CASE WHEN size(h1) >= {SPAN_G} THEN "
+        f"transform(sequence(1, size(h1) - {SPAN_G - 1}), i -> struct(i as pos, {_SPAN_GH} as gh)) "
+        "ELSE array() END"
+    )
+    return (
+        docs.select(
+            "doc_id",
+            F.expr(f"size({_WORDS})").alias("n_words"),
+            F.expr(word_hash32(1)).alias("h1"),
+            F.expr(word_hash32(9)).alias("h2"),
+        )
+        .select("doc_id", "n_words", F.explode_outer(F.expr(grams)).alias("g"))
+        .select("doc_id", "n_words", F.col("g.pos").alias("pos"), F.col("g.gh").alias("gh"))
+    )
+
+
 def span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplicated-passage verdict: which spans of >= SPAN_G
     consecutive tokens also appear verbatim in ANOTHER document, how many
@@ -901,25 +923,7 @@ def span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-hygiene stage a training pipeline adds on top.
     """
     d = table(spark, sf_dir, "documents")
-    # one row per G-gram with its 1-based start position
-    grams = (
-        d.select(
-            "doc_id",
-            F.expr(word_hash32(1)).alias("h1"),
-            F.expr(word_hash32(9)).alias("h2"),
-        )
-        .filter(F.size("h1") >= SPAN_G)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(h1) - {SPAN_G - 1}), "
-                    f"i -> struct(i as pos, {_SPAN_GH} as gh))"
-                )
-            ).alias("g"),
-        )
-        .select("doc_id", F.col("g.pos").alias("pos"), F.col("g.gh").alias("gh"))
-    )
+    grams = gram_spans(d).filter(F.col("pos").isNotNull())
     # grams duplicated ACROSS documents (partial-agg'd count-distinct shuffle)
     dup_gh = (
         grams.groupBy("gh")
@@ -1189,23 +1193,28 @@ SPLIT_TRAIN_PCT = 90
 SPLIT_VALID_PCT = 95  # [train, valid) = [0,90), [90,95); test = [95,100)
 
 
+def split_of_group():
+    """The `split` column of a frame with a `group_id` column: its md5
+    bucket mod 100 against the split percentages (``corpus_split`` and
+    ``streaming.stream_split``)."""
+    bucket = F.expr(
+        "cast(conv(substring(md5(cast(group_id as string)), 1, 15), 16, 10) as bigint) % 100"
+    )
+    return (
+        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
+        .when(bucket < SPLIT_VALID_PCT, F.lit("valid"))
+        .otherwise(F.lit("test"))
+        .alias("split")
+    )
+
+
 def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = _component_labels(spark, sf_dir)
     d = table(spark, sf_dir, "documents").select("doc_id")
     out = d.join(labels.withColumnRenamed("doc", "doc_id"), "doc_id", "left").select(
         "doc_id", F.coalesce("label", "doc_id").alias("group_id")
     )
-    bucket = F.expr(
-        "cast(conv(substring(md5(cast(group_id as string)), 1, 15), 16, 10) as bigint) % 100"
-    )
-    return out.select(
-        "doc_id",
-        "group_id",
-        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
-        .when(bucket < SPLIT_VALID_PCT, F.lit("valid"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
-    )
+    return out.select("doc_id", "group_id", split_of_group())
 
 
 SQL_CORPUS_SPLIT = f"""

@@ -356,13 +356,17 @@ KMV_K = 64
 KMV_SPACE = 1 << 48  # 12 hex digits of md5: (k-1)*2^48 stays far below 2^63
 
 
+def kmv_hash(key_col: str):
+    """The sketch hash of *key_col*: 12 hex digits of its md5 as a 48-bit
+    int (``approx_distinct_kmv`` and ``streaming.stream_kmv``)."""
+    return F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 12), 16, 10).cast(
+        "bigint"
+    )
+
+
 def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
-    hashes = ev.select(
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("h")
-    )
+    hashes = ev.select(kmv_hash("event_id").alias("h"))
     kth = (
         hashes.distinct()
         .orderBy("h")

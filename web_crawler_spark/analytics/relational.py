@@ -273,16 +273,14 @@ SELECT event_id, admission_rank FROM (
 # --- J6: first-occurrence dedup (crawler.py:429-430) -----------------------
 
 def first_occurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the crawl round's own first-occurrence rule (engine.first_by); the
+    # oracle states it as a row_number window — event_id is unique, so
+    # both pick the same row
+    from ..engine import first_by
+
     ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "user_id",
-            "event_type",
-            F.col("event_id").alias("first_event_id"),
-        )
+    return first_by(ev, ["user_id", "event_type"], ["ts", "event_id"]).select(
+        "user_id", "event_type", F.col("event_id").alias("first_event_id")
     )
 
 
@@ -373,13 +371,19 @@ FROM events WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50
 
 # --- streaming-analog: event-time tumbling-window rollup -------------------
 
+def event_totals():
+    """Per-group event count and exact value sum — the aggregates of every
+    event rollup and its stream (streaming/stream_rollup.py)."""
+    return F.count("*").alias("n_events"), dsum("value", "total_value")
+
+
 def hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     # batch form of the Structured Streaming windowed agg
-    # (streaming/stream_rollup.py runs the same plan over readStream)
+    # (stream_rollup.rollup_stream groups by window() over readStream)
     return (
         ev.groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
-        .agg(F.count("*").alias("n_events"), dsum("value", "total_value"))
+        .agg(*event_totals())
         .select(
             F.date_format("hour", TS_FMT_SPARK).alias("hour_str"),
             "event_type",
@@ -397,17 +401,26 @@ FROM events GROUP BY date_trunc('hour', ts), event_type
 """
 
 
+SESSION_GAP = "10 minutes"
+
+
+def user_sessions(ev: DataFrame) -> DataFrame:
+    """(sw, user_id, n_events, total_value) per user session window of
+    *ev*: one ``session_window`` plan for ``session_rollup`` and
+    ``stream_rollup.session_stream``, which adds only its watermark."""
+    return ev.groupBy(F.session_window("ts", SESSION_GAP).alias("sw"), "user_id").agg(
+        *event_totals()
+    )
+
+
 def session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows (10-minute inactivity gap) — batch twin of
-    streaming/stream_rollup.session_stream, same ``session_window`` plan over
-    a static read. A session merges consecutive events that each arrive
-    strictly within the gap of the previous one; its end is last event + gap.
-    The DuckDB oracle states the same semantics as gaps-and-islands (lag +
+    """Per-user session windows (SESSION_GAP inactivity gap) over a static
+    read. A session merges consecutive events that each arrive strictly
+    within the gap of the previous one; its end is last event + gap. The
+    DuckDB oracle states the same semantics as gaps-and-islands (lag +
     running sum of session-break flags)."""
-    ev = table(spark, sf_dir, "events")
     return (
-        ev.groupBy(F.session_window("ts", "10 minutes").alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"), dsum("value", "total_value"))
+        user_sessions(table(spark, sf_dir, "events"))
         .select(
             "user_id",
             F.date_format(F.col("sw.start"), TS_FMT_SPARK).alias("session_start"),
@@ -422,7 +435,7 @@ SQL_SESSION_ROLLUP = f"""
 WITH flagged AS (
   SELECT user_id, ts, event_id, value,
          CASE WHEN lag(ts) OVER w IS NULL
-                   OR ts - lag(ts) OVER w >= INTERVAL 10 MINUTE
+                   OR ts - lag(ts) OVER w >= INTERVAL '{SESSION_GAP}'
               THEN 1 ELSE 0 END AS new_sess
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -436,7 +449,7 @@ WITH flagged AS (
 )
 SELECT user_id,
        strftime(min(ts), '{TS_FMT_DUCK}') AS session_start,
-       strftime(max(ts) + INTERVAL 10 MINUTE, '{TS_FMT_DUCK}') AS session_end,
+       strftime(max(ts) + INTERVAL '{SESSION_GAP}', '{TS_FMT_DUCK}') AS session_end,
        CAST(count(*) AS BIGINT) AS n_events,
        {sql_dsum('value', 'total_value')}
 FROM numbered GROUP BY user_id, sess_id

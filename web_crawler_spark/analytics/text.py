@@ -29,14 +29,16 @@ LANGS = sorted(STOPWORDS)  # deterministic argmax tie-break order
 BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
 
-def _hits(lang: str) -> str:
-    lst = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
-    return f"size(filter({_WORDS}, w -> array_contains(array({lst}), w)))"
+# each language's stopwords as one quoted list literal, shared by both engines
+_STOPS = {lang: ", ".join(f"'{w}'" for w in ws) for lang, ws in STOPWORDS.items()}
+
+
+def _hits(lang: str, words: str = _WORDS) -> str:
+    return f"size(filter({words}, w -> array_contains(array({_STOPS[lang]}), w)))"
 
 
 def _sql_hits(lang: str) -> str:
-    lst = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
-    return f"len(list_filter({SQL_WORDS}, w -> list_contains([{lst}], w)))"
+    return f"len(list_filter({SQL_WORDS}, w -> list_contains([{_STOPS[lang]}], w)))"
 
 
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,22 +74,26 @@ FROM (SELECT doc_id, lang,
 """
 
 
-def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    en = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
+def _quality_signals(words: str = _WORDS) -> list:
+    """The per-document text-quality counts over the `text` column, with
+    *words* the words-array expression (``text_quality``,
+    ``corpus_retention`` and ``stream_curate``)."""
+    return [
+        F.expr(f"size({words})").alias("n_words"),
+        F.length("text").alias("n_chars"),
+        F.expr("regexp_count(text, '[.,;:!?]')").alias("n_punct"),
+        F.expr("regexp_count(text, '[A-Z]')").alias("n_upper"),
+        F.expr(_hits("en", words)).alias("n_stop"),
+        # token counting folded in (former text_tokens entry; same grain):
+        # whitespace tokens == n_words, BPE-ish regex tokens below
+        F.regexp_count(F.col("text"), F.lit(BPE_RE)).alias("bpe_tokens"),
+    ]
+
+
+def _with_quality(df: DataFrame) -> DataFrame:
+    """The ratios and the `quality` score over the ``_quality_signals``."""
     return (
-        d.select(
-            "doc_id",
-            F.expr(f"size({_WORDS})").alias("n_words"),
-            F.length("text").alias("n_chars"),
-            F.expr("regexp_count(text, '[.,;:!?]')").alias("n_punct"),
-            F.expr("regexp_count(text, '[A-Z]')").alias("n_upper"),
-            F.expr(f"size(filter({_WORDS}, w -> array_contains(array({en}), w)))").alias("n_stop"),
-            # token counting folded in (former text_tokens entry; same grain):
-            # whitespace tokens == n_words, BPE-ish regex tokens below
-            F.regexp_count(F.col("text"), F.lit(BPE_RE)).alias("bpe_tokens"),
-        )
-        .withColumn("avg_word_len", F.col("n_chars").cast("double") / F.col("n_words"))
+        df.withColumn("avg_word_len", F.col("n_chars").cast("double") / F.col("n_words"))
         .withColumn("punct_ratio", F.col("n_punct").cast("double") / F.col("n_chars"))
         .withColumn("stopword_ratio", F.col("n_stop").cast("double") / F.col("n_words"))
         .withColumn("upper_ratio", F.col("n_upper").cast("double") / F.col("n_chars"))
@@ -99,27 +105,39 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TEXT_QUALITY = rf"""
+def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents")
+    return _with_quality(d.select("doc_id", *_quality_signals()))
+
+
+def _sql_quality(keep: str, src: str) -> str:
+    """DuckDB twin of ``_with_quality`` over ``_quality_signals``: the
+    *keep* columns of *src* (which has a `text` column), then the signals,
+    the ratios and `quality`."""
+    return rf"""
 SELECT *,
        (stopword_ratio * 2.0 + punct_ratio * 1.0) - upper_ratio * 0.5 AS quality
 FROM (
-  SELECT doc_id, n_words, n_chars, n_punct, n_upper, n_stop, bpe_tokens,
+  SELECT *,
          CAST(n_chars AS DOUBLE) / n_words AS avg_word_len,
          CAST(n_punct AS DOUBLE) / n_chars AS punct_ratio,
          CAST(n_stop AS DOUBLE) / n_words AS stopword_ratio,
          CAST(n_upper AS DOUBLE) / n_chars AS upper_ratio
   FROM (
-    SELECT doc_id,
+    SELECT {keep},
            len({SQL_WORDS}) AS n_words,
            length(text) AS n_chars,
            len(regexp_extract_all(text, '[.,;:!?]')) AS n_punct,
            len(regexp_extract_all(text, '[A-Z]')) AS n_upper,
            {_sql_hits('en')} AS n_stop,
            len(regexp_extract_all(text, '{BPE_RE}')) AS bpe_tokens
-    FROM documents
+    FROM {src}
   )
 )
 """
+
+
+SQL_TEXT_QUALITY = _sql_quality("doc_id", "documents")
 
 
 # word hash: first 8 md5 hex chars as int64 (engine-portable; one shared
@@ -132,6 +150,10 @@ _WINDOWS = (
     f"(element_at(hs, i) * 31 + element_at(hs, i + 1) * 17 + element_at(hs, i + 2)) % 1000003) "
     "ELSE array(cast(0 as bigint)) END"
 )
+_SQL_WINDOWS = """CASE WHEN len(hs) >= 3 THEN
+  [(hs[i] * 31 + hs[i + 1] * 17 + hs[i + 2]) % 1000003
+   FOR i IN generate_series(1, len(hs) - 2)]
+ELSE [CAST(0 AS BIGINT)] END"""
 
 
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,11 +173,7 @@ SQL_TEXT_FINGERPRINT = f"""
 SELECT doc_id, list_min(wh) AS fingerprint,
        len(list_distinct(wh)) AS n_distinct_windows
 FROM (
-  SELECT doc_id,
-         CASE WHEN len(hs) >= 3 THEN
-           [(hs[i] * 31 + hs[i + 1] * 17 + hs[i + 2]) % 1000003
-            FOR i IN generate_series(1, len(hs) - 2)]
-         ELSE [CAST(0 AS BIGINT)] END AS wh
+  SELECT doc_id, {_SQL_WINDOWS} AS wh
   FROM (
     SELECT doc_id,
            {sql_word_hash32()} AS hs
@@ -188,29 +206,10 @@ def corpus_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-valued key (never a global window) and evaluates every signal
     exactly once before the exchange."""
     d = table(spark, sf_dir, "documents")
-    en = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-    base = (
+    base = _with_quality(
         d.withColumn("hs", F.expr(_WHASH))
         .withColumn("wh", F.expr(_WINDOWS))
-        .select(
-            "doc_id",
-            "lang",
-            F.array_min("wh").alias("fingerprint"),
-            F.expr(f"size({_WORDS})").alias("n_words"),
-            F.length("text").alias("n_chars"),
-            F.expr("regexp_count(text, '[.,;:!?]')").alias("n_punct"),
-            F.expr("regexp_count(text, '[A-Z]')").alias("n_upper"),
-            F.expr(f"size(filter({_WORDS}, w -> array_contains(array({en}), w)))").alias("n_stop"),
-            # token counting folded in (former text_tokens entry; same grain):
-            # whitespace tokens == n_words, BPE-ish regex tokens below
-            F.regexp_count(F.col("text"), F.lit(BPE_RE)).alias("bpe_tokens"),
-        )
-        .withColumn(
-            "quality",
-            (F.col("n_stop").cast("double") / F.col("n_words") * 2.0
-             + F.col("n_punct").cast("double") / F.col("n_chars"))
-            - F.col("n_upper").cast("double") / F.col("n_chars") * 0.5,
-        )
+        .select("doc_id", "lang", F.array_min("wh").alias("fingerprint"), *_quality_signals())
     )
     reason = (
         F.when(F.col("doc_id") != F.col("keeper_id"), F.lit("near_duplicate"))
@@ -229,30 +228,14 @@ def corpus_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SQL_RET_SRC = f"""(
+  SELECT doc_id, lang, text, {_SQL_WINDOWS} AS wh
+  FROM (SELECT doc_id, lang, text, {sql_word_hash32()} AS hs FROM documents)
+)"""
 SQL_CORPUS_RETENTION = f"""
 WITH base AS (
-  SELECT doc_id, lang, list_min(wh) AS fingerprint, n_words, n_chars,
-         n_punct, n_upper, n_stop,
-         (CAST(n_stop AS DOUBLE) / n_words * 2.0
-          + CAST(n_punct AS DOUBLE) / n_chars)
-          - CAST(n_upper AS DOUBLE) / n_chars * 0.5 AS quality
-  FROM (
-    SELECT doc_id, lang,
-           CASE WHEN len(hs) >= 3 THEN
-             [(hs[i] * 31 + hs[i + 1] * 17 + hs[i + 2]) % 1000003
-              FOR i IN generate_series(1, len(hs) - 2)]
-           ELSE [CAST(0 AS BIGINT)] END AS wh,
-           len({SQL_WORDS}) AS n_words,
-           length(text) AS n_chars,
-           len(regexp_extract_all(text, '[.,;:!?]')) AS n_punct,
-           len(regexp_extract_all(text, '[A-Z]')) AS n_upper,
-           {_sql_hits('en')} AS n_stop
-    FROM (
-      SELECT doc_id, lang, text,
-             {sql_word_hash32()} AS hs
-      FROM documents
-    )
-  )
+  SELECT doc_id, lang, fingerprint, n_words, quality
+  FROM ({_sql_quality("doc_id, lang, list_min(wh) AS fingerprint", _SQL_RET_SRC)})
 ),
 keepers AS (
   SELECT fingerprint, min(doc_id) AS keeper_id FROM base GROUP BY fingerprint
@@ -685,15 +668,13 @@ FROM planted
 CLF_WMOD = 2001  # hash weights span [-1000, 1000]
 CLF_STOP_BOOST = 500  # planted stopword weight (the learned-signal stand-in)
 
-_CLF_STOPS = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-
 
 def _clf_logit_over(arr: str) -> str:
     """The integer logit fold over any words-array expression (reused by
     stream_curate over its pre-bound `ws` column)."""
     return (
         f"aggregate({arr}, cast(0 as bigint), (acc, w) -> acc + ("
-        f"CASE WHEN array_contains(array({_CLF_STOPS}), w) THEN {CLF_STOP_BOOST} "
+        f"CASE WHEN array_contains(array({_STOPS['en']}), w) THEN {CLF_STOP_BOOST} "
         f"ELSE cast(conv(substring(md5(w), 1, 15), 16, 10) as bigint) % {CLF_WMOD} - {(CLF_WMOD - 1) // 2} END))"
     )
 
@@ -701,7 +682,7 @@ def _clf_logit_over(arr: str) -> str:
 _CLF_LOGIT = _clf_logit_over(_WORDS)
 _SQL_CLF_LOGIT = (
     f"CAST(list_sum(list_transform({SQL_WORDS}, w -> "
-    f"CASE WHEN list_contains([{_CLF_STOPS}], w) THEN {CLF_STOP_BOOST} "
+    f"CASE WHEN list_contains([{_STOPS['en']}], w) THEN {CLF_STOP_BOOST} "
     f"ELSE CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) % {CLF_WMOD} - {(CLF_WMOD - 1) // 2} END"
     f")) AS BIGINT)"
 )

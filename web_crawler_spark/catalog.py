@@ -103,7 +103,7 @@ class SnapshotTable:
     def compact(
         self,
         spark: SparkSession,
-        up_to_round: Optional[int] = None,
+        up_to_round: int,
         *,
         schema,
         cluster_by: list,
@@ -124,12 +124,11 @@ class SnapshotTable:
         happened (skipped when fewer than two snapshots qualify).
         """
         snaps = self._load()
-        horizon = max((s["round"] for s in snaps), default=0) if up_to_round is None else up_to_round
         # snaps is commit-ordered; only a PREFIX may merge (rounds are
         # monotone per commit order), so later snapshots keep their place
         prefix = []
         for s in snaps:
-            if s["round"] <= horizon:
+            if s["round"] <= up_to_round:
                 prefix.append(s)
             else:
                 break

@@ -13,7 +13,7 @@ from __future__ import annotations
 from .webgen import PageSpec
 
 
-def render_html(spec: PageSpec, cfg=None) -> str:
+def render_html(spec: PageSpec) -> str:
     parts: list[str] = ["<!DOCTYPE html>", "<html>", "<head>"]
     parts.append(f'<meta charset="{spec.meta["charset"]}">')
     parts.append(f"<title>{spec.title}</title>")

@@ -124,12 +124,14 @@ def features(pixels: np.ndarray) -> dict:
 THUMB_FACTOR = 4  # linear downsample factor of the thumbnail transform
 
 
-def resize_block_mean(pixels: np.ndarray, factor: int = THUMB_FACTOR) -> np.ndarray:
-    """Deterministic area resize: edge-pad to a multiple of *factor*, then
-    block-mean each factor×factor tile per channel (float64 means, truncated
-    to uint8). Stand-in for a real area-interpolation resize — swapping in
-    PIL/libvips changes only this function; the Spark-side binary-in /
-    binary-out transform plumbing is what the engine tests."""
+def resize_block_mean(pixels: np.ndarray) -> np.ndarray:
+    """Deterministic area resize: edge-pad to a multiple of THUMB_FACTOR,
+    then block-mean each THUMB_FACTOR×THUMB_FACTOR tile per channel
+    (float64 means, truncated to uint8). Stand-in for a real
+    area-interpolation resize — swapping in PIL/libvips changes only this
+    function; the Spark-side binary-in / binary-out transform plumbing is
+    what the engine tests."""
+    factor = THUMB_FACTOR
     h, w, _ = pixels.shape
     ph, pw = (-h) % factor, (-w) % factor
     if ph or pw:

@@ -65,7 +65,7 @@ def allowed(url: str, user_agent: str, rules: RulesByHost) -> bool:
     return best_allow if best_len >= 0 else True
 
 
-def generate_rules(cfg, frac_disallow_hosts: float = 0.5) -> list[RobotsRule]:
+def generate_rules(cfg) -> list[RobotsRule]:
     """Deterministic robots fixture for a WebConfig: about half the hosts
     disallow a band of their page space; one host has a parse error (fail-open);
     one host disallows everything for a specific UA only."""
@@ -74,7 +74,7 @@ def generate_rules(cfg, frac_disallow_hosts: float = 0.5) -> list[RobotsRule]:
         r = unit_float(cfg.seed, "robots", host)
         if r < 0.1:
             rules.append(RobotsRule(host, "*", "disallow", "/", parse_error=True))
-        elif r < frac_disallow_hosts:
+        elif r < 0.5:
             # disallow one decile of /p/<i> by first digit, allow-carveout inside
             digit = stable_hash64(cfg.seed, "rdig", host) % 10
             rules.append(RobotsRule(host, "*", "disallow", f"/p/{digit}"))

@@ -66,11 +66,11 @@ def read_header(data: bytes) -> tuple[str, int, int, int, int]:
     return fmt, fps, n_frames, w, h
 
 
-def sample_indices(n_frames: int, k: int = N_SAMPLE) -> list[int]:
-    """k evenly-spaced frame indices (deduplicated, ascending)."""
+def sample_indices(n_frames: int) -> list[int]:
+    """N_SAMPLE evenly-spaced frame indices (deduplicated, ascending)."""
     if n_frames <= 0:
         return []
-    return sorted({(i * n_frames) // k for i in range(min(k, n_frames))})
+    return sorted({(i * n_frames) // N_SAMPLE for i in range(min(N_SAMPLE, n_frames))})
 
 
 def decode_frames(data: bytes, indices: list[int]) -> dict[int, np.ndarray]:

@@ -7,7 +7,7 @@ round (SURVEY.md §3.1):
     quota) → ONE fused Python stage (robots gate → fetch → parse, mapInPandas
     over the synthetic web; url_hash-spread partitions) committed as the round's
     stage snapshot → explode children → within-batch first-occurrence dedup
-    (window) → exact anti-join seen → global rank in
+    (``first_by``) → exact anti-join seen → global rank in
     (parent_seq, link_idx) order → page-cap admission → assign seq → commit
     admissions; frontier/seen/crawl_log/links/outcomes/metrics are
     metadata-only projections of those two physical tables.
@@ -205,6 +205,23 @@ def _links_of(stage: DataFrame, job_id: int) -> DataFrame:
             F.coalesce(F.col("l.link_text"), F.lit("")).alias("link_text"),
             F.col("l.link_idx").alias("link_idx"), "from_depth", "parent_seq",
         )
+    )
+
+
+def first_by(
+    df: DataFrame, keys: list[str], order: list[str], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """One row per *keys*: the first row in *order* — the frontier's
+    first-occurrence rule (crawler.py:429-430), shared by the crawl round
+    and the J6 query. Columns: keys, *carry*, then *order*.
+
+    min(struct) instead of a row_number window: structs compare
+    lexicographically, so the winner is the same when *order* is unique per
+    key — but it partial-aggregates map-side, shuffling one row per key and
+    map partition. (A struct buffer is not fixed-width, so Spark plans it as
+    a SortAggregate: each map partition still sorts its rows by key.)"""
+    return df.groupBy(*keys).agg(F.min(F.struct(*order, *carry)).alias("_m")).select(
+        *keys, *[F.col(f"_m.{c}").alias(c) for c in [*carry, *order]]
     )
 
 
@@ -475,21 +492,8 @@ def crawl(
                 )
             )
             # within-batch first-occurrence dedup (crawler.py:429-430 analog
-            # across pages: the earliest (parent_seq, link_idx) wins the slot).
-            # min(struct) instead of a row_number window: structs compare
-            # lexicographically, so this is the same winner — but it partial-
-            # aggregates map-side, shuffling only unique URLs per map partition
-            # instead of sorting every candidate row.
-            fresh = (
-                candidates.groupBy("url")
-                .agg(F.min(F.struct("parent_seq", "link_idx", "depth")).alias("_m"))
-                .select(
-                    "url",
-                    F.col("_m.depth").alias("depth"),
-                    F.col("_m.parent_seq").alias("parent_seq"),
-                    F.col("_m.link_idx").alias("link_idx"),
-                )
-            )
+            # across pages: the earliest (parent_seq, link_idx) wins the slot)
+            fresh = first_by(candidates, ["url"], ["parent_seq", "link_idx"], ("depth",))
 
             seen_df = run.read(spark, "seen")
             new_urls = fresh.join(

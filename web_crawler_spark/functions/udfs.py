@@ -54,7 +54,7 @@ def fetch_latency_ms(url: str, attempts: int, seed: int) -> float:
     return base * attempts
 
 
-def make_fetch_parse(cfg: webgen.WebConfig, job: JobConfig, rules: RulesByHost | None = None):
+def make_fetch_parse(cfg: webgen.WebConfig, job: JobConfig, rules: RulesByHost):
     """mapInPandas stage: frontier batch → gated/fetched/parsed rows
     (FETCHED_SCHEMA).
 
@@ -83,7 +83,7 @@ def make_fetch_parse(cfg: webgen.WebConfig, job: JobConfig, rules: RulesByHost |
             for url, seq, depth, host, host_bucket in zip(
                 pdf["url"], pdf["seq"], pdf["depth"], pdf["host"], pdf["host_bucket"]
             ):
-                if rules is not None and not allowed(url, user_agent, rules):
+                if not allowed(url, user_agent, rules):
                     rows.append({
                         "seq": seq, "url": url, "host": host, "host_bucket": host_bucket,
                         "depth": depth, "outcome": "disallowed", "status_code": None,

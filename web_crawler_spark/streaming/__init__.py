@@ -1,7 +1,5 @@
 from pyspark.sql import DataFrame
 
-from . import stream_rollup  # noqa: F401
-
 # a bounded stream over a test-size directory drains in seconds; past this,
 # the harness fails loudly instead of returning a partial table
 _DRAIN_TIMEOUT_S = 600

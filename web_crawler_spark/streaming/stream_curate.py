@@ -50,18 +50,17 @@ from ..analytics.text import (
     REP_TOP2_T,
     SAMPLE_HASH,
     SEG_SHARED_T,
-    STOPWORDS,
     _RESAMPLE_SCALE,
     _SEG_HASHES,
     _WHASH,
     _WINDOWS,
     _WORDS,
     _clf_logit_over,
+    _quality_signals,
+    _with_quality,
     source_rates,
 )
 from ..schemas import DOCUMENTS_SCHEMA
-
-_EN = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
 
 # per-row repetition signals over the pre-bound `ws` column: identical
 # integer counts to text_repetition's explode+agg, as in-row array lambdas
@@ -101,7 +100,7 @@ def _verdict(
 ) -> DataFrame:
     """Shared plan for both engines: per-row signals, three stream-static
     probes, one grouped agg back to doc grain, reason precedence."""
-    sig = (
+    sig = _with_quality(
         docs.withColumn("ws", F.expr(_WORDS))
         .withColumn("hs", F.expr(_WHASH))
         .withColumn("g2", F.expr(_G2))
@@ -110,13 +109,7 @@ def _verdict(
             "doc_id",
             "source",
             F.expr(f"array_min({_WINDOWS})").alias("fingerprint"),
-            F.expr("size(ws)").alias("n_words"),
-            (
-                F.expr(f"size(filter(ws, w -> array_contains(array({_EN}), w)))").cast("double")
-                / F.expr("size(ws)") * 2.0
-                + F.expr("regexp_count(text, '[.,;:!?]')").cast("double") / F.length("text")
-                - F.expr("regexp_count(text, '[A-Z]')").cast("double") / F.length("text") * 0.5
-            ).alias("quality"),
+            *_quality_signals("ws"),
             (F.expr(_TOP1_CNT).cast("double") / F.expr("size(ws)")).alias("top1_frac"),
             F.expr(
                 f"CASE WHEN size(g2) = 0 THEN 0.0 ELSE "

@@ -6,10 +6,15 @@ The reference has no streaming surface — its progress plane is a polled dict
 way a production crawl/metrics plane needs: two unbounded sources joined on
 key + event-time interval. Both sides carry watermarks, so Spark bounds the
 join state: a buffered click can be evicted once the purchase-side watermark
-passes ``click_ts + max_lag`` — without the watermarks the state grows
+passes ``click_ts + MAX_LAG`` — without the watermarks the state grows
 O(stream length) and an unbounded run eventually OOMs. That eviction bound is
 the whole design at 100 TB/day event volume; the join itself is the built-in
 stream-stream inner join (no custom state code).
+
+One definition serves both forms: ``_sides`` projects (and watermarks) the
+click and purchase sides and ``_joined`` applies the interval predicate, for
+the stream and for ``attribution_batch``, the plan of
+``relational.attribution_join``.
 
 Batch/stream parity is the test contract (test_streaming.py): over a static
 directory with a watermark wider than the data's time span, the streaming
@@ -23,8 +28,11 @@ from pyspark.sql import functions as F
 
 from .stream_rollup import EVENTS_SCHEMA
 
+WATERMARK = "35 days"  # wider than the fixtures' time span: nothing is late
+MAX_LAG = "1 hour"     # a purchase counts for a click at most this much later
 
-def _sides(clicks: DataFrame, purchases: DataFrame, watermark: str):
+
+def _sides(clicks: DataFrame, purchases: DataFrame):
     c = (
         clicks.filter(F.col("event_type") == "click")
         .select(
@@ -32,7 +40,7 @@ def _sides(clicks: DataFrame, purchases: DataFrame, watermark: str):
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", WATERMARK)
     )
     p = (
         purchases.filter(F.col("event_type") == "purchase")
@@ -42,16 +50,16 @@ def _sides(clicks: DataFrame, purchases: DataFrame, watermark: str):
             F.col("ts").alias("purchase_ts"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
     )
     return c, p
 
 
-def _joined(c: DataFrame, p: DataFrame, max_lag: str) -> DataFrame:
+def _joined(c: DataFrame, p: DataFrame) -> DataFrame:
     cond = (
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {max_lag}"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {MAX_LAG}"))
     )
     return (
         c.join(p, cond, "inner")
@@ -65,13 +73,8 @@ def _joined(c: DataFrame, p: DataFrame, max_lag: str) -> DataFrame:
     )
 
 
-def attribution_stream(
-    spark: SparkSession,
-    source_dir: str,
-    watermark: str = "35 days",
-    max_lag: str = "1 hour",
-) -> DataFrame:
-    """Purchases attributed to a same-user click within *max_lag* — a
+def attribution_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """Purchases attributed to a same-user click within MAX_LAG — a
     watermarked stream-stream inner join reading the same unbounded event
     source twice (clicks side and purchases side)."""
 
@@ -82,20 +85,13 @@ def attribution_stream(
             .parquet(source_dir)
         )
 
-    c, p = _sides(read(), read(), watermark)
-    return _joined(c, p, max_lag)
+    return _joined(*_sides(read(), read()))
 
 
-def attribution_batch(spark: SparkSession, source_dir: str, max_lag: str = "1 hour") -> DataFrame:
-    """The batch twin: identical predicate over a static read (parity oracle)."""
+def attribution_batch(spark: SparkSession, source_dir: str) -> DataFrame:
+    """The batch twin: the same sides and predicate over a static read
+    (parity oracle, and ``relational.attribution_join``). On a batch read
+    ``withWatermark`` applies Spark's ``EliminateEventTimeWatermark`` as it
+    builds the plan, so the sides carry no watermark node here."""
     ev = spark.read.schema(EVENTS_SCHEMA).parquet(source_dir)
-    c = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user_id"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return _joined(c, p, max_lag)
+    return _joined(*_sides(ev, ev))

@@ -2,7 +2,8 @@
 continuously-maintained state.
 
 Batch twin: ``analytics/graph.py::approx_distinct_kmv`` (k smallest DISTINCT
-48-bit md5 hashes; estimate = (k-1)*2^48 DIV kth_min). The streaming form shards
+48-bit md5 hashes, ``graph.kmv_hash``; estimate = (k-1)*KMV_SPACE DIV
+kth_min, KMV_SPACE = 2^48). The streaming form shards
 keys by hash bucket and keeps each shard's k minima as
 ``applyInPandasWithState`` state — the global k minima are always contained
 in the union of per-shard k minima (any of the k smallest overall is among
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..analytics.graph import KMV_K
+from ..analytics.graph import KMV_K, KMV_SPACE, kmv_hash
 
 N_SHARDS = 8
 
@@ -89,11 +90,9 @@ def kmv_stream(spark: SparkSession, source_dir: str) -> DataFrame:
 
 
 def hashed_keys(df: DataFrame, key_col: str) -> DataFrame:
-    """The exact hash+shard projection the batch query uses, as a reusable
-    stage: 12 hex chars of md5 → 48-bit int, shard = h mod N_SHARDS."""
-    h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 12), 16, 10).cast(
-        "bigint"
-    )
+    """The batch query's hash (``graph.kmv_hash``) plus the shard,
+    h mod N_SHARDS, as a reusable stage."""
+    h = kmv_hash(key_col)
     return df.select(h.alias("h"), F.pmod(h, F.lit(N_SHARDS)).cast("int").alias("shard"))
 
 
@@ -109,5 +108,5 @@ def merge_shard_minima(rows) -> dict:
         "k": KMV_K,
         "k_seen": len(allm),
         "kth_min": kth,
-        "est_distinct": (KMV_K - 1) * (1 << 48) // kth,
+        "est_distinct": (KMV_K - 1) * KMV_SPACE // kth,
     }

@@ -2,9 +2,11 @@
 
 - ``rollup_stream``: event-time tumbling-window counts/sums with a watermark
   for late rows — the streaming twin of ``analytics.relational.hourly_rollup``
-  (same plan shape, ``readStream`` instead of ``read``).
+  (the same ``relational.event_totals`` aggregates over ``window()``
+  instead of ``date_trunc``, ``readStream`` instead of ``read``).
 - ``session_stream``: per-user session windows — the streaming twin of
-  ``analytics.relational.session_rollup``.
+  ``analytics.relational.session_rollup``: its ``relational.user_sessions``
+  plan plus a watermark.
 
 Batch/stream parity is the test contract: running the streaming query over a
 static directory must produce exactly the batch rollup (test_streaming.py).
@@ -15,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..analytics.relational import event_totals, user_sessions
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -27,27 +31,26 @@ EVENTS_SCHEMA = T.StructType(
     ]
 )
 
+WINDOW = "1 hour"      # rollup_stream's tumbling window: hourly_rollup's hour
+WATERMARK = "2 hours"  # late-row tolerance of both streams
 
-def rollup_stream(
-    spark: SparkSession,
-    source_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Windowed event-time rollup over a file stream (late rows tolerated up
-    to *watermark*; state is bounded — mandatory for an unbounded run)."""
-    ev = (
+
+def _events(spark: SparkSession, source_dir: str) -> DataFrame:
+    return (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
+        .withWatermark("ts", WATERMARK)
     )
+
+
+def rollup_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """Windowed event-time rollup over a file stream (late rows tolerated up
+    to WATERMARK; state is bounded — mandatory for an unbounded run)."""
     return (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.sum(F.round(F.col("value") * F.lit(1e6), 0).cast("long")).cast("double") / F.lit(1e6)).alias("total_value"),
-        )
+        _events(spark, source_dir)
+        .groupBy(F.window("ts", WINDOW).alias("win"), "event_type")
+        .agg(*event_totals())
         .select(
             F.col("win.start").alias("window_start"),
             "event_type",
@@ -57,36 +60,17 @@ def rollup_stream(
     )
 
 
-def session_stream(
-    spark: SparkSession,
-    source_dir: str,
-    gap: str = "10 minutes",
-    watermark: str = "35 days",
-) -> DataFrame:
+def session_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """Per-user session windows over the event stream: consecutive events of
-    a user merge into one session while each arrives within *gap* of the
+    a user merge into one session while each arrives within the gap of the
     previous; the session closes (and emits, in append mode) once the
     watermark passes its end. Built-in ``session_window`` — Spark keeps one
     merged-window state entry per open session, so state is bounded by the
     number of concurrently-open sessions, not by stream length."""
-    ev = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(source_dir)
+    return user_sessions(_events(spark, source_dir)).select(
+        "user_id",
+        F.col("sw.start").alias("session_start"),
+        F.col("sw.end").alias("session_end"),
+        "n_events",
+        "total_value",
     )
-    return (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.sum(F.round(F.col("value") * F.lit(1e6), 0).cast("long")).cast("double") / F.lit(1e6)).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-

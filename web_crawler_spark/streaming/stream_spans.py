@@ -10,8 +10,9 @@ micro-batch, without a batch pass.
 
 Scale shape at 10^10 documents:
 
-- explode: stateless per-row gram hashing (same `_SPAN_GH` arithmetic as
-  the batch tier), no state, no shuffle before the probe
+- explode: stateless per-row gram hashing — the batch tier's own gram
+  explode (``dedup.gram_spans``; ``span_dedup`` drops its null-gram rows
+  of short documents), no state, no shuffle before the probe
 - probe: the gram index is STATIC and cell-keyed by the 8-byte gram hash —
   a stream-static left equi-join; Spark keeps no join state for the static
   side between micro-batches, so state is O(1) in stream length (at real
@@ -35,13 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..analytics.common import word_hash32
-from ..analytics.dedup import (
-    _SPAN_GH,
-    _WORDS,
-    SPAN_DUP_RATIO_T,
-    SPAN_G,
-)
+from ..analytics.dedup import SPAN_DUP_RATIO_T, SPAN_G, gram_spans
 from ..schemas import DOCUMENTS_SCHEMA
 
 _G1 = SPAN_G - 1
@@ -63,32 +58,11 @@ _MERGE_FOLD = (
 )
 
 
-def _gram_spans(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_words, pos, gh) — one row per G-gram start, identical
-    gram arithmetic to the batch tier; docs shorter than G keep one
-    null-gram row (explode_outer) so every arriving doc gets a verdict."""
-    grams = (
-        f"CASE WHEN size(h1) >= {SPAN_G} THEN "
-        f"transform(sequence(1, size(h1) - {_G1}), i -> struct(i as pos, {_SPAN_GH} as gh)) "
-        "ELSE array() END"
-    )
-    return (
-        docs.select(
-            "doc_id",
-            F.expr(f"size({_WORDS})").alias("n_words"),
-            F.expr(word_hash32(1)).alias("h1"),
-            F.expr(word_hash32(9)).alias("h2"),
-        )
-        .select("doc_id", "n_words", F.explode_outer(F.expr(grams)).alias("g"))
-        .select("doc_id", "n_words", F.col("g.pos").alias("pos"), F.col("g.gh").alias("gh"))
-    )
-
-
 def build_index(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     """Static gram index from the accepted corpus: gram hash -> number of
     distinct holding documents + one holder id (enough to apply the
     cross-document rule against arriving self-matches)."""
-    return _gram_spans(corpus).groupBy("gh").agg(
+    return gram_spans(corpus).groupBy("gh").agg(
         F.countDistinct("doc_id").alias("nd"), F.min("doc_id").alias("doc0")
     )
 
@@ -96,7 +70,7 @@ def build_index(spark: SparkSession, corpus: DataFrame) -> DataFrame:
 def _verdict(docs: DataFrame, index: DataFrame) -> DataFrame:
     """Shared plan for both engines: explode grams, left-probe the static
     index, fold the sorted duplicated starts back to one verdict per doc."""
-    g = _gram_spans(docs)
+    g = gram_spans(docs)
     dup = F.when(F.col("nd").isNull() | F.col("pos").isNull(), F.lit(False)).otherwise(
         (F.col("nd") >= 2) | (F.col("doc0") != F.col("doc_id"))
     )

@@ -33,8 +33,8 @@ grain). On top of that: a synthetic self-candidate row per document
 (union before the agg, so unmatched docs flow through the SAME single
 aggregation instead of needing a streaming outer join), one stream-static
 left join against the corpus label snapshot (broadcast only while the
-planner estimates it small), and the same md5-mod-100 bucket expression
-as the batch query — zero additional state.
+planner estimates it small), and the batch query's own split column
+(``dedup.split_of_group``) — zero additional state.
 
 Parity contract (test_streaming.py): complete-mode stream == batch twin
 row-for-row; matched arrivals inherit their corpus group's split exactly
@@ -55,19 +55,14 @@ from pyspark.sql import functions as F
 
 from ..analytics.dedup import (
     JACCARD_T,
-    SPLIT_TRAIN_PCT,
-    SPLIT_VALID_PCT,
     _arrival_matches,
     _best_match,
     _lsh_pairs,
     _star_labels,
+    split_of_group,
 )
 from ..schemas import DOCUMENTS_SCHEMA
 from . import stream_neardup
-
-_BUCKET = (
-    "cast(conv(substring(md5(cast(group_id as string)), 1, 15), 16, 10) as bigint) % 100"
-)
 
 
 def build_split_state(spark: SparkSession, corpus: DataFrame):
@@ -97,9 +92,9 @@ def _assignment(
     """Shared plan for both engines: ``stream_neardup``'s scoring
     (``dedup._arrival_matches``) UNION a synthetic self-candidate per doc
     (jaccard 0, dup_of = doc_id) -> one best-match agg -> label lookup ->
-    bucket. The self row only wins when no real match ≥ JACCARD_T exists,
-    making 'unmatched' flow through the same aggregation instead of a
-    streaming-hostile outer join."""
+    ``split_of_group``. The self row only wins when no real match ≥
+    JACCARD_T exists, making 'unmatched' flow through the same aggregation
+    instead of a streaming-hostile outer join."""
     self_rows = docs.select(
         "doc_id", F.col("doc_id").alias("dup_of"), F.lit(0.0).alias("jaccard")
     )
@@ -117,16 +112,7 @@ def _assignment(
         .otherwise(F.col("doc_id"))
         .alias("group_id"),
     )
-    bucket = F.expr(_BUCKET)
-    return assigned.select(
-        "doc_id",
-        "group_id",
-        "matched",
-        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
-        .when(bucket < SPLIT_VALID_PCT, F.lit("valid"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
-    )
+    return assigned.select("doc_id", "group_id", "matched", split_of_group())
 
 
 def split_stream(spark: SparkSession, src_dir: str, state) -> DataFrame:
