@@ -121,6 +121,13 @@ AUDITS = {
     # one decode mapInPandas then a map-only integer head — no join, no
     # window, no cartesian (the only Exchange is the generator's repartition)
     "image_classify_aesthetic": (["MapInPandas"], ["Join", "Window", "CartesianProduct"]),
+    # one decode stage per payload, then a groupBy rollup or a map-only
+    # verdict projection: no join, no window, no cartesian
+    "multimodal_image": (["MapInPandas"], ["Join", "Window", "CartesianProduct"]),
+    "multimodal_audio": (["MapInPandas"], ["Join", "Window", "CartesianProduct"]),
+    "multimodal_video": (["MapInPandas"], ["Join", "Window", "CartesianProduct"]),
+    "audio_curate": (["MapInPandas"], ["Join", "Window", "CartesianProduct"]),
+    "video_curate": (["MapInPandas"], ["Join", "Window", "CartesianProduct"]),
     # one decode mapInPandas emitting extracted text, then JVM string/token
     # expressions — map-only end to end, no join/window/cartesian
     "image_ocr_extract": (["MapInPandas"], ["Join", "Window", "CartesianProduct"]),

@@ -46,6 +46,9 @@ PARITY_SUBSET = [
     "embed_neardup_lsh",
     "embed_dedup_clusters",
     "image_dedup_clusters",
+    "multimodal_image",
+    "multimodal_audio",
+    "multimodal_video",
     "host_pagerank",
     "doc_pack",
     "tfidf_topterms",

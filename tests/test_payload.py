@@ -44,6 +44,136 @@ def test_payload_detects_corruption(spark):
 
 
 # ---------------------------------------------------------------------------
+# the payload tier's decode stages, run on pandas batches with no Spark
+# session: a valid row gives its oracle's expected values, a corrupt one the
+# null record (key, any field set before the codec raised, False for every
+# non-null flag, None for the rest)
+# ---------------------------------------------------------------------------
+
+
+class _Built(Exception):
+    """Raised by `_Frame.mapInPandas` to hand back the stage a builder made."""
+
+
+class _Frame:
+    def mapInPandas(self, fn, schema):
+        raise _Built(fn, schema)
+
+
+def _stage(monkeypatch, build):
+    """(mapInPandas function, schema) that *build(spark, sf_dir)* applies to
+    its payload generator, captured before any Spark call."""
+    import pytest
+
+    from web_crawler_spark.analytics import multimodal
+
+    monkeypatch.setattr(multimodal, "_payloads", lambda *a: _Frame())
+    with pytest.raises(_Built) as e:
+        build(None, None)
+    return e.value.args
+
+
+def _run(fn, rows):
+    import pandas as pd
+
+    (out,) = list(fn(iter([pd.DataFrame(rows)])))
+    return out.to_dict("records")
+
+
+def _check(got: dict, want: dict):
+    import pandas as pd
+
+    for k, v in want.items():
+        if v is None:
+            assert pd.isna(got[k]), (k, got[k])
+        else:
+            assert got[k] == v, (k, got[k], v)
+
+
+def _valid_and_corrupt(row: dict) -> list[dict]:
+    return [row, {**row, "bytes": b"corrupted!"}]
+
+
+def _nulls(schema, **kept) -> dict:
+    from pyspark.sql import types as T
+
+    rec = {f.name: False if f.dataType == T.BooleanType() and not f.nullable else None for f in schema}
+    return {**rec, **kept}
+
+
+def test_image_decode_stage_null_record():
+    from web_crawler_spark.analytics import multimodal as M
+    from web_crawler_spark.functions import udfs
+
+    (row,) = M._image_rows(1)
+    row = {**row, "crawled_caption": row["caption"]}
+    ok, bad = _run(udfs.decode_validate, _valid_and_corrupt(row))
+    cols = ("image_id", "fmt", "w", "h", "decode_ok", "pixels_ok", "phash_ok", "caption_ok",
+            "psnr_db", "brightness", "thumb_var")
+    _check(ok, dict(zip(cols, M._expected_image_metrics()[1])))
+    _check(bad, _nulls(udfs.VALIDATION_SCHEMA, image_id="img-1", caption_ok=True))
+
+
+def test_audio_video_decode_stages_null_record(monkeypatch):
+    from web_crawler_spark.analytics import multimodal as M
+
+    fn, schema = _stage(monkeypatch, M.multimodal_audio)
+    ok, bad = _run(fn, _valid_and_corrupt(M._audio_rows(1)[0]))
+    _check(ok, dict(zip(schema.fieldNames(), M._expected_audio_metrics()[1])))
+    _check(bad, _nulls(schema, audio_id="aud-1"))
+
+    fn, schema = _stage(monkeypatch, M.multimodal_video)
+    ok, bad = _run(fn, _valid_and_corrupt(M._video_rows(1)[0]))
+    _check(ok, dict(zip(schema.fieldNames(), M._expected_video_metrics()[1])))
+    _check(bad, _nulls(schema, video_id="vid-1"))
+
+
+def test_image_transform_stages_null_record(monkeypatch):
+    import zlib
+
+    from web_crawler_spark.analytics import multimodal as M
+
+    fn, schema = _stage(monkeypatch, M._thumbnails)
+    ok, bad = _run(fn, _valid_and_corrupt(M._image_rows(1)[0]))
+    iid, w, h, tw, th, n, crc = M._expected_thumbs()[1]
+    _check(ok, {"image_id": iid, "w": w, "h": h, "tw": tw, "th": th})
+    assert (len(ok["thumb"]), zlib.crc32(ok["thumb"])) == (n, crc)
+    _check(bad, _nulls(schema, image_id="img-1"))
+
+    fn, schema = _stage(monkeypatch, M.image_ocr_extract)
+    ok, bad = _run(fn, _valid_and_corrupt(M._scan_rows(1)[0]))
+    iid, extracted = M._expected_scans()[1]
+    _check(ok, {"image_id": iid, "caption": "alt text for scan-1", "extracted": extracted})
+    _check(bad, _nulls(schema, image_id="scan-1", caption="alt text for scan-1"))
+
+    fn, schema = _stage(monkeypatch, M.image_pii_redact)
+    ok, bad = _run(fn, _valid_and_corrupt(M._photo_rows(1)[0]))
+    iid, n_regions, area_px, n, crc = M._expected_redactions()[1]
+    _check(ok, {"image_id": iid, "n_regions": n_regions, "area_px": area_px})
+    assert (len(ok["redacted"]), zlib.crc32(ok["redacted"])) == (n, crc)
+    _check(bad, _nulls(schema, image_id="pho-1"))
+
+
+def test_shard_reader_raises_on_corrupt_blob():
+    import pandas as pd
+    import pytest
+
+    from web_crawler_spark.analytics import multimodal as M
+
+    with pytest.raises(_Built) as e:
+        M.read_shards(_Frame())
+    fn, _schema = e.value.args
+    (r,) = M._image_rows(1)
+    blob = M.shard_blob([(r["image_id"], r["bytes"], r["caption"])])
+    (out,) = list(fn(iter([pd.DataFrame({"shard_id": [3], "blob": [blob]})])))
+    assert out.to_dict("records") == [
+        {"shard_id": 3, "image_id": "img-1", "bytes": r["bytes"], "caption": r["caption"]}
+    ]
+    with pytest.raises(ValueError):
+        list(fn(iter([pd.DataFrame({"shard_id": [3], "blob": [b"XXXX" + blob[4:]]})])))
+
+
+# ---------------------------------------------------------------------------
 # audio codec (WCSA): pure-python round-trip + invariant properties
 # ---------------------------------------------------------------------------
 

@@ -12,6 +12,15 @@ The images/audio here are synthesized deterministically from
 `documents.doc_id` (one payload per doc, seed-keyed) — no external data, same
 shape as the input_hint images table.
 
+Row-stage contract: every per-row Python stage here (payload generators,
+decode/extract stages, resize/OCR/redact transforms, the shard reader) is
+one module-level row function run through `udfs.row_stage`, which owns the
+only batch loop. Decode stages go through `udfs.decode_stage`: a payload
+the codec rejects (`udfs.UNDECODABLE`) yields the null record — the key,
+any field the row function set before the codec raised, False for every
+non-null boolean, None for the rest. Generators have no error path; the
+shard reader raises on a corrupt container.
+
 Oracle pairing: the codec is a pure deterministic function of the id, so the
 expected per-payload metrics are precomputed DRIVER-SIDE with the same
 pure-Python codec (no Spark, no Arrow, no executors — an independent
@@ -29,7 +38,6 @@ import hashlib
 import math
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -66,17 +74,31 @@ def _payloads(
 ) -> DataFrame:
     """The one synthetic-payload generator: the first *n* documents' doc_ids,
     spread over `_gen_partitions(spark, n)` tasks, each id expanded by the
-    per-id row function *rows_of(doc_id) -> list[dict]* in a mapInPandas
-    stage. The driver-side ground-truth builders (`_expected_*`) iterate the
-    same row functions over ids 0..n-1, pure-Python in-process."""
-    cols = schema.fieldNames()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([r for d in pdf["doc_id"] for r in rows_of(int(d))], columns=cols)
-
+    module-level row function *rows_of(doc_id) -> list[dict]* through
+    `udfs.row_stage`, the one batch loop of every row stage here. A
+    generator row has no error path: the decode stages downstream
+    (`udfs.decode_stage`) turn a payload the codec rejects into the null
+    record (module docstring). The driver-side ground-truth builders
+    (`_expected_*`) iterate the same row functions over ids 0..n-1,
+    pure-Python in-process."""
+    gen = udfs.row_stage(lambda r: rows_of(int(r.doc_id)), schema)
     ids = table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(n)
     return ids.repartition(_gen_partitions(spark, n), "doc_id").mapInPandas(gen, schema)
+
+
+# the payload-id rules in Spark: the doc_id of `image_id` (`img-<doc_id>`,
+# maybe suffixed), the base image id of a doc_id column, and the payload id
+# a `caption` (`... img-<id>`) refers to
+def _image_doc():
+    return F.regexp_extract("image_id", r"^img-(\d+)", 1).cast("bigint")
+
+
+def _image_id(doc_id):
+    return F.concat(F.lit("img-"), doc_id.cast("string"))
+
+
+def _caption_ref():
+    return F.regexp_extract("caption", r"img-(\d+)$", 1).cast("bigint")
 
 
 def _image_rows(doc_id: int) -> list[dict]:
@@ -90,9 +112,11 @@ def _images(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _payloads(spark, sf_dir, N_IMAGES, _image_rows, IMAGES_SCHEMA)
 
 
-# (the decode/validate/feature extractor lives in functions/udfs.py —
-# one mapInPandas pass computes invariant flags AND decoded features from a
-# single pixel buffer; see multimodal_image below)
+def _image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one image decode stage, of `multimodal_image` and
+    `image_classify_aesthetic` (each image self-captioned)."""
+    imgs = _images(spark, sf_dir).withColumn("crawled_caption", F.col("caption"))
+    return imgs.mapInPandas(udfs.decode_validate, udfs.VALIDATION_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -104,11 +128,6 @@ N_AUDIO = 200  # clips synthesized per run (first N doc_ids)
 
 def _audio_rows(doc_id: int) -> list[dict]:
     return [audiocodec.audio_row(f"aud-{doc_id}", seed=42)]
-
-
-def _audios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic audio table keyed on doc_id (WCSA clips, int16 PCM)."""
-    return _payloads(spark, sf_dir, N_AUDIO, _audio_rows, AUDIO_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -128,39 +147,35 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def extract_audio(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas: decode WCSA bytes → invariant flags + scalar features."""
-    for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            rec = dict(audio_id=r.audio_id, fmt=None, sr=None, n_samples=None,
-                       decode_ok=False, samples_ok=False, duration_s=None,
-                       rms=None, peak=None, n_clipped=None, zero_crossings=None)
-            try:
-                samples, sr, fmt = audiocodec.decode(bytes(r.bytes))
-                ref = audiocodec.reference_samples(r.audio_id, len(samples))
-                if fmt in audiocodec.LOSSY_FMTS:
-                    ok = audiocodec.snr_db(ref, samples) >= audiocodec.SNR_OK_DB
-                else:
-                    ok = bool(np.array_equal(samples, ref))
-                rec.update(
-                    fmt=fmt, sr=sr, n_samples=len(samples),
-                    decode_ok=bool(sr == r.sr and len(samples) == r.n_samples and fmt == r.fmt),
-                    samples_ok=bool(ok),
-                    **audiocodec.features(samples, sr),
-                )
-            except (ValueError, NotImplementedError):
-                pass  # corrupt/unsupported -> nulls, counted downstream
-            rows.append(rec)
-        yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields])
+def _extract_audio(r, rec: dict) -> None:
+    """Decode row: WCSA bytes → invariant flags + scalar features."""
+    samples, sr, fmt = audiocodec.decode(bytes(r.bytes))
+    ref = audiocodec.reference_samples(r.audio_id, len(samples))
+    if fmt in audiocodec.LOSSY_FMTS:
+        ok = audiocodec.snr_db(ref, samples) >= audiocodec.SNR_OK_DB
+    else:
+        ok = bool(np.array_equal(samples, ref))
+    rec.update(
+        fmt=fmt, sr=sr, n_samples=len(samples),
+        decode_ok=bool(sr == r.sr and len(samples) == r.n_samples and fmt == r.fmt),
+        samples_ok=bool(ok),
+        **audiocodec.features(samples, sr),
+    )
+
+
+def _audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one audio decode stage, of `multimodal_audio` and `audio_curate`,
+    over deterministic WCSA clips (int16 PCM) keyed on doc_id."""
+    clips = _payloads(spark, sf_dir, N_AUDIO, _audio_rows, AUDIO_SCHEMA)
+    stage = udfs.decode_stage(_extract_audio, AUDIO_FEATURES_SCHEMA, "audio_id")
+    return clips.mapInPandas(stage, AUDIO_FEATURES_SCHEMA)
 
 
 def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-format audio validation/feature rollup. All aggregates are
     order-independent (counts, int sums, min/max) — no double SUMs."""
-    feats = _audios(spark, sf_dir).mapInPandas(extract_audio, AUDIO_FEATURES_SCHEMA)
     return (
-        feats.groupBy("fmt")
+        _audio_features(spark, sf_dir).groupBy("fmt")
         .agg(
             F.count("*").alias("n_clips"),
             F.sum(F.when(F.col("decode_ok"), 1).otherwise(0)).alias("decode_pass"),
@@ -187,11 +202,6 @@ def _video_rows(doc_id: int) -> list[dict]:
     return [videocodec.video_row(f"vid-{doc_id}", seed=42)]
 
 
-def _videos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic video table keyed on doc_id (WCSV multi-frame clips)."""
-    return _payloads(spark, sf_dir, N_VIDEO, _video_rows, VIDEO_SCHEMA)
-
-
 VIDEO_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("video_id", T.StringType(), False),
@@ -208,43 +218,39 @@ VIDEO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def extract_video(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas: frame-SAMPLE each clip (decode only N_SAMPLE evenly-spaced
+def _extract_video(r, rec: dict) -> None:
+    """Decode row: frame-SAMPLE the clip (decode only N_SAMPLE evenly-spaced
     frames via the container's length-prefix index — never the full clip),
     then per-clip invariant flags + sampled-frame features."""
-    for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            rec = dict(video_id=r.video_id, fmt=None, fps=None, n_frames=None,
-                       n_sampled=None, decode_ok=False, frames_ok=False,
-                       duration_s=None, brightness=None, motion=None)
-            try:
-                data = bytes(r.bytes)
-                f = videocodec.features(r.video_id, data)
-                rec.update(
-                    fmt=f["fmt"], fps=f["fps"], n_frames=f["n_frames"],
-                    n_sampled=f["n_sampled"],
-                    decode_ok=bool(
-                        f["fmt"] == r.fmt and f["fps"] == r.fps
-                        and f["n_frames"] == r.n_frames
-                        and f["w"] == r.w and f["h"] == r.h
-                    ),
-                    frames_ok=videocodec.frames_ok(r.video_id, data),
-                    duration_s=f["duration_s"], brightness=f["brightness"],
-                    motion=f["motion"],
-                )
-            except (ValueError, NotImplementedError):
-                pass  # corrupt/unsupported -> nulls, counted downstream
-            rows.append(rec)
-        yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_FEATURES_SCHEMA.fields])
+    data = bytes(r.bytes)
+    f = videocodec.features(r.video_id, data)
+    rec.update(
+        fmt=f["fmt"], fps=f["fps"], n_frames=f["n_frames"],
+        n_sampled=f["n_sampled"],
+        decode_ok=bool(
+            f["fmt"] == r.fmt and f["fps"] == r.fps
+            and f["n_frames"] == r.n_frames
+            and f["w"] == r.w and f["h"] == r.h
+        ),
+        frames_ok=videocodec.frames_ok(r.video_id, data),
+        duration_s=f["duration_s"], brightness=f["brightness"],
+        motion=f["motion"],
+    )
+
+
+def _video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one video decode stage, of `multimodal_video` and `video_curate`,
+    over deterministic WCSV multi-frame clips keyed on doc_id."""
+    clips = _payloads(spark, sf_dir, N_VIDEO, _video_rows, VIDEO_SCHEMA)
+    stage = udfs.decode_stage(_extract_video, VIDEO_FEATURES_SCHEMA, "video_id")
+    return clips.mapInPandas(stage, VIDEO_FEATURES_SCHEMA)
 
 
 def multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-format video frame-sampling rollup. Aggregates are
     order-independent (counts, int sums, min/max) — no double SUMs."""
-    feats = _videos(spark, sf_dir).mapInPandas(extract_video, VIDEO_FEATURES_SCHEMA)
     return (
-        feats.groupBy("fmt")
+        _video_features(spark, sf_dir).groupBy("fmt")
         .agg(
             F.count("*").alias("n_videos"),
             F.sum(F.when(F.col("decode_ok"), 1).otherwise(0)).alias("decode_pass"),
@@ -283,7 +289,7 @@ def audio_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only projection — zero shuffles, so at 10^10 clips the plan stays
     embarrassingly parallel. Real loudness/quality models swap into the same
     plan shape (score column in, thresholds unchanged)."""
-    feats = _audios(spark, sf_dir).mapInPandas(extract_audio, AUDIO_FEATURES_SCHEMA)
+    feats = _audio_features(spark, sf_dir)
     clip_frac = F.col("n_clipped").cast("double") / F.col("n_samples").cast("double")
     reason = (
         F.when(~F.col("decode_ok"), F.lit("decode_failed"))
@@ -305,7 +311,7 @@ def video_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never a full decode), then duration, frame-rate, and motion gates with
     drop-reason precedence. Map-only after the sampling pass — zero
     shuffles."""
-    feats = _videos(spark, sf_dir).mapInPandas(extract_video, VIDEO_FEATURES_SCHEMA)
+    feats = _video_features(spark, sf_dir)
     reason = (
         F.when(~F.col("decode_ok"), F.lit("decode_failed"))
         .when(~F.col("frames_ok"), F.lit("frames_mismatch"))
@@ -666,7 +672,7 @@ def image_caption_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-merge on the co-partitionable embedding key."""
     from .similarity import _cos, _with_norm
 
-    doc_id = F.substring("image_id", 5, 20).cast("bigint")
+    doc_id = _image_doc()
     miscap = F.concat(
         F.lit("caption for img-"),
         ((doc_id + MISCAP_SHIFT) % N_IMAGES).cast("string"),
@@ -678,7 +684,7 @@ def image_caption_align(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(doc_id % N_MISCAP == 0, miscap).otherwise(F.col("caption")).alias("caption"),
             doc_id.alias("doc_id"),
         )
-        .withColumn("ref_id", F.regexp_extract("caption", r"img-(\d+)$", 1).cast("bigint"))
+        .withColumn("ref_id", _caption_ref())
     )
     e = table(spark, sf_dir, "embeddings")
     v = _with_norm(e, "vid", "vemb")
@@ -745,7 +751,7 @@ def caption_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _top_k(ann.filter(F.col("neighbor_id") != claimed_ref), HN_K, "hn_rank")
         .select(
-            F.concat(F.lit("img-"), q.cast("string")).alias("image_id"),
+            _image_id(q).alias("image_id"),
             F.col("neighbor_id").alias("neg_ref"),
             "hn_rank",
             "sim",
@@ -792,23 +798,15 @@ def _thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a mapInPandas over the bucketed images table with output written
     partition-aligned. Undecodable inputs pass through with null thumb
     (production semantics: flagged, not fatal)."""
+    stage = udfs.decode_stage(_resize, THUMB_SCHEMA, "image_id")
+    return _images(spark, sf_dir).mapInPandas(stage, THUMB_SCHEMA)
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    px, w, h, _fmt = imagecodec.decode(bytes(data))
-                except ValueError:
-                    rows.append((iid, None, None, None, None, None))
-                    continue
-                tp = imagecodec.resize_block_mean(px)
-                rows.append(
-                    (iid, w, h, tp.shape[1], tp.shape[0], imagecodec.encode(tp, "png"))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in THUMB_SCHEMA.fields])
 
-    return _images(spark, sf_dir).mapInPandas(resize, THUMB_SCHEMA)
+def _resize(r, rec: dict) -> None:
+    """Transform row: decode → block-mean area resize → PNG re-encode."""
+    px, w, h, _fmt = imagecodec.decode(bytes(r.bytes))
+    tp = imagecodec.resize_block_mean(px)
+    rec.update(w=w, h=h, tw=tp.shape[1], th=tp.shape[0], thumb=imagecodec.encode(tp, "png"))
 
 
 def image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,7 +837,7 @@ def image_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     is_bench = (~F.col("image_id").endswith("-v")) & (
-        F.regexp_extract("image_id", r"img-(\d+)", 1).cast("long") % IMG_DECON_MOD == 0
+        _image_doc() % IMG_DECON_MOD == 0
     )
     bench = sig.filter(is_bench).select(F.col("image_id").alias("index_id"), "phash")
     return (
@@ -1202,18 +1200,12 @@ def multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-format image rollup: decode/validate invariant counts
     (decode/pixels/phash/caption pass, min PSNR per input_hint) AND the
     decoded-feature summary (size ranges, min brightness, max 8×8-resize
-    variance) from ONE generator pass, ONE decode mapInPandas, ONE groupBy.
-
-    Formerly two sub-plans (validate + features) joined on fmt — that shape
-    generated and decoded every image twice. At corpus scale the decode
-    stage dominates this pipeline, so validation and feature extraction now
-    share a single pixel buffer inside udfs.decode_validate; the join is
-    gone entirely."""
-    imgs = _images(spark, sf_dir).withColumn("crawled_caption", F.col("caption"))
-    checked = imgs.mapInPandas(udfs.decode_validate, udfs.VALIDATION_SCHEMA)
+    variance) from ONE generator pass, ONE decode mapInPandas, ONE groupBy:
+    at corpus scale the decode dominates, so validation and features share
+    one pixel buffer (`_image_features`) and there is no join."""
     agg_ok = lambda c: F.sum(F.when(F.col(c), 1).otherwise(0)).alias(c.replace("_ok", "_pass"))
     return (
-        checked.groupBy("fmt")
+        _image_features(spark, sf_dir).groupBy("fmt")
         .agg(
             F.count("*").alias("n_images"),
             agg_ok("decode_ok"),
@@ -1286,7 +1278,7 @@ def corpus_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sel = (
         table(spark, sf_dir, "documents")
         .select("doc_id").orderBy("doc_id").limit(N_IMAGES)
-        .withColumn("image_id", F.concat(F.lit("img-"), F.col("doc_id").cast("string")))
+        .withColumn("image_id", _image_id(F.col("doc_id")))
     )
     status = sel.join(labels, sel.image_id == labels.doc, "left").select(
         "doc_id",
@@ -1296,7 +1288,7 @@ def corpus_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("image_status"),
     )
     align = image_caption_align(spark, sf_dir).select(
-        F.substring("image_id", 5, 20).cast("bigint").alias("doc_id"),
+        _image_doc().alias("doc_id"),
         F.col("keep").alias("cap_keep"),
     )
     return (
@@ -1451,7 +1443,7 @@ def image_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import _pack_bins
 
     imgs = _images(spark, sf_dir)
-    doc = F.regexp_extract("image_id", r"^img-(\d+)", 1).cast("bigint")
+    doc = _image_doc()
     # checkpoint the TINY (doc_id, n_bytes) projection before the cumsum:
     # repartitionByRange's sampling pass and every downstream reuse would
     # otherwise re-run the payload generator (at real scale: re-scan the
@@ -1462,7 +1454,7 @@ def image_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     bins = _pack_bins(sized, cap=SHARD_BYTES)
     return bins.select(
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias("image_id"),
+        _image_id(F.col("doc_id")).alias("image_id"),
         F.col("n_tokens").alias("n_bytes"),
         F.col("cum_tokens").alias("cum_bytes"),
         F.col("bin_id").alias("shard_id"),
@@ -1704,7 +1696,7 @@ def _shard_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget-bounded: a group is never bigger than SHARD_BYTES plus one
     record, so the Arrow batch per task stays bounded at any corpus size)."""
     imgs = _images(spark, sf_dir).select(
-        F.substring("image_id", 5, 20).cast("bigint").alias("doc_id"),
+        _image_doc().alias("doc_id"),
         "image_id",
         "bytes",
         "caption",
@@ -1727,16 +1719,12 @@ def read_shards(blobs: DataFrame) -> DataFrame:
     """Source-format reader: explode shard containers back into (image,
     caption) rows — mapInPandas, so a real 100 MB-1 GB shard unpacks inside
     its own task with no driver involvement; corrupt shards raise."""
+    return blobs.mapInPandas(udfs.row_stage(_unpack, SHARD_READ_SCHEMA), SHARD_READ_SCHEMA)
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, blob in zip(pdf["shard_id"], pdf["blob"]):
-                for iid, data, cap in read_shard(bytes(blob)):
-                    rows.append((int(sid), iid, data, cap))
-            yield pd.DataFrame(rows, columns=[f.name for f in SHARD_READ_SCHEMA.fields])
 
-    return blobs.mapInPandas(unpack, SHARD_READ_SCHEMA)
+def _unpack(r) -> list[tuple]:
+    """Reader row: one (shard_id, image_id, bytes, caption) per record."""
+    return [(int(r.shard_id), iid, data, cap) for iid, data, cap in read_shard(bytes(r.blob))]
 
 
 def image_shard_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1813,7 +1801,7 @@ def vlm_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import _pack_bins
 
     imgs = _images(spark, sf_dir)
-    doc = F.regexp_extract("image_id", r"^img-(\d+)", 1).cast("bigint")
+    doc = _image_doc()
     p = VLM_PATCH
     # tiny metadata projection checkpointed before the cumsum — the range
     # sampling pass must not re-run the payload generator (see
@@ -1829,7 +1817,7 @@ def vlm_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     bins = _pack_bins(sized, cap=VLM_CTX)
     return bins.select(
-        F.concat(F.lit("img-"), F.col("doc_id").cast("string")).alias("image_id"),
+        _image_id(F.col("doc_id")).alias("image_id"),
         "n_tokens",
         "cum_tokens",
         F.col("bin_id").alias("window_id"),
@@ -1949,8 +1937,7 @@ def image_classify_aesthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUES literals and applies the identical floor-quantized head, so
     parity additionally proves the decoded features crossed Arrow
     bit-for-bit per image (the rollup queries only pin min/max)."""
-    imgs = _images(spark, sf_dir).withColumn("crawled_caption", F.col("caption"))
-    checked = imgs.mapInPandas(udfs.decode_validate, udfs.VALIDATION_SCHEMA)
+    checked = _image_features(spark, sf_dir)
     ib = F.floor(F.col("brightness") * 16).cast("long")
     iv = F.floor(F.col("thumb_var") * 16).cast("long")
     return checked.select(
@@ -1996,16 +1983,17 @@ def _scan_text(doc_id: int) -> str | None:
 
 
 def _scan_rows(doc_id: int) -> list[dict]:
+    """A 'scanned page': base pixels + planted text band; its caption is the
+    EXPECTED alt text, so the verdict is a plain column comparison."""
     row = imagecodec.scan_row(f"scan-{doc_id}", _scan_text(doc_id), seed=42)
     row["caption"] = f"alt text for scan-{doc_id}"
     return [row]
 
 
-def _scans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 'scanned page' images: base pixels + planted text band
-    (imagecodec.scan_row); caption column carries the EXPECTED alt text for
-    every row, so the extraction verdict is a plain column comparison."""
-    return _payloads(spark, sf_dir, N_SCANS, _scan_rows, IMAGES_SCHEMA)
+def _ocr(r, rec: dict) -> None:
+    """Extraction row: the caption, then the text read off the pixels."""
+    rec["caption"] = r.caption
+    rec["extracted"] = imagecodec.ocr_extract(imagecodec.decode(bytes(r.bytes))[0])
 
 
 def image_ocr_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2015,20 +2003,9 @@ def image_ocr_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     token/match columns are JVM-side expressions so the text-tier handoff
     stays in whole-stage codegen. Undecodable inputs yield null→'' (flagged,
     not fatal — production semantics)."""
-
-    def ocr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for iid, data, cap in zip(pdf["image_id"], pdf["bytes"], pdf["caption"]):
-                try:
-                    px, _, _, _ = imagecodec.decode(bytes(data))
-                    txt = imagecodec.ocr_extract(px)
-                except ValueError:
-                    txt = None
-                rows.append((iid, cap, txt))
-            yield pd.DataFrame(rows, columns=[f.name for f in OCR_RAW_SCHEMA.fields])
-
-    out = _scans(spark, sf_dir).mapInPandas(ocr, OCR_RAW_SCHEMA)
+    stage = udfs.decode_stage(_ocr, OCR_RAW_SCHEMA, "image_id")
+    scans = _payloads(spark, sf_dir, N_SCANS, _scan_rows, IMAGES_SCHEMA)
+    out = scans.mapInPandas(stage, OCR_RAW_SCHEMA)
     extracted = F.coalesce(F.col("extracted"), F.lit(""))
     has_text = extracted != F.lit("")
     return out.select(
@@ -2097,14 +2074,20 @@ def _pii_planted(doc_id: int) -> int:
 
 
 def _photo_rows(doc_id: int) -> list[dict]:
+    """A deterministic 'photo' with planted PII regions."""
     row = imagecodec.photo_row(f"pho-{doc_id}", _pii_planted(doc_id), seed=42)
     row["caption"] = f"photo {doc_id}"
     return [row]
 
 
-def _photos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 'photo' images with planted PII regions."""
-    return _payloads(spark, sf_dir, N_PHOTOS, _photo_rows, IMAGES_SCHEMA)
+def _redact(r, rec: dict) -> None:
+    """Redaction row: detect the PII regions, black-box them, re-encode."""
+    px, _, _, _ = imagecodec.decode(bytes(r.bytes))
+    mask, n = imagecodec.detect_pii(px)
+    rec.update(
+        n_regions=n, area_px=int(mask.sum()),
+        redacted=imagecodec.encode(imagecodec.redact(px, mask), "png"),
+    )
 
 
 def image_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2112,25 +2095,9 @@ def image_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact redacted binary pinned via length + crc32. One decode pass, one
     binary-emitting mapInPandas, JVM-side crc — identical plan shape to
     image_thumbnail, so the audit asserts map-only with no join/window."""
-
-    def red(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    px, _, _, _ = imagecodec.decode(bytes(data))
-                except ValueError:
-                    rows.append((iid, None, None, None))
-                    continue
-                mask, n = imagecodec.detect_pii(px)
-                rows.append(
-                    (iid, n, int(mask.sum()), imagecodec.encode(imagecodec.redact(px, mask), "png"))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in PII_RAW_SCHEMA.fields])
-
     return (
-        _photos(spark, sf_dir)
-        .mapInPandas(red, PII_RAW_SCHEMA)
+        _payloads(spark, sf_dir, N_PHOTOS, _photo_rows, IMAGES_SCHEMA)
+        .mapInPandas(udfs.decode_stage(_redact, PII_RAW_SCHEMA, "image_id"), PII_RAW_SCHEMA)
         .select(
             "image_id",
             "n_regions",

@@ -9,10 +9,12 @@ all content is keyed on (seed, url).
 
 from __future__ import annotations
 
-import pandas as pd
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .core import imagecodec, webgen
+from .functions.udfs import row_stage
 from .schemas import IMAGES_SCHEMA
 
 
@@ -30,16 +32,14 @@ def urls_df(spark: SparkSession, cfg: webgen.WebConfig, partitions: int = 32) ->
 
 def images_df(spark: SparkSession, cfg: webgen.WebConfig, partitions: int = 32) -> DataFrame:
     """The payload table — exact input_hint shape, one image per universe URL."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for url in pdf["url"]:
-                iid = webgen.image_id_of(url, cfg)
-                row = imagecodec.image_row(iid, cfg.seed)
-                row["caption"] = webgen.caption_of(iid, cfg)
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
-
+    gen = row_stage(functools.partial(_image_rows, cfg), IMAGES_SCHEMA)
     return urls_df(spark, cfg, partitions).mapInPandas(gen, IMAGES_SCHEMA)
+
+
+def _image_rows(cfg: webgen.WebConfig, r) -> list[dict]:
+    """Generator row: the captioned image of universe URL ``r.url``."""
+    iid = webgen.image_id_of(r.url, cfg)
+    row = imagecodec.image_row(iid, cfg.seed)
+    row["caption"] = webgen.caption_of(iid, cfg)
+    return [row]
 

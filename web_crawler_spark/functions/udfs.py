@@ -3,9 +3,9 @@
 Everything the reference does per page with BeautifulSoup + urllib
 (``Crawler/crawler.py:398-480``) runs here as Arrow-batched stages
 (SURVEY.md §2.10): one fused robots-gate+fetch+parse ``mapInPandas`` (the
-synthetic network + parser), one canonicalization UDF, one image
-decode/validate ``mapInPandas``. No row-at-a-time
-``F.udf`` anywhere.
+synthetic network + parser), one canonicalization UDF, and ``row_stage``,
+the payload tier's one Arrow row stage (``decode_stage`` for decoders, e.g.
+``decode_validate``). No row-at-a-time ``F.udf`` anywhere.
 """
 
 from __future__ import annotations
@@ -175,39 +175,63 @@ VALIDATION_SCHEMA = T.StructType(
 )
 
 
-def decode_validate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas over images-table rows joined with crawled captions:
-    decode bytes ONCE, check the input_hint per-row invariant (pixel
-    allclose / PSNR ≥ 40 dB for lossy, phash match, caption equality) and
-    project the decoded features (channel means, brightness, 8×8 resize
-    variance) from the same pixel buffer.
+# a payload the codec cannot read: corrupt or truncated bytes (ValueError)
+# or a format with no codec in this build (NotImplementedError)
+UNDECODABLE = (ValueError, NotImplementedError)
 
-    Expects columns: image_id, bytes, w, h, fmt, caption, phash, crawled_caption.
-    """
-    for pdf in batches:
-        out = []
-        for r in pdf.itertuples(index=False):
-            rec = {
-                "image_id": r.image_id, "fmt": None, "w": None, "h": None,
-                "decode_ok": False, "psnr_db": None, "pixels_ok": False,
-                "phash_computed": None, "phash_ok": False,
-                "caption_ok": bool(r.crawled_caption == r.caption),
-                "mean_r": None, "mean_g": None, "mean_b": None,
-                "brightness": None, "thumb_var": None,
-            }
-            try:
-                px, w, h, fmt = imagecodec.decode(bytes(r.bytes))
-                rec.update(fmt=fmt, w=w, h=h, decode_ok=(w == r.w and h == r.h and fmt == r.fmt))
-                ref = imagecodec.reference_pixels(r.image_id, w, h)
-                if fmt in imagecodec.LOSSY_FMTS:
-                    p = imagecodec.psnr(px, ref)
-                    rec.update(psnr_db=None if np.isinf(p) else p, pixels_ok=bool(p >= 40.0))
-                else:
-                    rec.update(pixels_ok=bool(np.array_equal(px, ref)))
-                ph = imagecodec.phash64(px)
-                rec.update(phash_computed=ph, phash_ok=bool(ph == r.phash))
-                rec.update(imagecodec.features(px))
-            except (ValueError, NotImplementedError):
-                pass
-            out.append(rec)
-        yield pd.DataFrame(out, columns=[f.name for f in VALIDATION_SCHEMA])
+
+def row_stage(rows_of, schema: T.StructType):
+    """The payload tier's one Arrow row stage: a ``mapInPandas`` body that
+    yields, per batch, the rows (dicts or *schema*-ordered tuples) that
+    ``rows_of(row)`` returns for each input row (a namedtuple)."""
+    cols = schema.fieldNames()
+
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [out for r in pdf.itertuples(index=False) for out in rows_of(r)], columns=cols
+            )
+
+    return stage
+
+
+def decode_stage(fill, schema: T.StructType, key: str):
+    """`row_stage` with one record per row, filled in place by ``fill(row,
+    rec)`` from the null record (*key* copied, every non-null boolean False,
+    the rest None). On `UNDECODABLE` the record stays as ``fill`` left it:
+    flagged downstream, not fatal."""
+    null = {f.name: False if f.dataType == T.BooleanType() and not f.nullable else None
+            for f in schema.fields}
+
+    def rows_of(r) -> tuple[dict]:
+        rec = {**null, key: getattr(r, key)}
+        try:
+            fill(r, rec)
+        except UNDECODABLE:
+            pass
+        return (rec,)
+
+    return row_stage(rows_of, schema)
+
+
+def _validate(r, rec: dict) -> None:
+    """Image validation row: decode ONCE, check the input_hint invariant
+    (pixels allclose / PSNR >= 40 dB if lossy, phash, caption) and project
+    the decoded features from the same pixel buffer."""
+    rec["caption_ok"] = bool(r.crawled_caption == r.caption)
+    px, w, h, fmt = imagecodec.decode(bytes(r.bytes))
+    rec.update(fmt=fmt, w=w, h=h, decode_ok=(w == r.w and h == r.h and fmt == r.fmt))
+    ref = imagecodec.reference_pixels(r.image_id, w, h)
+    if fmt in imagecodec.LOSSY_FMTS:
+        p = imagecodec.psnr(px, ref)
+        rec.update(psnr_db=None if np.isinf(p) else p, pixels_ok=bool(p >= 40.0))
+    else:
+        rec.update(pixels_ok=bool(np.array_equal(px, ref)))
+    ph = imagecodec.phash64(px)
+    rec.update(phash_computed=ph, phash_ok=bool(ph == r.phash))
+    rec.update(imagecodec.features(px))
+
+
+# mapInPandas over images-table rows joined with crawled captions; expects
+# columns image_id, bytes, w, h, fmt, caption, phash, crawled_caption
+decode_validate = decode_stage(_validate, VALIDATION_SCHEMA, "image_id")

@@ -55,6 +55,8 @@ from ..analytics.multimodal import (
     IMG_HAMMING_T,
     IMG_MAX_ASPECT,
     IMG_MIN_SIDE,
+    _caption_ref,
+    _image_doc,
     _index_blocks,
     _pair_blocks,
 )
@@ -75,11 +77,9 @@ def _verdict(images: DataFrame, index: DataFrame, embeddings: DataFrame) -> Data
     two towers pre-normed once per vector, as in image_caption_align), block
     explode + static-index probe, one grouped agg back to image grain,
     reason precedence."""
-    doc_id = F.regexp_extract("image_id", r"^img-(\d+)", 1).cast("bigint")
-    ref_id = F.regexp_extract("caption", r"img-(\d+)$", 1).cast("bigint")
     sig = images.select(
         "image_id", "w", "h", "phash",
-        doc_id.alias("doc_id"), ref_id.alias("ref_id"),
+        _image_doc().alias("doc_id"), _caption_ref().alias("ref_id"),
     )
     v = _with_norm(embeddings, "vid", "vemb")
     t = _with_norm(embeddings, "tid", "temb")
